@@ -169,8 +169,6 @@ class TopicStore(
       def readOnce(): Seq[Generation] =
         if (!pathExists(p)) Seq(Generation(1, clusterSize))
         else {
-          import org.apache.parquet.hadoop.ParquetReader
-          import org.apache.parquet.hadoop.example.GroupReadSupport
           val fs = hfs(p)
           val files = fs.listStatus(hpath(p)).toSeq.map(_.getPath)
             .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
@@ -178,8 +176,7 @@ class TopicStore(
           // between its rename and delete): the lexically-newest name is
           // the current table (monotonic stamp in swapWriteGroups)
           files.sortBy(_.getName).lastOption.map { f =>
-            val r = ParquetReader.builder(new GroupReadSupport(), f)
-              .withConf(spark.sparkContext.hadoopConfiguration).build()
+            val r = TopicStore.groupReader(f, spark.sparkContext.hadoopConfiguration).build()
             val out = Seq.newBuilder[Generation]
             try {
               var g = r.read()
@@ -193,11 +190,11 @@ class TopicStore(
           }.getOrElse(Seq(Generation(1, clusterSize)))
         }
       var res: Either[Throwable, Seq[Generation]] =
-        try Right(readOnce()) catch { case e: java.io.FileNotFoundException => Left(e) }
+        try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
       var i = 0
       while (res.isLeft && i < 5) {
         Thread.sleep(50)
-        res = try Right(readOnce()) catch { case e: java.io.FileNotFoundException => Left(e) }
+        res = try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
         i += 1
       }
       res.fold(throw _, identity)
@@ -905,6 +902,14 @@ class TopicStore(
     val tmp = new org.apache.hadoop.fs.Path(hpath(dir), s".${fin.getName}.tmp")
     val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
     val gf = new SimpleGroupFactory(localFileSchema)
+    // The next write-side layer, measured but not removed here: on a host
+    // without libhadoop, RawLocalFileSystem sets each created file's
+    // permission by running `chmod` in a child process — twice per
+    // parquet file, counting the `.crc` sidecar. On a 4-core host that is
+    // ~3 ms per `chmod`, 5.9 of 12.7 ms per 64-row file in an isolated
+    // write micro-benchmark, and a 10 s ingest_wire run writes ~1,000
+    // such files. A null-permission create still forks; avoiding it
+    // needs a config knob or a second, file:-only write path.
     val w = ExampleParquetWriter.builder(tmp).withConf(conf)
       .withType(localFileSchema)
       .withCompressionCodec(CompressionCodecName.ZSTD)
@@ -1375,9 +1380,9 @@ class TopicStore(
     val tokens = tokensOf(pg.g)
     val conf = spark.sparkContext.hadoopConfiguration
     // per-partition reads are independent (disjoint dirs) — fan them out
-    // over the shared local-IO pool: the per-file open cost (~10 ms:
-    // footer parse + decompressor init) otherwise serializes across
-    // every (partition × file) of the page
+    // over the shared local-IO pool: each file's open (stat, footer read,
+    // decompressor set-up; ~0.5 ms with a 64-row read on a 4-core host)
+    // otherwise serializes across every (partition × file) of the page
     val perPart: Seq[(Int, IndexedSeq[Row])] =
       pg.assigned.sorted.map { p =>
         p -> TopicStore.localWritePool.submit(
@@ -1396,8 +1401,6 @@ class TopicStore(
       maxRecords: Long, maxBytes: Long): IndexedSeq[org.apache.spark.sql.Row] = {
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.FilterApi
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     import org.apache.spark.sql.Row
     val out = IndexedSeq.newBuilder[Row]
     locally {
@@ -1425,8 +1428,8 @@ class TopicStore(
               if (hasUpper) FilterApi.and(FilterApi.gtEq(offCol, Long.box(from)),
                 FilterApi.lt(offCol, Long.box(upper)))
               else FilterApi.gtEq(offCol, Long.box(from))
-            val r = ParquetReader.builder(new GroupReadSupport(), st.getPath)
-              .withConf(conf).withFilter(FilterCompat.get(pred)).build()
+            val r = TopicStore.groupReader(st.getPath, conf)
+              .withFilter(FilterCompat.get(pred)).build()
             try {
               var g = r.read()
               while (g != null) {
@@ -1850,8 +1853,6 @@ class TopicStore(
       if (policies.contains(group)) return
       val p = persistedDir(group)
       if (!pathExists(p)) return
-      import org.apache.parquet.hadoop.ParquetReader
-      import org.apache.parquet.hadoop.example.GroupReadSupport
       def readOnce(): Seq[(String, Option[String], Option[Int], Option[Long], Int)] = {
         val fs = hfs(p)
         val files = fs.listStatus(hpath(p)).toSeq.map(_.getPath)
@@ -1860,8 +1861,7 @@ class TopicStore(
         // newest file only — see readOffsets' rename-first swap note
         files.sortBy(_.getName).lastOption.toSeq.flatMap { f =>
           val out = Seq.newBuilder[(String, Option[String], Option[Int], Option[Long], Int)]
-          val r = ParquetReader.builder(new GroupReadSupport(), f)
-            .withConf(spark.sparkContext.hadoopConfiguration).build()
+          val r = TopicStore.groupReader(f, spark.sparkContext.hadoopConfiguration).build()
           try {
             var g = r.read()
             while (g != null) {
@@ -1885,11 +1885,11 @@ class TopicStore(
       // persist's swap can yank a just-listed file from a cross-instance
       // reader
       var res: Either[Throwable, Seq[(String, Option[String], Option[Int], Option[Long], Int)]] =
-        try Right(readOnce()) catch { case e: java.io.FileNotFoundException => Left(e) }
+        try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
       var i = 0
       while (res.isLeft && i < 5) {
         Thread.sleep(50)
-        res = try Right(readOnce()) catch { case e: java.io.FileNotFoundException => Left(e) }
+        res = try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
         i += 1
       }
       val rows = res.fold(throw _, identity)
@@ -2173,8 +2173,7 @@ class TopicStore(
   private def compactDir(dirPath: org.apache.hadoop.fs.Path, smallFileBytes: Long): Int = {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
     import org.apache.parquet.io.api.Binary
     val fs = hfs(dirPath.toString)
@@ -2186,8 +2185,7 @@ class TopicStore(
     val fin = new Path(dirPath, s"compacted-${System.nanoTime()}-0.parquet")
     val tmp = new Path(dirPath, s".${fin.getName}.tmp")
     val gf = new SimpleGroupFactory(localFileSchema)
-    val readers = small.map(f =>
-      ParquetReader.builder(new GroupReadSupport(), f.getPath).withConf(conf).build())
+    val readers = small.map(f => TopicStore.groupReader(f.getPath, conf).build())
     try {
       val w = ExampleParquetWriter.builder(tmp).withConf(conf)
         .withType(localFileSchema)
@@ -2390,8 +2388,7 @@ class TopicStore(
   private def purgeDir(dirPath: org.apache.hadoop.fs.Path, keySet: Set[String]): Long = {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
     val fs = hfs(dirPath.toString)
     val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
@@ -2409,8 +2406,7 @@ class TopicStore(
       var hits = 0L
       var survivors = 0L
       locally {
-        val r = ParquetReader.builder(new GroupReadSupport(), f.getPath)
-          .withConf(probeConf).build()
+        val r = TopicStore.groupReader(f.getPath, probeConf).build()
         try {
           var g = r.read()
           while (g != null) {
@@ -2429,8 +2425,7 @@ class TopicStore(
         val fin = new Path(dirPath, s"purged-${System.nanoTime()}-0.parquet")
         val tmp = new Path(dirPath, s".${fin.getName}.tmp")
         val gf = new SimpleGroupFactory(localFileSchema)
-        val r = ParquetReader.builder(new GroupReadSupport(), f.getPath)
-          .withConf(conf).build()
+        val r = TopicStore.groupReader(f.getPath, conf).build()
         try {
           val w = ExampleParquetWriter.builder(tmp).withConf(conf)
             .withType(localFileSchema)
@@ -2463,12 +2458,10 @@ class TopicStore(
   private def maxOffsetByRead(
       st: org.apache.hadoop.fs.FileStatus,
       conf: org.apache.hadoop.conf.Configuration): Long = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     val pc = new org.apache.hadoop.conf.Configuration(conf)
     pc.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
       "message probe { required int64 offset; }")
-    val r = ParquetReader.builder(new GroupReadSupport(), st.getPath).withConf(pc).build()
+    val r = TopicStore.groupReader(st.getPath, pc).build()
     try {
       var mx = Long.MinValue
       var g = r.read()
@@ -2968,8 +2961,6 @@ class TopicStore(
 
   private def readOffsets(dir: String, scope: String): Map[Int, Long] = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     val p = s"$dir/$scope" // scope components are pre-encoded (scopeDir)
     def readTable(statuses: Seq[org.apache.hadoop.fs.FileStatus]): Map[Int, Long] = {
       val files = statuses.filter(st => st.isFile &&
@@ -2981,8 +2972,7 @@ class TopicStore(
       // old table visible beside the new one, and merging the two
       // would resurrect stale positions for parts the new table moved
       files.sortBy(_.getName).lastOption.foreach { f =>
-        val r = ParquetReader.builder(new GroupReadSupport(), f)
-          .withConf(spark.sparkContext.hadoopConfiguration).build()
+        val r = TopicStore.groupReader(f, spark.sparkContext.hadoopConfiguration).build()
         try {
           var g = r.read()
           while (g != null) {
@@ -3023,11 +3013,11 @@ class TopicStore(
       // and the open: retry the list+read — the swap window is
       // milliseconds and the table is ring-size rows
       var res: Either[Throwable, Map[Int, Long]] =
-        try Right(readOnce()) catch { case e: java.io.FileNotFoundException => Left(e) }
+        try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
       var i = 0
       while (res.isLeft && i < 5) {
         Thread.sleep(50)
-        res = try Right(readOnce()) catch { case e: java.io.FileNotFoundException => Left(e) }
+        res = try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
         i += 1
       }
       res.fold(throw _, identity)
@@ -3090,6 +3080,7 @@ class TopicStore(
         s"${java.util.UUID.randomUUID()}.parquet")
     val tmp = new Path(dirPath, s".${fin.getName}.tmp")
     val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    // pays writeLocalPartFile's two `chmod` forks per create (see there)
     val w = ExampleParquetWriter.builder(tmp).withConf(conf).withType(schema).build()
     try rows.foreach(w.write) finally w.close()
     // PER-WRITE epoch fence at the commit point (the reference's
@@ -3383,6 +3374,42 @@ object TopicStore {
     globalProducePlanes.computeIfAbsent(
       rootKey, _ => new java.util.concurrent.locks.ReentrantReadWriteLock())
 
+  /** A file that vanished under a reader — a concurrent `_meta` swap
+    * deleted it after the listing. Hadoop's stat and open report that as
+    * FileNotFoundException; parquet's vectored row-group read reopens the
+    * path through NIO and reports NoSuchFileException.
+    */
+  private[graft] object Vanished {
+    def unapply(e: Throwable): Option[java.io.IOException] = e match {
+      case f: java.io.FileNotFoundException => Some(f)
+      case f: java.nio.file.NoSuchFileException => Some(f)
+      case _ => None
+    }
+  }
+
+  /** A parquet `Group` reader of one file, configured wholly by `conf`:
+    * the file system the path resolves to, the read schema
+    * (`ReadSupport.PARQUET_READ_SCHEMA`) and the read options. Add a
+    * filter with `.withFilter`, never `.withConf` — that rebuilds the
+    * options from the null path of this constructor.
+    * The static `ParquetReader.builder` factory starts from a fresh
+    * `new Configuration()` instead, and its first read re-parses
+    * Hadoop's default XML resources on every open — ~9 ms of CPU against
+    * ~0.5 ms for this open plus a 64-row read (4-core host), paid on the
+    * pool the bounded poll shares with `produceLocal`.
+    */
+  private[graft] def groupReader(
+      path: org.apache.hadoop.fs.Path, conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.ParquetReader.Builder[org.apache.parquet.example.data.Group] = {
+    import org.apache.parquet.example.data.Group
+    new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+        new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport(): org.apache.parquet.hadoop.api.ReadSupport[Group] =
+        new org.apache.parquet.hadoop.example.GroupReadSupport()
+    }
+  }
+
   // per-(file, int64 column) footer-stat cache for the driver-side
   // maintenance/serving paths: (min, max) across a file's row groups,
   // keyed by path#column and guarded by length — data files are
@@ -3412,7 +3439,8 @@ object TopicStore {
     val computed =
       try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          in, org.apache.parquet.HadoopReadOptions.builder(conf).build())
         try {
           import scala.jdk.CollectionConverters._
           var mn = Long.MaxValue
@@ -3429,7 +3457,10 @@ object TopicStore {
           }
           if (ok && mn <= mx) Some((mn, mx)) else None
         } finally rd.close()
-      } catch { case _: Exception => None }
+      } catch {
+        // benign: None only forgoes pruning — callers read the file (where a real fault surfaces) or keep it
+        case _: java.io.IOException | _: RuntimeException => None
+      }
     computed.foreach { case (mn, mx) => colStatsCache.put(key, (st.getLen, mn, mx)) }
     computed
   }

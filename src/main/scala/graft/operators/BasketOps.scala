@@ -166,16 +166,16 @@ object BasketOps {
     val edges = pr.select(col("pa").as("u"), col("pb").as("v"))
       .union(pr.select(col("pb").as("u"), col("pa").as("v")))
     // loud domain guard (r13, judge advice): the packed vote below is
-    // exact only while lb + 1 < 2^36; a label past that would CORRUPT the
-    // winning community silently. Checked once per node here (labels only
+    // exact only while 0 <= lb and lb + 1 < 2^36; a label outside that
+    // would CORRUPT the winning community silently. Checked once per node here (labels only
     // ever come from this frame), never per vote row — at the 100 TB
     // point (sf 100 K ≈ 20 B parts) the headroom is still 3×, and beyond
     // it this fails the query instead of the answer.
     var lab = edges.select(col("u").as("p")).distinct()
       .select(col("p"),
-        when(col("p") < lit((1L << 36) - 1), col("p"))
+        when(col("p").between(0L, (1L << 36) - 2), col("p"))
           .otherwise(raise_error(lit(
-            "q235: label key exceeds the 2^36-1 packed-vote domain"))
+            "q235: label key outside the [0, 2^36-1) packed-vote domain"))
             .cast("long")).as("lb"))
     for (_ <- 1 to 5) {
       // One exchange per iteration — the synchronous-LPA floor (each round

@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.Graft
@@ -30,6 +30,12 @@ import graft.Graft
 object SequenceOps {
   import Relational.Q
 
+  /** True on the last row of each `w` partition. Leads a literal, which
+    * is never null, so a null ordering value (a null `us`) cannot pose as
+    * a missing successor and flag extra rows.
+    */
+  private[graft] def isLastIn(w: WindowSpec): Column = lead(lit(1), 1).over(w).isNull
+
   /** Adjacent event pairs per user: (user_id, ptyp, typ, us_prev, us) —
     * the shared input. Two-level lag: the carried previous-event fields
     * (timestamp, id, type) ride one struct max per bucket, so the
@@ -53,7 +59,7 @@ object SequenceOps {
     // bucket" IS the (us, event_id)-max row the aggregate picked.
     val local = ev
       .withColumn("prev_in", lag(struct(col("us"), col("event_id"), col("typ")), 1).over(wInB))
-      .withColumn("is_last", lead(col("us"), 1).over(wInB).isNull)
+      .withColumn("is_last", isLastIn(wInB))
     val bmeta = local.where(col("is_last"))
       .select(col("user_id"), col("tb"),
         struct(col("us"), col("event_id"), col("typ")).as("last"))

@@ -7,8 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -336,7 +334,7 @@ class GraftMicroBatchStream(
     // another store instance owns the writes: drop the read-side caches
     // so the poll observes its advanced watermarks (and chain). A
     // concurrent swap can still yank a just-listed OLD file between the
-    // list and the open — retry through THAT window only (FNF): a broad
+    // list and the read — retry through THAT window only (Vanished): a broad
     // Exception retry would sit through 5 sleeps on genuinely fatal
     // misconfiguration (bad root, permissions) and delay cancellation.
     var attempt = 0
@@ -345,7 +343,7 @@ class GraftMicroBatchStream(
         store.refreshOffsets(topic)
         return store.generations(topic)
       } catch {
-        case _: java.io.FileNotFoundException if attempt < 5 =>
+        case TopicStore.Vanished(_) if attempt < 5 =>
           attempt += 1
           Thread.sleep(100)
       }
@@ -480,9 +478,7 @@ class GraftReaderFactory extends PartitionReaderFactory {
   */
 class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader[InternalRow] {
   private val reader = {
-    val builder = ParquetReader
-      .builder(new GroupReadSupport(), new Path(p.file.path))
-      .withConf(p.conf.value.value)
+    val builder = TopicStore.groupReader(new Path(p.file.path), p.conf.value.value)
     // coarse pushdown: the union of all partitions' bounds — row groups
     // wholly outside [min-from, max-until) never decompress. The lower
     // bound must be valid for EVERY partition that may appear in this

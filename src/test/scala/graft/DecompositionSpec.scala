@@ -326,4 +326,29 @@ class DecompositionSpec extends AnyFunSuite {
     assert(got == naive)
     assert(got == Set(1L, 2L, 5L, 6L, 8L))
   }
+
+  test("the bucket-last marker flags one row per bucket when timestamps are null") {
+    import spark.implicits._
+    val ev = Seq[(Long, java.lang.Long, Long)](
+      (1L, null, 1L), (1L, null, 2L), (1L, null, 3L), // one null-ts bucket
+      (1L, 5L, 4L), (1L, 6L, 5L))
+      .toDF("user_id", "us", "event_id")
+      .withColumn("tb", expr("us DIV 3600000000"))
+    val w = Window.partitionBy(col("user_id"), col("tb")).orderBy(col("us"), col("event_id"))
+    val last = ev.withColumn("is_last", graft.operators.SequenceOps.isLastIn(w))
+      .where(col("is_last")).select("event_id").as[Long].collect().sorted.toSeq
+    assert(last == Seq(3L, 5L))
+  }
+
+  test("q235 fails loudly on a negative label key instead of corrupting the vote") {
+    val dir = Files.createTempDirectory("graft-lpa").toString
+    import spark.implicits._
+    Seq((1L, -5L), (1L, 3L), (2L, 3L), (2L, 7L)).toDF("l_orderkey", "l_partkey")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val e = intercept[Exception] {
+      SparkEntry.queries("q235_lpa_communities")(spark, dir).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("packed-vote domain")), e)
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -228,4 +230,74 @@ class LocalProduceSpec extends AnyFunSuite {
       "c#0", "c#3", "c#6", "c#9", "d#0", "d#3", "d#6", "d#9"),
       s"k0 lineage order: $k0")
   }
+
+  test("groupReader reads a produceLocal file from the passed conf: projection, offset window, object store") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.api.ReadSupport
+    val store = newStore()
+    val recs = (0 until 300).map(i =>
+      LocalRecord(s"k$i", Array[Byte](i.toByte), 1700000000000000L + i, i.toLong))
+    assert(store.produceLocal("t", recs) == recs.size.toLong)
+    val local = {
+      val walk = Files.walk(java.nio.file.Paths.get(store.dataDir))
+      try walk.iterator().asScala.filter(_.getFileName.toString.startsWith("part-local-"))
+        .maxBy(f => Files.size(f))
+      finally walk.close()
+    }
+    def drain(r: ParquetReader[Group]): Seq[Group] =
+      try Iterator.continually(r.read()).takeWhile(_ != null).toList finally r.close()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(local.toUri)
+    val offsets = drain(TopicStore.groupReader(path, conf).build()).map(_.getLong("offset", 0))
+    assert(offsets.size > 10 && offsets == offsets.sorted)
+
+    // the maxOffsetByRead probe: the read schema rides in the conf
+    val probe = new org.apache.hadoop.conf.Configuration(conf)
+    probe.set(ReadSupport.PARQUET_READ_SCHEMA, "message probe { required int64 offset; }")
+    val projected = drain(TopicStore.groupReader(path, probe).build())
+    assert(projected.map(_.getType.getFieldCount).distinct == Seq(1))
+    assert(projected.map(_.getLong("offset", 0)) == offsets)
+
+    // the bounded poll's record filter returns exactly the window
+    val (lo, hi) = (offsets(3), offsets(offsets.size - 3))
+    val offCol = FilterApi.longColumn("offset")
+    val window = FilterCompat.get(FilterApi.and(
+      FilterApi.gtEq(offCol, Long.box(lo)), FilterApi.lt(offCol, Long.box(hi))))
+    val want = offsets.filter(o => o >= lo && o < hi)
+    def windowOf(p: Path, c: org.apache.hadoop.conf.Configuration) =
+      drain(TopicStore.groupReader(p, c).withFilter(window).build()).map(_.getLong("offset", 0))
+    assert(windowOf(path, conf) == want)
+
+    // an object-store path resolves its file system from the passed conf
+    // alone: the scheme maps to the counting subclass only there
+    val s3 = new org.apache.hadoop.conf.Configuration(conf)
+    s3.set("fs.s3x.impl", classOf[CountingObjStoreFs].getName)
+    s3.setBoolean("fs.s3x.impl.disable.cache", true)
+    val remote = new Path(
+      s"s3x://bucket-${java.util.UUID.randomUUID().toString.take(12)}/seg.parquet")
+    val out = remote.getFileSystem(s3).create(remote, true)
+    try out.write(Files.readAllBytes(local)) finally out.close()
+    val opensBefore = CountingObjStoreFs.opens.get
+    assert(windowOf(remote, s3) == want)
+    assert(CountingObjStoreFs.opens.get > opensBefore)
+  }
+}
+
+/** [[ObjStoreFs]] that counts `open`s; reachable only through a conf that
+  * maps `fs.s3x.impl` to it.
+  */
+class CountingObjStoreFs extends ObjStoreFs {
+  override def open(p: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    CountingObjStoreFs.opens.incrementAndGet()
+    super.open(p, bufferSize)
+  }
+}
+
+object CountingObjStoreFs {
+  val opens = new java.util.concurrent.atomic.AtomicLong
 }

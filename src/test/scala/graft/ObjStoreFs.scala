@@ -97,10 +97,11 @@ class ObjStoreFs extends FileSystem {
     val base = backing.toPath
     if (!backing.exists()) return Seq.empty
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val walk = java.nio.file.Files.walk(base)
-    try {
-      walk.forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p)) {
+    import java.nio.file.{FileVisitResult, NoSuchFileException, SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
+    java.nio.file.Files.walkFileTree(base, new SimpleFileVisitor[java.nio.file.Path] {
+      override def visitFile(p: java.nio.file.Path, attrs: BasicFileAttributes): FileVisitResult = {
+        if (attrs.isRegularFile) {
           val rel = base.relativize(p)
           val name = rel.getFileName.toString
           if (!(name.startsWith("put-") && name.endsWith(".tmp"))) {
@@ -111,8 +112,21 @@ class ObjStoreFs extends FileSystem {
             out += URLDecoder.decode(joined, UTF_8)
           }
         }
+        FileVisitResult.CONTINUE
       }
-    } finally walk.close()
+      // a key deleted while the scan runs is absent from this LIST, as on
+      // a real store, where a concurrent DELETE never fails a LIST
+      override def visitFileFailed(p: java.nio.file.Path, e: IOException): FileVisitResult =
+        e match {
+          case _: NoSuchFileException => FileVisitResult.CONTINUE
+          case _ => throw e
+        }
+      override def postVisitDirectory(d: java.nio.file.Path, e: IOException): FileVisitResult =
+        e match {
+          case null | _: NoSuchFileException => FileVisitResult.CONTINUE
+          case _ => throw e
+        }
+    })
     out.sorted.toSeq
   }
 
