@@ -391,7 +391,8 @@ object Bench {
     * The third number is the HORIZONTAL plane: the same REST client
     * shape against a 4-broker [[graft.serving.BrokerGroup]], whose
     * per-broker coalescers flush concurrently over disjoint ring
-    * partitions (TopicStore.produceConcurrent) — the reference scales
+    * partitions (TopicStore.produceLocal on the shared produce plane) —
+    * the reference scales
     * produce linearly with brokers, and this is the repo's analog of
     * adding brokers. Returns (rest msgs/s, binary msgs/s,
     * 4-broker-group rest msgs/s, bounded-page poll-drain msgs/s).

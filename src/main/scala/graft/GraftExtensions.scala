@@ -2,84 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{CharBigramPhash, CosineSimilarity, GramBuckets, L2Sq, MinHashSig, Murmur3Token, PosGramHashes, RingPartitionsTable, ShingleHashes, SimHashSig, TopicLagTable, TopicListTable, TopicOffsetsForTimeTable, TopicRecordsTable, TopicStatsTable}
 
 /** Standard extension entry point: makes the graft SQL functions available
   * in every session via
   * `--conf spark.sql.extensions=graft.GraftExtensions` — no code changes
-  * needed in the consuming application.
+  * needed in the consuming application. Injects the same function table
+  * `functions.registerAll` registers.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("murmur3_token"),
-      new ExpressionInfo(classOf[Murmur3Token].getName, "murmur3_token"),
-      (exprs: Seq[Expression]) => Murmur3Token(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("l2_sq"),
-      new ExpressionInfo(classOf[L2Sq].getName, "l2_sq"),
-      (exprs: Seq[Expression]) => L2Sq(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue())))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("pos_gram_hashes"),
-      new ExpressionInfo(classOf[PosGramHashes].getName, "pos_gram_hashes"),
-      (exprs: Seq[Expression]) => PosGramHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-      (exprs: Seq[Expression]) => SimHashSig(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("gram_buckets"),
-      new ExpressionInfo(classOf[GramBuckets].getName, "gram_buckets"),
-      (exprs: Seq[Expression]) => GramBuckets(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("char_bigram_phash"),
-      new ExpressionInfo(classOf[CharBigramPhash].getName, "char_bigram_phash"),
-      (exprs: Seq[Expression]) => CharBigramPhash(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectTableFunction((
-      FunctionIdentifier("ring_partitions"),
-      new ExpressionInfo(RingPartitionsTable.getClass.getName, "ring_partitions"),
-      (exprs: Seq[Expression]) => RingPartitionsTable.plan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("topic_records"),
-      new ExpressionInfo(TopicRecordsTable.getClass.getName, "topic_records"),
-      (exprs: Seq[Expression]) => TopicRecordsTable.plan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("topic_list"),
-      new ExpressionInfo(TopicListTable.getClass.getName, "topic_list"),
-      (exprs: Seq[Expression]) => TopicListTable.plan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("topic_lag"),
-      new ExpressionInfo(TopicLagTable.getClass.getName, "topic_lag"),
-      (exprs: Seq[Expression]) => TopicLagTable.plan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("topic_offsets_for_time"),
-      new ExpressionInfo(TopicOffsetsForTimeTable.getClass.getName,
-        "topic_offsets_for_time"),
-      (exprs: Seq[Expression]) => TopicOffsetsForTimeTable.plan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("topic_stats"),
-      new ExpressionInfo(TopicStatsTable.getClass.getName, "topic_stats"),
-      (exprs: Seq[Expression]) => TopicStatsTable.plan(exprs)))
+    functions.scalarFunctions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), functions.infoOf(name, cls), builder))
+    }
+    functions.tableFunctions.foreach { case (name, cls, builder) =>
+      ext.injectTableFunction((FunctionIdentifier(name), functions.infoOf(name, cls), builder))
+    }
   }
 }

@@ -65,9 +65,9 @@ final class PlaneDrainingException(msg: String) extends IllegalStateException(ms
   *    partition producers and with each other; exclusive with a root
   *    owner and with a FULL consumer owner (both ways).
   *
-  *  Whatever no shape covers — rescale, maintenance, the stream ledger,
-  *  the exclusive-plane produce — stays with a root-lease owner and
-  *  fails loudly elsewhere ([[assertAuthority]]).
+  *  Whatever no shape covers — rescale, maintenance, the stream ledger —
+  *  stays with a root-lease owner and fails loudly elsewhere
+  *  ([[assertAuthority]]).
   *
   * COORDINATED DRAIN ([[requestDrain]]/[[clearDrain]]): a maintenance
   * coordinator asks every scoped claimant to flush-and-release without
@@ -137,8 +137,8 @@ object PlaneLease {
     * only [[ConsumerAuthority]].
     */
   sealed trait Authority
-  /** Maintenance, rescale, generation flips, the stream ledger, the
-    * exclusive-plane produce — root-lease holders only.
+  /** Maintenance, rescale, generation flips, the stream ledger —
+    * root-lease holders only.
     */
   case object RootAuthority extends Authority
   /** Producing to (and advancing the watermarks of) exactly `parts`. */
@@ -923,8 +923,8 @@ object PlaneLease {
             throw new PlaneLeaseHeldException(
               s"this process holds a PARTITION-scoped lease (${specOf(owned)}) for " +
                 s"${h.root} — root-authority operations (maintenance, rescale, " +
-                "the stream ledger, exclusive-plane produce) and the consumer " +
-                "plane (registry, group commits) live in other processes")
+                "the stream ledger) and the consumer plane (registry, group " +
+                "commits) live in other processes")
         }
     }
   }

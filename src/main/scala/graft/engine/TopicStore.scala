@@ -94,16 +94,17 @@ class TopicStore(
     * narrow window between the two replays exactly that one batch
     * (at-least-once — the engine's delivery contract), every other crash
     * point replays nothing. The ledger reuses the offsets-table swap, so
-    * a torn marker write is impossible.
+    * a torn marker write is impossible. Returns the topic's cumulative
+    * high-watermark sum after the batch, or 0 for a skipped replay.
     */
   def produceOnce(topic: String, records: DataFrame, streamId: String, batchId: Long): Long = {
     ensurePlaneOwnedRoot() // the ledger swap is root-authority: fail BEFORE the data write
     val scope = s"${scopeDir(streamId)}/${scopeDir(topic)}"
     val done = readOffsets(streamMeta, scope).getOrElse(0, Long.MinValue)
     if (batchId <= done) return 0L
-    val n = produce(topic, records)
+    produce(topic, records)
     writeOffsets(streamMeta, scope, Map(0 -> batchId))
-    n
+    producerOffsets(topic).values.sum
   }
 
   // ---------------------------------------------------------- generations
@@ -226,7 +227,8 @@ class TopicStore(
   // stale the moment another instance advanced the disk state — the two
   // producers then assigned DUPLICATE (part, offset) pairs (caught by
   // ChaosSpec's DSv2-writer thread). Shared caches + the global
-  // produceLock restore the single-writer view across instances.
+  // produce plane and part monitors restore the single-writer view
+  // across instances.
   // (Instances over one root must agree on the ring-size default, i.e.
   // one deployment configuration per root — same assumption the on-disk
   // layout already makes.)
@@ -256,33 +258,19 @@ class TopicStore(
 
   // ------------------------------------------------------------- produce
 
-  // ONE produce at a time per ROOT: produce is a read-modify-write of the
-  // per-topic watermark, and concurrent partitioned appends to the same
-  // dataDir can also collide in the Hadoop committer's shared _temporary
-  // staging. The REST/binary channels already serialize through one
-  // coalescer; this lock extends the guarantee to ANY composition
-  // (streaming ingest via foreachBatch concurrent with REST produce,
-  // direct API callers) instead of relying on caller discipline. Like the
-  // topic RW lock below, it is JVM-GLOBAL keyed by the normalized root —
-  // the DSv2 writer builds its own TopicStore over the same root, and a
-  // per-instance lock would let that produce interleave with the serving
-  // store's rescale copy-then-flip (appending into the superseded
-  // generation after the copy's listing resolved = silent loss of acked
-  // records, the cross-instance twin of the intra-instance race the
-  // pinned-generation produce already closes).
-  private lazy val produceLock: Object = TopicStore.produceLockFor(lockRootKey)
-
   // The produce PLANE (horizontal ingest, the reference's N-broker produce
   // path `internal/discovery/discoverer_client_service.go:30-124`): every
-  // operation that needs the old single-writer view — produce, rescale's
-  // generation flip — holds the plane EXCLUSIVELY (write mode), while
-  // `produceConcurrent` holds it SHARED (read mode) plus per-ring-partition
-  // monitors for exactly the partitions its batch touches. Batches over
-  // disjoint partition sets then run their Spark jobs concurrently — the
-  // scale story of the reference's brokers, each of which owns disjoint
-  // token ranges and assigns offsets for them without coordination.
-  // JVM-global per root, like produceLock. Lock order (JVM-wide):
-  // produceLock -> plane -> part monitors -> watermark-merge scope ->
+  // produce holds it SHARED (read mode) plus per-ring-partition monitors
+  // for exactly the partitions its batch touches, so batches over
+  // disjoint partition sets run concurrently — the scale story of the
+  // reference's brokers, each of which owns disjoint token ranges and
+  // assigns offsets for them without coordination. Rescale's generation
+  // flip holds it EXCLUSIVELY (write mode). Like the topic RW lock below,
+  // it is JVM-GLOBAL keyed by the normalized root: the DSv2 writer builds
+  // its own TopicStore over the same root, and a per-instance plane would
+  // let that produce interleave with the serving store's flip (appending
+  // into the superseded generation = silent loss of acked records). Lock
+  // order (JVM-wide): plane -> part monitors -> watermark-merge scope ->
   // topic RW lock.
   private lazy val producePlane = TopicStore.producePlaneFor(lockRootKey)
 
@@ -309,8 +297,8 @@ class TopicStore(
   // claim (BrokerGroup's ShardRouter computes exactly this routing), its
   // watermarks land in a per-claim LANE table (writeProducerOffsets),
   // and every root-authority path — maintenance, rescale, registry,
-  // group commits, the stream ledger, exclusive-plane produce — fails
-  // loudly, staying with a root-lease owner.
+  // group commits, the stream ledger — fails loudly, staying with a
+  // root-lease owner.
   private lazy val planeLeaseTtlMs: Long =
     spark.conf.getOption("spark.graft.planeLeaseTtlMs").map(_.toLong)
       .getOrElse(PlaneLease.DefaultTtlMs)
@@ -387,8 +375,7 @@ class TopicStore(
   }
 
   /** Root-authority acquisition: maintenance, rescale, the stream
-    * ledger, exclusive-plane produce — loud from a partition-scoped or
-    * consumer-plane process.
+    * ledger — loud from a partition-scoped or consumer-plane process.
     */
   private def ensurePlaneOwnedRoot(): Unit = {
     ensurePlaneOwned()
@@ -443,36 +430,51 @@ class TopicStore(
   }
 
   /** Append records (columns: key string, value binary, timestamp) to a
-    * topic. One shuffle on the ring partition; offsets are contiguous per
-    * partition continuing from the previous produce. Empty/null keys get
-    * hash-spread over all partitions (the reference round-robins keyless
-    * records — even spread, no order guarantee; we use a value hash, which
-    * is deterministic and shuffle-free).
+    * topic — the one DataFrame produce. One shuffle on the ring
+    * partition; offsets are contiguous per partition continuing from the
+    * previous produce. Empty/null keys get hash-spread over all
+    * partitions (the reference round-robins keyless records — even
+    * spread, no order guarantee; we use a value hash, which is
+    * deterministic and shuffle-free).
+    *
+    * Concurrent calls whose batches touch DISJOINT ring partitions run
+    * their Spark jobs in parallel. Correctness never depends on the
+    * caller's routing: the lock set is derived from the partitions the
+    * batch ACTUALLY hashes to, under the plane's shared lock, so the
+    * generation cannot flip mid-produce — the reference's coalescer
+    * re-checks the generation inside its serialization point
+    * (`coalescer.go:93-106`) for the same reason. A produce racing a
+    * rescale lands wholly under the generation it read (still live in the
+    * chain) or wholly under the new one. [[graft.serving.BrokerGroup]]
+    * routes requests so concurrent flushes are partition-disjoint; a
+    * misprediction only widens the lock set and costs concurrency, never
+    * duplicates an offset. The data lands through [[stageCommit]];
+    * watermarks merge per partition, and the crash window between
+    * data-in-place and watermark-advance is the at-least-once window the
+    * reconcile scan heals on the next cold start.
+    *
+    * The new watermarks must count exactly the rows the write wrote. A
+    * deterministic plan (every produce source in the engine: staged
+    * batches, foreachBatch micro-batches, parquet scans — file sources
+    * pin their listing at read time) counts the same rows it writes, so a
+    * map-side-combined count job precedes the write. A plan whose rows
+    * depend on execution (sample(), rand(), uuid(), limit) is persisted
+    * first, so the count and the write read the same pinned blocks.
+    * (Rejected, measured on the 2M-msg ingest bench: observe() metrics
+    * per ring partition halve produce throughput — the metrics node
+    * splits the write's codegen span; persisting every batch costs more
+    * than the recompute it saves.) Returns the number of records this
+    * batch wrote.
     */
   def produce(topic: String, records: DataFrame): Long =
-    // the generation is read UNDER produceLock — the reference's
-    // coalescer re-checks the generation inside its serialization point
-    // (`coalescer.go:93-106`) for the same reason: a produce that
-    // resolved the generation before a concurrent rescale flipped the
-    // pointer would otherwise write into the superseded generation,
-    // stranding its records the moment the flip lands (caught by
-    // EngineSpec "produce racing a rescale"). produceLock is reentrant,
-    // so produceInto's own acquisition nests freely.
-    //
-    // A PARTITION-scoped process routes through the staged concurrent
-    // plane instead: produceInto's direct dynamic-partition append shares
-    // the Hadoop committer's `_temporary` staging with any concurrent
-    // process's append, so cross-process disjoint-partition writes must
-    // take stageCommit's private staging (and the lane watermarks).
-    if (planeLeasePartitions.isDefined) produceConcurrent(topic, records)
-    else produceLock.synchronized { produceInto(topic, records, generation(topic)) }
+    if (deterministicPlan(records)) stagedProduce(topic, records)
+    else {
+      val pinned = records.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try stagedProduce(topic, pinned) finally { pinned.unpersist(); () }
+    }
 
-  /** Produce into an EXPLICIT generation — `produce` pins the current one
-    * under produceLock, so a produce racing a rescale lands wholly under
-    * the generation it read (still live in the chain) or wholly under
-    * the new one, never in between.
-    */
-  /** Ring assignment shared by both produce planes: __seq normalization,
+  /** Ring assignment of the Spark produce (produceLocal evaluates the
+    * same functions driver-side, `localHash`): __seq normalization,
     * token hash (murmur3 for keyed records, value xxhash64 spread for
     * keyless), ring partition ordinal, (token, range) addressing.
     */
@@ -517,7 +519,7 @@ class TopicStore(
   }
 
   /** True when the plan can be counted and then re-executed for the write
-    * with identical rows — see the counting discussion in `produceInto`.
+    * with identical rows — see the counting discussion in [[produce]].
     * Nondeterminism hides in OPERATORS as well as expressions: Sample /
     * Limit / Deduplicate pick a subset that depends on execution order
     * (shuffle fetch order varies between jobs), with no nondeterministic
@@ -531,172 +533,46 @@ class TopicStore(
         p.expressions.exists(e => !e.deterministic)
     }.isEmpty
 
-  private def produceInto(topic: String, records: DataFrame, g: Generation): Long = {
-    ensurePlaneOwned()
-    // the exclusive plane's direct append + whole-table watermark swap
-    // are root-authority: a partition-scoped or consumer-plane process
-    // never takes them
-    PlaneLease.assertAuthority(lockRootKey, PlaneLease.RootAuthority)
-    inServingPool { produceLock.synchronized { exclusivePlane {
-    val bases: Map[Int, Long] = producerOffsetsFor(topic, g)
-    val keyed = ringAssigned(records, g)
-    val withOffsets = offsetsAssigned(keyed, topic, g, bases)
-
-    // New high watermarks must derive from the rows the write itself wrote
-    // (max(offset)+1 == base + count per partition): a separate count job
-    // would re-execute the input plan, and a nondeterministic input
-    // (sample(), uuid(), a racy source) can count rows that differ from the
-    // written rows — silently drifting the watermark and breaking offset
-    // contiguity. Deriving from a post-write topic-dir listing is out too:
-    // file listing is O(files in topic), the throughput ceiling at 100 TB
-    // of small produce batches. So: materialize the batch once (the cache
-    // sits AFTER the shuffle + offset window, so the count pins the rows
-    // and the write replays cached blocks instead of re-running the
-    // shuffle), count per partition off the cache, write from the cache.
-    // (An observe()/CollectMetrics accumulator on the write was measured
-    // ~2x slower end-to-end: one metric expression per ring partition
-    // evaluates per-row and the CollectMetrics node splits the write's
-    // whole-stage-codegen span.)
-    def doWrite(df: DataFrame): Unit = df.write
-      .mode(SaveMode.Append)
-      .partitionBy("topic", "token", "range", "version")
-      .parquet(dataDir)
-    // A DETERMINISTIC plan (every produce source in the engine: staged
-    // REST/binary batches, foreachBatch micro-batches, parquet scans —
-    // file sources pin their file listing at read time) counts the same
-    // rows the write writes, so the cheap path is a pre-window partial
-    // aggregation (map-side combined, no window sort, tiny shuffle) plus
-    // the direct write. A plan carrying nondeterministic expressions
-    // (sample(), rand(), uuid()) could count rows that differ from the
-    // written rows — those pay one materialization so count and write
-    // read the same pinned blocks. (Rejected alternatives, measured on
-    // the 2M-msg ingest bench: observe()/CollectMetrics per-ring-partition
-    // metrics halve produce throughput — the metrics node splits the
-    // write's codegen span; unconditional persist is worse still — the
-    // columnar cache build costs more than the recompute it saves.)
-    val deterministic = deterministicPlan(withOffsets)
-    // count BEFORE write in both branches: an empty batch (streaming
-    // recovery replay, fully-filtered source) then skips the shuffle +
-    // dynamic-partition write job entirely — one cheap map-side-combined
-    // count job is the whole cost of an empty produce
-    val counts: Map[Int, Long] =
-      if (deterministic) {
-        val c = keyed.groupBy(col("part")).agg(count(lit(1)).as("n"))
-          .as[(Int, Long)].collect().toMap
-        if (c.nonEmpty) doWrite(withOffsets)
-        c
-      } else {
-        withOffsets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val c = withOffsets.groupBy(col("part")).agg(count(lit(1)).as("n"))
-            .as[(Int, Long)].collect().toMap
-          if (c.nonEmpty) doWrite(withOffsets)
-          c
-        } finally { withOffsets.unpersist(); () }
-      }
-
-    val merged = bases ++ counts.map { case (p, n) => p -> (bases.getOrElse(p, 0L) + n) }
-    // empty batch: nothing written, watermarks unchanged — skip the
-    // offsets rewrite (streaming ingest may deliver empty micro-batches)
-    if (counts.nonEmpty)
-      writeProducerOffsets(producerScopeFor(topic, g), merged, counts.keySet)
-    merged.values.sum
-  } } } }
-
-  /** Horizontal-plane produce: the same contract as [[produce]] (per-key
-    * total order, contiguous per-partition offsets, durable before
-    * return), but concurrent calls whose batches touch DISJOINT ring
-    * partitions run their Spark jobs in parallel instead of serializing
-    * on the root-wide produce lock. This is the ingest-scale analog of
-    * the reference's N-broker produce plane: each broker owns disjoint
-    * token ranges and assigns their offsets without coordination
-    * (`internal/discovery/discoverer_client_service.go:30-124`, one
-    * binary/HTTP server per broker), so produce throughput scales with
-    * brokers. [[graft.serving.BrokerGroup]] is the serving front that
-    * routes requests so concurrent flushes are partition-disjoint.
-    *
-    * Correctness never depends on the caller's routing: the lock set is
-    * derived from the partitions the batch ACTUALLY hashes to (under the
-    * plane's shared lock, so the generation cannot flip mid-produce), and
-    * per-partition monitors are acquired in ascending order. A router
-    * misprediction — e.g. racing a rescale — only widens the lock set and
-    * costs concurrency, never duplicates an offset. Exclusive-plane
-    * operations (plain [[produce]], the DSv2 writer, rescale's flip) are
-    * fully excluded while any concurrent produce is in flight, and vice
-    * versa.
-    *
-    * The data write lands in a private staging directory and is then
-    * renamed file-by-file into the log — concurrent direct appends to one
-    * directory would collide in the Hadoop committer's shared
-    * `_temporary` staging (one job's cleanup deletes the other's task
-    * files). Each produce writes at most ONE file per ring partition, so
-    * per-partition visibility stays atomic, exactly like the direct
-    * append. Watermarks merge per-partition under a scoped lock; the
-    * crash window between data-in-place and watermark-advance is the same
-    * at-least-once window the exclusive path documents (healed by the
-    * reconcile scan on the next cold start).
-    *
-    * Plans that cannot be counted and re-executed identically
-    * (nondeterministic sources — never the case for the serving
-    * coalescers' driver-staged batches) fall back to the exclusive path.
-    * Returns the number of records written by THIS batch.
-    */
-  def produceConcurrent(topic: String, records: DataFrame): Long = {
-    if (!deterministicPlan(records)) {
-      // the exclusive-path fallback re-executes the plan for count and
-      // write; a partition-scoped process has no exclusive plane, so a
-      // nondeterministic source is a contract violation there (loud)
-      if (planeLeasePartitions.isDefined)
-        throw new IllegalStateException(
-          "partition-scoped produce requires a deterministic input plan " +
-            "(sample()/rand()/limit-bearing sources cannot be counted and " +
-            "re-executed identically); materialize the batch first")
-      return produceLock.synchronized { produceInto(topic, records, generation(topic)) }
-    }
+  private def stagedProduce(topic: String, records: DataFrame): Long = {
     ensurePlaneOwned()
     val rl = producePlane.readLock()
     rl.lock()
     try inServingPool {
       // stable under the shared plane: the flip (rescale) needs the
-      // exclusive plane, so every concurrent producer in flight sees one
-      // consistent generation
+      // exclusive plane, so every producer in flight sees one consistent
+      // generation
       val g = generation(topic)
       val keyed = ringAssigned(records, g)
+      // count BEFORE the write: an empty batch (streaming recovery replay,
+      // fully-filtered source) then skips the shuffle and the write job
       val counts = keyed.groupBy(col("part")).agg(count(lit(1)).as("n"))
         .as[(Int, Long)].collect().toMap
       if (counts.isEmpty) 0L
-      else {
-        val monitors = counts.keys.toList.sorted.map(p =>
-          TopicStore.scopedLockFor(s"$lockRootKey|ppart|${scopeDir(topic)}|v${g.version}|$p"))
-        withMonitors(monitors) {
-          // entry authority + pre-data fence: the batch must sit inside a
-          // partition-scoped claim, and a superseded lease is caught
-          // BEFORE the data files land, not only at the watermark swap
-          PlaneLease.assertAuthority(lockRootKey,
-            PlaneLease.ProduceAuthority(counts.keySet))
-          PlaneLease.assertCurrentAtCommit(lockRootKey,
-            PlaneLease.ProduceAuthority(counts.keySet))
-          // bases for THIS batch's partitions are stable: only a holder
-          // of these part monitors writes them, and exclusive-plane
-          // writers are excluded by the shared plane lock
-          val bases = producerBasesFor(topic, g)
-          stageCommit(offsetsAssigned(keyed, topic, g, bases), counts.keySet)
-          val scope = producerScopeFor(topic, g)
-          val myNext = counts.map { case (p, n) => p -> (bases.getOrElse(p, 0L) + n) }
-          // merge RMW on the shared watermark view: concurrent producers
-          // of OTHER partitions interleave here, so re-read and overlay
-          // only this batch's partitions under the scope's merge lock
-          // (cross-process disjoint producers never meet: each writes its
-          // own lane table — writeProducerOffsets)
-          TopicStore.scopedLockFor(s"$lockRootKey|pwm|$scope").synchronized {
-            writeProducerOffsets(scope,
-              producerWatermarksForUpdate(scope) ++ myNext, myNext.keySet)
-          }
-          counts.values.sum
-        }
+      else withMonitors(partMonitors(topic, g, counts.keys)) {
+        // entry authority + pre-data fence: the batch must sit inside a
+        // partition-scoped claim, and a superseded lease is caught
+        // BEFORE the data files land, not only at the watermark swap
+        PlaneLease.assertAuthority(lockRootKey,
+          PlaneLease.ProduceAuthority(counts.keySet))
+        PlaneLease.assertCurrentAtCommit(lockRootKey,
+          PlaneLease.ProduceAuthority(counts.keySet))
+        // bases for THIS batch's partitions are stable: only a holder of
+        // these part monitors writes them
+        val bases = producerBasesFor(topic, g)
+        stageCommit(offsetsAssigned(keyed, topic, g, bases), counts.keySet)
+        mergeWatermarks(topic, g,
+          counts.map { case (p, n) => p -> (bases.getOrElse(p, 0L) + n) })
+        counts.values.sum
       }
     } finally rl.unlock()
   }
+
+  /** The monitors of ring partitions `parts` of generation `g`, ascending
+    * — the acquisition order is the deadlock discipline.
+    */
+  private def partMonitors(topic: String, g: Generation, parts: Iterable[Int]): List[Object] =
+    parts.toList.sorted.map(p =>
+      TopicStore.scopedLockFor(s"$lockRootKey|ppart|${scopeDir(topic)}|v${g.version}|$p"))
 
   /** Hold a list of monitors (pre-sorted by the caller — ascending
     * acquisition order is the deadlock discipline) around `body`.
@@ -706,46 +582,70 @@ class TopicStore(
     case h :: t => h.synchronized(withMonitors(t)(body))
   }
 
-  /** Stage-then-rename commit for the concurrent plane: write the batch
-    * to a private directory (its own Hadoop committer staging — no
-    * `_temporary` collision between concurrent jobs), then rename each
-    * data file into the partitioned log. File names carry the write
-    * job's UUID, so renames never collide; per ring partition a produce
-    * stages exactly one file, so partition visibility is atomic. A crash
-    * mid-commit leaves unharvested stage files (invisible — swept by
-    * [[sweepStages]]) or moved-but-unwatermarked files (the documented
+  /** Advance a batch's partitions to `next` on the shared watermark view:
+    * producers of OTHER partitions interleave here, so re-read and overlay
+    * only these partitions under the scope's merge lock (cross-process
+    * disjoint producers never meet: each writes its own lane table —
+    * writeProducerOffsets).
+    */
+  private def mergeWatermarks(topic: String, g: Generation, next: Map[Int, Long]): Unit = {
+    val scope = producerScopeFor(topic, g)
+    TopicStore.scopedLockFor(s"$lockRootKey|pwm|$scope").synchronized {
+      writeProducerOffsets(scope, producerWatermarksForUpdate(scope) ++ next, next.keySet)
+    }
+  }
+
+  /** Stage-then-merge commit: write the batch to a private directory (its
+    * own Hadoop committer staging — no `_temporary` collision between
+    * concurrent jobs), then merge the staged tree into the log in the
+    * shape of Hadoop's `FileOutputCommitter.mergePaths`: a directory the
+    * log lacks is renamed in whole, one it has is walked with
+    * `listStatus`. File names carry the write job's UUID, so renames never
+    * collide. The walk starts at the `range=` level: below it a tree
+    * belongs to ONE ring partition, held by one producer at a time (the
+    * part monitors in this JVM, the partition lease across processes).
+    * The shared `topic=`/`token=` levels are created in place instead — two
+    * producers of disjoint partitions may both find them missing, and a
+    * rename onto a directory that appeared meanwhile nests inside it
+    * rather than failing. Per ring partition a produce stages exactly one
+    * file, so partition visibility is atomic. No recursive `listFiles`:
+    * it builds a LocatedFileStatus per file, which on a local filesystem
+    * without libhadoop loads permissions in a child process per file. A
+    * crash mid-commit leaves unharvested stage files (invisible — swept
+    * by [[sweepStages]]) or moved-but-unwatermarked files (the documented
     * at-least-once window, healed by the reconcile scan).
     */
   private def stageCommit(withOffsets: DataFrame, parts: Set[Int]): Unit = {
-    val stage = s"$root/_stage/produce-${java.util.UUID.randomUUID()}"
-    val fs = hfs(stage)
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val stage = hpath(s"$root/_stage/produce-${java.util.UUID.randomUUID()}")
+    val fs = hfs(stage.toString)
+    def visible(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq
+      .filter { st => val n = st.getPath.getName; !n.startsWith("_") && !n.startsWith(".") }
+    def merge(from: FileStatus, to: Path): Unit =
+      if (from.isDirectory && fs.exists(to))
+        visible(from.getPath).foreach(c => merge(c, new Path(to, c.getPath.getName)))
+      else if (!fs.rename(from.getPath, to))
+        throw new java.io.IOException(
+          s"produce stage commit: rename ${from.getPath} -> $to failed")
     try {
       withOffsets.write.mode(SaveMode.Overwrite)
-        .partitionBy("topic", "token", "range", "version").parquet(stage)
+        .partitionBy("topic", "token", "range", "version").parquet(stage.toString)
       // re-fence AFTER the (possibly long) staged Spark write, right
       // before the renames make its files visible: a lease taken over
       // mid-write is caught here, so a paused producer cannot land data
       // files a successor's heal has already offset-advanced past. The
-      // residual window is the rename loop itself — microseconds per
-      // file, the same bounded TOCTOU the reference accepts between its
-      // coalescer's generation re-check and its segment write
+      // residual window is the merge itself — a few renames, the same
+      // bounded TOCTOU the reference accepts between its coalescer's
+      // generation re-check and its segment write
       // (`coalescer.go:93-135`); the watermark swap re-checks once more.
       PlaneLease.assertCurrentAtCommit(lockRootKey, PlaneLease.ProduceAuthority(parts))
-      val stagePath = fs.makeQualified(hpath(stage))
-      val it = fs.listFiles(stagePath, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")) {
-          val rel = stagePath.toUri.relativize(f.getPath.toUri).getPath
-          val target = hpath(s"$dataDir/$rel")
-          fs.mkdirs(target.getParent)
-          if (!fs.rename(f.getPath, target))
-            throw new java.io.IOException(
-              s"produce stage commit: rename ${f.getPath} -> $target failed")
-        }
+      for (topicDir <- visible(stage); tokenDir <- visible(topicDir.getPath)) {
+        val logToken = new Path(
+          new Path(dataDir, topicDir.getPath.getName), tokenDir.getPath.getName)
+        fs.mkdirs(logToken)
+        visible(tokenDir.getPath).foreach(r => merge(r, new Path(logToken, r.getPath.getName)))
       }
-    } finally { fs.delete(hpath(stage), true); () }
+    } finally { fs.delete(stage, true); () }
   }
 
   /** Broker-local produce for driver-resident batches — the hot ingest
@@ -756,7 +656,7 @@ class TopicStore(
     * so routing, ordering, offset assignment, and the one-zstd-parquet-
     * file-per-touched-partition write all happen driver-side under the
     * SAME shared-plane + per-partition-monitor locking as
-    * [[produceConcurrent]]. No Spark job runs at all (measured: the job
+    * [[produce]]. No Spark job runs at all (measured: the job
     * machinery costs ~1 s per flush REGARDLESS of size — the entire
     * wire-path throughput ceiling), and a [[graft.serving.BrokerGroup]]'s
     * coalescers write concurrently over disjoint partitions, so ingest
@@ -776,7 +676,7 @@ class TopicStore(
     * Returns the number of records written.
     *
     * Bulk produce (DataFrame sources: staged tables, streaming
-    * micro-batches, the DSv2 writer) stays on the Spark planes — data
+    * micro-batches, the DSv2 writer) stays on the Spark plane — data
     * that is not in driver memory should never pass through it.
     */
   def produceLocal(topic: String, rows: Seq[TopicStore.LocalRecord]): Long = {
@@ -789,10 +689,8 @@ class TopicStore(
       val toks = tokensOf(g)
       val byPart = rows.groupBy(r =>
         TokenRing.partitionOrdinal(localHash(r), g.clusterSize, rangesPerToken))
-      val monitors = byPart.keys.toList.sorted.map(p =>
-        TopicStore.scopedLockFor(s"$lockRootKey|ppart|${scopeDir(topic)}|v${g.version}|$p"))
-      withMonitors(monitors) {
-        // entry authority + pre-data fence (see produceConcurrent)
+      withMonitors(partMonitors(topic, g, byPart.keys)) {
+        // entry authority + pre-data fence (see stagedProduce)
         PlaneLease.assertAuthority(lockRootKey,
           PlaneLease.ProduceAuthority(byPart.keySet))
         PlaneLease.assertCurrentAtCommit(lockRootKey,
@@ -816,12 +714,8 @@ class TopicStore(
           })
         }
         futs.foreach(_.get())
-        val scope = producerScopeFor(topic, g)
-        val myNext = byPart.map { case (p, rs) => p -> (bases.getOrElse(p, 0L) + rs.size) }
-        TopicStore.scopedLockFor(s"$lockRootKey|pwm|$scope").synchronized {
-          writeProducerOffsets(scope,
-            producerWatermarksForUpdate(scope) ++ myNext, myNext.keySet)
-        }
+        mergeWatermarks(topic, g,
+          byPart.map { case (p, rs) => p -> (bases.getOrElse(p, 0L) + rs.size) })
         rows.size.toLong
       }
     } finally rl.unlock()
@@ -932,8 +826,8 @@ class TopicStore(
       throw new java.io.IOException(s"produceLocal: rename $tmp -> $fin failed")
   }
 
-  /** Reclaim orphaned produce staging directories (a concurrent produce
-    * that crashed between its stage write and the rename-in). Age-gated
+  /** Reclaim orphaned produce staging directories (a produce that
+    * crashed between its stage write and the merge into the log). Age-gated
     * so an in-flight produce's live staging is never touched; the
     * retention sweeper calls this each tick. Returns directories removed.
     */
@@ -975,21 +869,6 @@ class TopicStore(
       .withColumn("value", encode(col("svalue"), "UTF-8"))
       .select("key", "value", "timestamp")
     produce(topic, df)
-  }
-
-  /** NDJSON produce (S2, `marshalRecordsByLine`): one request body becomes
-    * N records, split on newlines; all lines share the request's key and
-    * timestamp. Distributed split — no driver-side parsing.
-    */
-  def produceNdjson(topic: String, bodies: DataFrame): Long = {
-    val exploded = bodies
-      .select(
-        col("key"), col("timestamp"),
-        posexplode(split(decode(col("value"), "UTF-8"), "\n")).as(Seq("__seq", "__line")))
-      .filter(length(trim(col("__line"))) > 0)
-      .withColumn("value", encode(col("__line"), "UTF-8"))
-      .select(col("key"), col("value"), col("timestamp"), col("__seq").cast("long"))
-    produce(topic, exploded)
   }
 
   /** JSON delivery shape (S9, `consumerResponseItem.MarshalJson`): one
@@ -1659,7 +1538,7 @@ class TopicStore(
     // would hold the monitor waiting for the read lock while the
     // maintenance thread holds the write lock waiting for the monitor.
     // With the read lock first, the JVM-wide order is
-    // produceLock -> topic RW -> scoped monitor everywhere (a write-lock
+    // plane -> topic RW -> scoped monitor everywhere (a write-lock
     // holder re-entering the read lock is legal on ReentrantReadWriteLock).
     if (!reconciled.contains(rscope)) withTopicReads(topic) {
       TopicStore.scopedLockFor(s"reconcile|$rscope").synchronized {
@@ -2515,14 +2394,14 @@ class TopicStore(
     * rewrite, which this removes (work proportional to the CHANGE, not
     * to history).
     */
-  // produceLock OUTSIDE the write lock: produce's reconcile acquires the
-  // topic READ lock while holding produceLock, so a rescale acquiring
-  // produceLock while holding the WRITE lock would deadlock with it (the
-  // JVM-wide lock order is produceLock -> topic RW lock). produceLock
-  // still serializes the flip against concurrent produces: a produce
-  // pins its generation under the same lock, so it lands either wholly
-  // under v (still live in the chain — nothing strands) or wholly under
-  // v+1 after the flip.
+  // The exclusive plane OUTSIDE the write lock: produce's reconcile
+  // acquires the topic READ lock while holding the shared plane, so a
+  // rescale taking the plane while holding the WRITE lock would deadlock
+  // with it (the JVM-wide lock order is plane -> topic RW lock). The
+  // exclusive plane serializes the flip against every produce: a produce
+  // pins its generation under the shared plane, so it lands either
+  // wholly under v (still live in the chain — nothing strands) or wholly
+  // under v+1 after the flip.
   /** COORDINATED online rescale over a multi-process deployment: ask
     * every live scoped claimant (partition producers, consumer members)
     * to flush-and-release via the drain protocol, wait for their claims
@@ -2589,7 +2468,7 @@ class TopicStore(
     require(newClusterSize >= 1 && newClusterSize <= graft.core.TokenRing.MaxRingSize,
       s"rescale($topic): cluster size must be in [1, ${graft.core.TokenRing.MaxRingSize}], " +
         s"got $newClusterSize (normalize with TokenRing.validRingLength)")
-    produceLock.synchronized { exclusivePlane { withTopicMaintenance(topic) {
+    exclusivePlane { withTopicMaintenance(topic) {
     val chain = generations(topic)
     // mechanical drain-before-rescale (the reference waits for sibling
     // OffsetCompleted before joining ranges, `offset_state.go:690-714`):
@@ -2635,7 +2514,7 @@ class TopicStore(
     // the new generation is open and empty.
     setGenerations(topic, ((kept ++ tombs).sortBy(_.version)) :+ next)
     next
-  } } } }
+  } } }
 
   /** True when `group` has unconsumed records anywhere in the live
     * lineage (committed-or-start-policy position below the watermark in
@@ -2746,6 +2625,10 @@ class TopicStore(
     // scopeDir encoding)
     val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
     val fs = hfs(topicPath.toString)
+    // a listStatus walk, not a recursive listFiles: that builds a
+    // LocatedFileStatus per file, forking per file where libhadoop is absent
+    def fileCount(dir: org.apache.hadoop.fs.Path): Int =
+      fs.listStatus(dir).map(st => if (st.isDirectory) fileCount(st.getPath) else 1).sum
     var deleted = 0
     if (fs.exists(topicPath)) {
       fs.listStatus(topicPath).filter(_.isDirectory).foreach { tokenDir =>
@@ -2753,8 +2636,7 @@ class TopicStore(
           fs.listStatus(rangeDir.getPath).filter(_.isDirectory).foreach { verDir =>
             val name = verDir.getPath.getName
             if (name.startsWith("version=") && !keepNames.contains(name)) {
-              val it = fs.listFiles(verDir.getPath, true)
-              while (it.hasNext) { it.next(); deleted += 1 }
+              deleted += fileCount(verDir.getPath)
               fs.delete(verDir.getPath, true)
               ()
             }
@@ -3281,12 +3163,12 @@ object TopicStore {
       throw new IllegalArgumentException(
         s"ring partition ordinal '$s' in spec '$spec' is not a non-negative int"))
 
-  // JVM-global maintenance/read and produce locks, keyed by normalized
-  // root (+ topic for the RW lock): every TopicStore instance over the
-  // same root — the serving store, the DSv2 observer's/writer's private
-  // instance, a test's second store — shares one lock, so maintenance
-  // swaps exclude ALL same-JVM readers and produces serialize with
-  // rescale's copy-then-flip across instances. The maps are append-only;
+  // JVM-global maintenance/read locks and produce planes, keyed by
+  // normalized root (+ topic for the RW lock): every TopicStore instance
+  // over the same root — the serving store, the DSv2 observer's/writer's
+  // private instance, a test's second store — shares one lock, so
+  // maintenance swaps exclude ALL same-JVM readers and produces exclude
+  // rescale's generation flip across instances. The maps are append-only;
   // their cardinality is (roots × topics) touched over the JVM's life —
   // operationally small (an entry is one lock object), so these two stay
   // strongly held; the higher-churn scoped-lock table below is
@@ -3299,11 +3181,8 @@ object TopicStore {
   // watermark. Read-only observers need no lease.)
   private val globalTopicLocks = new java.util.concurrent.ConcurrentHashMap[
     (String, String), java.util.concurrent.locks.ReentrantReadWriteLock]()
-  private val globalProduceLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  // the horizontal produce plane (see the class-side producePlane
-  // comment): shared by produceConcurrent, exclusive for everything that
-  // needs the single-writer view — strongly held like the produce locks
+  // the produce plane (see the class-side producePlane comment): shared
+  // by every produce, exclusive for rescale's flip
   private val globalProducePlanes = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.locks.ReentrantReadWriteLock]()
   // fine-grained RMW locks (commit read-modify-write, reconcile heal),
@@ -3365,9 +3244,6 @@ object TopicStore {
     globalTopicLocks.computeIfAbsent(
       (rootKey, topic),
       _ => new java.util.concurrent.locks.ReentrantReadWriteLock())
-
-  private[graft] def produceLockFor(rootKey: String): Object =
-    globalProduceLocks.computeIfAbsent(rootKey, _ => new Object)
 
   private[graft] def producePlaneFor(
       rootKey: String): java.util.concurrent.locks.ReentrantReadWriteLock =

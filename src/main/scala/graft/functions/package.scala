@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graft.{CharBigramPhash, CosineSimilarity, GraftColumns, GramBuckets, L2Sq, MinHashSig, Murmur3Token, PosGramHashes, RingPartitionsTable, ShingleHashes, SimHashSig, TopicLagTable, TopicListTable, TopicOffsetsForTimeTable, TopicRecordsTable, TopicStatsTable}
 
 /** Column-level entry points for the graft expressions, plus SQL
@@ -48,49 +51,56 @@ package object functions {
   def ring_partition(token: Column, clusterSize: Int, rangesPerToken: Int): Column =
     GraftColumns.ringPartition(token, clusterSize, rangesPerToken)
 
+  /** The graft SQL functions, one row each: name, the class that
+    * documents it, and its builder. `GraftExtensions` injects this table
+    * and `registerAll` registers it, so the two surfaces cannot drift.
+    */
+  private[graft] val scalarFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    Seq(
+      ("murmur3_token", classOf[Murmur3Token], e => Murmur3Token(e.head)),
+      ("cosine_sim", classOf[CosineSimilarity], e => CosineSimilarity(e(0), e(1))),
+      ("l2_sq", classOf[L2Sq], e => L2Sq(e(0), e(1))),
+      ("minhash_sig", classOf[MinHashSig], e => MinHashSig(e.head, intArg(e(1)), longArg(e(2)))),
+      ("shingle_hashes", classOf[ShingleHashes], e => ShingleHashes(e.head, intArg(e(1)))),
+      ("pos_gram_hashes", classOf[PosGramHashes], e => PosGramHashes(e.head, intArg(e(1)))),
+      ("simhash_sig", classOf[SimHashSig], e => SimHashSig(e.head)),
+      ("gram_buckets", classOf[GramBuckets],
+        e => GramBuckets(e.head, intArg(e(1)), intArg(e(2)))),
+      ("char_bigram_phash", classOf[CharBigramPhash],
+        e => CharBigramPhash(e.head, intArg(e(1)))))
+
+  /** The graft table-valued functions, in the same shape. */
+  private[graft] val tableFunctions: Seq[(String, Class[_], Seq[Expression] => LogicalPlan)] =
+    Seq(
+      ("ring_partitions", RingPartitionsTable.getClass, RingPartitionsTable.plan),
+      ("topic_records", TopicRecordsTable.getClass, TopicRecordsTable.plan),
+      ("topic_list", TopicListTable.getClass, TopicListTable.plan),
+      ("topic_lag", TopicLagTable.getClass, TopicLagTable.plan),
+      ("topic_offsets_for_time", TopicOffsetsForTimeTable.getClass,
+        TopicOffsetsForTimeTable.plan),
+      ("topic_stats", TopicStatsTable.getClass, TopicStatsTable.plan))
+
+  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+  private def longArg(e: Expression): Long = e.eval().asInstanceOf[Number].longValue()
+
+  private[graft] def infoOf(name: String, cls: Class[_]): ExpressionInfo =
+    new ExpressionInfo(cls.getName, name)
+
   /** Register graft functions (scalar + table-valued) for SQL use on an
-    * existing session — the same set `GraftExtensions` injects.
+    * existing session — the same table `GraftExtensions` injects. Names
+    * the session already resolves are left alone, so calling this per
+    * query costs a lookup, not a re-registration.
     */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "murmur3_token", exprs => Murmur3Token(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "l2_sq", exprs => L2Sq(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue()), "built-in")
-    registry.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    registry.createOrReplaceTempFunction(
-      "pos_gram_hashes", exprs => PosGramHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    registry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimHashSig(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "gram_buckets", exprs => GramBuckets(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    registry.createOrReplaceTempFunction(
-      "char_bigram_phash", exprs => CharBigramPhash(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
+    scalarFunctions.foreach { case (name, cls, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id)) registry.registerFunction(id, infoOf(name, cls), builder)
+    }
     val tvf = spark.sessionState.tableFunctionRegistry
-    tvf.createOrReplaceTempFunction(
-      "ring_partitions", exprs => RingPartitionsTable.plan(exprs), "built-in")
-    tvf.createOrReplaceTempFunction(
-      "topic_records", exprs => TopicRecordsTable.plan(exprs), "built-in")
-    tvf.createOrReplaceTempFunction(
-      "topic_list", exprs => TopicListTable.plan(exprs), "built-in")
-    tvf.createOrReplaceTempFunction(
-      "topic_lag", exprs => TopicLagTable.plan(exprs), "built-in")
-    tvf.createOrReplaceTempFunction(
-      "topic_offsets_for_time",
-      exprs => TopicOffsetsForTimeTable.plan(exprs), "built-in")
-    tvf.createOrReplaceTempFunction(
-      "topic_stats", exprs => TopicStatsTable.plan(exprs), "built-in")
+    tableFunctions.foreach { case (name, cls, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!tvf.functionExists(id)) tvf.registerFunction(id, infoOf(name, cls), builder)
+    }
   }
 }

@@ -12,13 +12,13 @@ import graft.engine.TopicStore
   * `internal/producing/server.go:126-190` + the discovery listing
   * `discoverer_client_service.go:30-124`). Broker `i` of N serves ring
   * partitions `part % N == i`, so concurrent flushes are
-  * partition-disjoint and `TopicStore.produceConcurrent` runs them in
+  * partition-disjoint and `TopicStore`'s produce plane runs them in
   * parallel.
   *
   * The routing is ADVISORY: it predicts the partition with the same
   * murmur3 (keyed) / xxhash64 (keyless) + ring math the produce plan
-  * applies, but correctness never depends on the prediction —
-  * `produceConcurrent` derives its lock set from the partitions the batch
+  * applies, but correctness never depends on the prediction — `produce`
+  * and `produceLocal` derive their lock set from the partitions the batch
   * actually hashes to, so a prediction gone stale across a rescale only
   * costs concurrency. Keyless records route per line by value hash
   * (keyless produce has no order guarantee — reference parity); a request
@@ -89,8 +89,7 @@ object ShardRouter {
   * mid-stream re-reads from its last durable commit (the at-least-once
   * failover the reference's consumer reconnect also gives). The
   * coalescers flush via `produceLocal` (broker-local segment writes),
-  * with `produceConcurrent` the DataFrame twin on the same shared
-  * plane.
+  * with `produce` the DataFrame twin on the same shared plane.
   *
   * On a real cluster the brokers would be separate JVMs over shared
   * storage. The cross-process seam exists since r9: the store's produce/

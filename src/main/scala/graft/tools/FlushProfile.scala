@@ -4,12 +4,13 @@ import org.apache.spark.sql.functions._
 
 import graft.Graft
 
-/** Latency attribution of ONE coalescer-shaped flush (driver-staged
-  * toDF batch -> TopicStore.produce/produceConcurrent): the wire-path
-  * throughput ceiling is (bytes per flush) / (flush latency), so the
-  * fixed cost of a small flush is the number that decides whether more
-  * brokers help. Prints per-size hot medians for both planes and, with
-  * SPARK_GRAFT_STAGES=1, the per-stage breakdown of the last flush.
+/** Latency attribution of ONE coalescer-shaped flush (a driver-staged
+  * toDF batch -> TopicStore.produce, or rows -> produceLocal): the
+  * wire-path throughput ceiling is (bytes per flush) / (flush latency),
+  * so the fixed cost of a small flush is the number that decides whether
+  * more brokers help. Prints per-size hot medians for the Spark lane and
+  * the local lane and, with SPARK_GRAFT_STAGES=1, the per-stage
+  * breakdown of the last flush.
   */
 object FlushProfile {
   def main(args: Array[String]): Unit = {
@@ -40,9 +41,8 @@ object FlushProfile {
       (0 until n).map(i => graft.engine.TopicStore.LocalRecord(
         s"k${i % 64}", bytes, 1700000000000000L + i, i.toLong))
     }
-    // warmup all planes
+    // warmup both lanes
     store.produce("warm", df(1000))
-    store.produceConcurrent("warm", df(1000))
     store.produceLocal("warm", local(1000))
     // bounded-page poll drain attribution: per-poll wall over a topic
     // shaped like the wire bench's (many produceLocal files per part)
@@ -71,9 +71,8 @@ object FlushProfile {
     }
     for (n <- Seq(1000, 8000, 32000)) {
       val lanes: Seq[(String, () => Unit)] = Seq(
-        "exclusive " -> (() => { store.produce("t", df(n)); () }),
-        "concurrent" -> (() => { store.produceConcurrent("t", df(n)); () }),
-        "local     " -> (() => { store.produceLocal("t", local(n)); () }))
+        "spark" -> (() => { store.produce("t", df(n)); () }),
+        "local" -> (() => { store.produceLocal("t", local(n)); () }))
       for ((name, fn) <- lanes) {
         val lists0 = graft.engine.PlaneLease.commitFenceLists.get
         val times = (1 to 5).map { _ =>

@@ -20,10 +20,10 @@ import graft.engine.TopicStore
   * contract. The piecewise race specs (produce-vs-rescale,
   * purge-vs-poll, commit-vs-rescale) each found a real bug when added;
   * this spec locks their COMPOSITION: the pairwise serialization
-  * disciplines (produceLock across copy-then-flip, the per-(root,
-  * topic) maintenance RW lock, one pinned generation read per op) must
-  * also hold when everything runs at once, because real serving mixes
-  * all of them on independent schedules.
+  * disciplines (the exclusive produce plane across the flip, the
+  * per-(root, topic) maintenance RW lock, one pinned generation read per
+  * op) must also hold when everything runs at once, because real serving
+  * mixes all of them on independent schedules.
   *
   * Invariants audited at quiescence (a fresh group reading everything):
   *  1. liveness — no thread wedges, no op throws;
@@ -106,7 +106,7 @@ class ChaosSpec extends AnyFunSuite {
 
     // ---- broker-local producer: the serving coalescers' segment-write
     // path (produceLocal — shared plane + per-partition monitors + direct
-    // parquet write), racing the exclusive-plane producers, maintenance
+    // parquet write), racing the Spark-plane producers, maintenance
     // swaps, and rescale flips above. Its records join the same audit.
     val localProducer = guard("local-producer") {
       for (b <- 0 until 15) {
@@ -253,7 +253,7 @@ class ChaosSpec extends AnyFunSuite {
     // error-swallow, listTopics walk) while a producer streams keyed
     // batches. The delivery contract must hold exactly as it does for
     // direct rescale calls — the watcher adds no third serialization
-    // domain, it rides produceLock like everyone else.
+    // domain, it rides the produce plane like everyone else.
     val store = new TopicStore(
       spark, Files.createTempDirectory("graft-chaos-topo").toString)
     val topic = "t"

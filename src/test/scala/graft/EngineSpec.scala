@@ -185,23 +185,6 @@ class EngineSpec extends AnyFunSuite {
     assert(out.toSeq == Seq("new"))
   }
 
-  test("ndjson produce splits bodies into records") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val store = freshStore()
-    val bodies = Seq(("k1", "{\"a\":1}\n{\"a\":2}\n{\"a\":3}", ts(0)))
-      .toDF("key", "body", "timestamp")
-      .withColumn("value", encode(col("body"), "UTF-8"))
-      .select("key", "value", "timestamp")
-    store.produceNdjson("t", bodies)
-    store.registry.register("g", "c", Seq("t"), store.StartFrom.Earliest)
-    val out = store.poll("g", "t", "c").collect()
-      .map(r => (new String(r.getAs[Array[Byte]]("value")), r.getAs[Long]("offset")))
-      .sortBy(_._2)
-    assert(out.map(_._1).toSeq == Seq("{\"a\":1}", "{\"a\":2}", "{\"a\":3}"))
-    assert(out.map(_._2).toSeq == Seq(0L, 1L, 2L)) // split preserves line order
-  }
-
   test("pollJson emits the reference delivery shape") {
     val store = freshStore()
     store.produceStrings("t", Seq(("a", "v1", ts(0)), ("a", "v2", ts(1))))
@@ -671,10 +654,10 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("produce racing a rescale never strands records in the old generation") {
-    // rescale holds produceLock across list-copy-flip, so a concurrent
-    // produce lands either wholly before the copy (and is copied) or
-    // after the flip (in the new generation) — never in the window where
-    // it would be stranded in the superseded generation
+    // rescale holds the produce plane exclusively across its flip, so a
+    // concurrent produce lands either wholly before the flip (in the old,
+    // still-live generation) or after it (in the new generation) — never
+    // in a generation the flip has already superseded
     val store = freshStore()
     store.produceStrings("t", (0 until 20).map(i => (s"k$i", s"pre$i", ts(i))))
     val rescaler = new Thread(() => { store.rescale("t", 6); () })

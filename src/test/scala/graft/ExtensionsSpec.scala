@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsSpec extends AnyFunSuite {
@@ -162,6 +165,55 @@ class ExtensionsSpec extends AnyFunSuite {
         s"SELECT sum(lag), sum(watermark) FROM topic_lag('$root', 'g')").head()
       assert(post.getLong(0) == 0L && post.getLong(1) == 6L,
         s"a fully polled+committed group must show zero lineage lag, got $post")
+    } finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("one function table: extensions inject what registerAll registers; re-registering is a no-op") {
+    val injected, injectedTables = mutable.Buffer.empty[String]
+    val recorder = new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName; super.injectFunction(f)
+      }
+      override def injectTableFunction(f: TableFunctionDescription): Unit = {
+        injectedTables += f._1.funcName; super.injectTableFunction(f)
+      }
+    }
+    new GraftExtensions().apply(recorder)
+    // a session WITHOUT the extensions (other suites' sessions may carry
+    // them, and a newSession() inherits its parent's), so registerAll's
+    // additions are visible as a registry diff
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    val spark = SparkSession.builder()
+      .appName("ext-table-spec").master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try {
+      val fns = spark.sessionState.functionRegistry
+      val tvfs = spark.sessionState.tableFunctionRegistry
+      val (fnsBefore, tvfsBefore) = (fns.listFunction().toSet, tvfs.listFunction().toSet)
+      functions.registerAll(spark)
+      assert((fns.listFunction().toSet -- fnsBefore).map(_.funcName) == injected.toSet)
+      assert((tvfs.listFunction().toSet -- tvfsBefore).map(_.funcName) == injectedTables.toSet)
+      assert(injected.size == 9 && injectedTables.size == 6)
+      // a second registration (SparkEntry.queries calls registerAll per
+      // query) leaves every registration untouched: same ExpressionInfo
+      // instances, no "replaced a previously registered function" churn
+      def infos() =
+        injected.map(n => fns.lookupFunction(FunctionIdentifier(n)).get) ++
+          injectedTables.map(n => tvfs.lookupFunction(FunctionIdentifier(n)).get)
+      val first = infos()
+      functions.registerAll(spark)
+      first.zip(infos()).foreach { case (a, b) =>
+        assert(a eq b, s"${a.getName} was re-registered")
+      }
     } finally {
       SparkSession.clearDefaultSession()
       SparkSession.clearActiveSession()

@@ -129,7 +129,7 @@ class LocalProduceSpec extends AnyFunSuite {
       LocalRecord(s"k${i % 4}", s"$tag#$i".getBytes("UTF-8"), t0 + i, i.toLong))
     assert(store.produceLocal("t", rows("local1", 20, 1700000000000000L)) == 20L)
     store.produce("t", asDf(rows("spark1", 20, 1700000001000000L)))
-    assert(store.produceConcurrent("t", asDf(rows("conc1", 20, 1700000002000000L))) == 20L)
+    assert(store.produce("t", asDf(rows("conc1", 20, 1700000002000000L))) == 20L)
     assert(store.produceLocal("t", rows("local2", 20, 1700000003000000L)) == 20L)
 
     val env = dump(store, "t", "g")

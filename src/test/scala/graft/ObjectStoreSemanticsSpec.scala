@@ -214,10 +214,10 @@ class ObjectStoreSemanticsSpec extends AnyFunSuite {
     val root = freshRoot()
     val store = new TopicStore(spark, root)
     import spark.implicits._
-    // the EXCLUSIVE-plane produce: a real Spark write job — executors
-    // resolve s3x:// via ServiceLoader, segment parquet goes through
-    // Spark's committer (task temp files + renames), watermarks and meta
-    // swaps ride the same flat store
+    // the Spark produce: a real Spark write job — executors resolve
+    // s3x:// via ServiceLoader, segment parquet goes through Spark's
+    // committer into the stage and is merged into the log by directory
+    // and file renames, watermarks and meta swaps ride the same flat store
     val batch = (0 until 60)
       .map(i => (s"k${i % 5}", s"sv$i", new java.sql.Timestamp(1700000000000L + i * 1000L)))
       .toDF("key", "svalue", "timestamp")

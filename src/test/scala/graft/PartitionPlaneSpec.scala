@@ -83,6 +83,38 @@ class PartitionPlaneSpec extends AnyFunSuite {
     PlaneLease.dropForTests(rootKeyOf(root))
   }
 
+  test("a partition-scoped produce pins a nondeterministic batch; lane watermarks equal the written rows") {
+    val root = Files.createTempDirectory("graft-part").toString
+    withPartitionConf("0-5") {
+      val store = new TopicStore(spark, root)
+      import spark.implicits._
+      import org.apache.spark.sql.functions._
+      // unseeded rand(): every execution selects a different subset, so
+      // a count that re-ran the plan would drift off the written rows
+      val batch = keysInto((0 to 5).toSet, 200, "nd").zipWithIndex
+        .map { case (k, i) => (k, s"v$i", new java.sql.Timestamp(1700000000000L + i)) }
+        .toDF("key", "svalue", "timestamp")
+        .withColumn("value", encode(col("svalue"), "UTF-8"))
+        .select("key", "value", "timestamp")
+        .where(rand() < 0.5)
+      val n = store.produce("t", batch)
+      val written = spark.read.parquet(store.dataDir).where(col("topic") === "t")
+        .groupBy(col("part"))
+        .agg(count(lit(1)).as("n"), (max(col("offset")) + 1L).as("next"))
+        .as[(Int, Long, Long)].collect()
+      assert(written.map(_._2).sum == n)
+      val high = store.persistedProducerOffsets("t")
+      written.foreach { case (p, rows, next) =>
+        assert(rows == next, s"part $p: ${next - rows} offset gaps/dups")
+        assert(high.getOrElse(p, 0L) == rows, s"part $p watermark ${high.get(p)} != $rows rows")
+      }
+      assert(high.filter(_._2 > 0).keySet == written.map(_._1).toSet)
+      val scopeDir = new java.io.File(s"$root/_meta/producer_offsets/t/v1")
+      assert(scopeDir.listFiles().filter(_.isDirectory).map(_.getName).toSeq == Seq("lane-0-5"))
+    }
+    PlaneLease.dropForTests(rootKeyOf(root))
+  }
+
   test("a batch hashing outside the claim is rejected loudly, nothing written") {
     val root = Files.createTempDirectory("graft-part").toString
     withPartitionConf("0-5") {

@@ -15,8 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.TopicStore
 import graft.serving.BrokerGroup
 
-/** The horizontal ingest plane: `TopicStore.produceConcurrent` (shared
-  * plane + per-ring-partition monitors + stage-rename commit) and the
+/** The horizontal ingest plane: `TopicStore.produce` (shared plane +
+  * per-ring-partition monitors + stage-merge commit) and the
   * [[BrokerGroup]] serving front that routes produce over N brokers —
   * the repo's analog of the reference's N-broker produce path
   * (`internal/discovery/discoverer_client_service.go:30-124`). Every
@@ -43,7 +43,7 @@ class ShardedIngestSpec extends AnyFunSuite {
     val df = rows.toDF("key", "svalue", "timestamp")
       .withColumn("value", encode(col("svalue"), "UTF-8"))
       .select("key", "value", "timestamp")
-    store.produceConcurrent(topic, df)
+    store.produce(topic, df)
   }
 
   /** Drain everything an Earliest group can see and return the delivered
@@ -91,7 +91,8 @@ class ShardedIngestSpec extends AnyFunSuite {
           n += 1
           (k, v, ts(clock.incrementAndGet()))
         }
-        // thread 0 mixes in the EXCLUSIVE path: both planes must compose
+        // thread 0 produces through produceStrings: both entry points
+        // share one plane and must compose
         if (tid == 0) store.produceStrings(topic, rows)
         else assert(concurrentStrings(store, topic, rows) == perBatch.toLong)
       }

@@ -43,22 +43,36 @@ class SourceHygieneSpec extends AnyFunSuite {
     if (empty) 0 else commas + 1
   }
 
+  private def lineOf(file: String, text: String, at: Int): String =
+    s"$file:${text.substring(0, at).count(_ == '\n') + 1}"
+
   test("driver-side parquet reads open over a passed conf (TopicStore.groupReader)") {
     // `ParquetReader.builder(support, path)` and the one-argument
     // `ParquetFileReader.open(in)` each build a `new Configuration()` per
     // open, whose first read re-parses Hadoop's default XML resources
     val offenders = mainSources.flatMap { case (file, text) =>
-      def lineOf(at: Int) = s"$file:${text.substring(0, at).count(_ == '\n') + 1}"
       // `Owner.method(` with any whitespace, line breaks included
       def calls(owner: String, method: String) =
         raw"\b$owner\s*\.\s*$method\s*\(".r.findAllMatchIn(text)
       val builders = calls("ParquetReader", "builder")
-        .map(m => lineOf(m.start) + " ParquetReader.builder")
+        .map(m => lineOf(file, text, m.start) + " ParquetReader.builder")
       val opens = calls("ParquetFileReader", "open")
         .filter(m => argCount(text, m.end - 1) == 1)
-        .map(m => lineOf(m.start) + " one-argument ParquetFileReader.open")
+        .map(m => lineOf(file, text, m.start) + " one-argument ParquetFileReader.open")
       builders ++ opens
     }
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("TopicStore walks directories with listStatus, never a recursive listFiles") {
+    // `FileSystem.listFiles` builds a LocatedFileStatus per file; on a
+    // local filesystem without libhadoop each one loads its permissions in
+    // a child process (measured on a 4-core host: 300-350 ms for 37 staged
+    // files, against 4-7 ms for a listStatus walk)
+    val (file, text) = mainSources.find(_._1.endsWith("engine/TopicStore.scala"))
+      .getOrElse(fail("engine/TopicStore.scala not found"))
+    val offenders = raw"\.\s*listFiles\s*\(".r.findAllMatchIn(text)
+      .map(m => lineOf(file, text, m.start)).toSeq
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }
