@@ -271,7 +271,7 @@ object Bench {
     // runs on this memory-bandwidth-constrained host (109k vs 246k
     // msgs/s for the identical pipeline)
     val stageRoot = java.nio.file.Files.createTempDirectory("graft-bench-stage").toString
-    val stage = s"$stageRoot/_stage"
+    val stage = s"$stageRoot/input"
     msgs.repartition(cpus).write.mode("overwrite").parquet(stage)
     val staged = spark.read.parquet(stage)
     val stageFiles = staged.inputFiles.length
@@ -279,7 +279,7 @@ object Bench {
 
     // warmup: one small untimed produce+poll to a throwaway topic so the
     // write path's JIT/codegen (murmur+ring routing, window offsets,
-    // dynamic-partition parquet writer, commit bookkeeping) compiles
+    // task-side segment writer, commit bookkeeping) compiles
     // before the timer — the reference benchmark tool warms up the same
     // way, and this phase runs on a fresh JVM with nothing pre-compiled.
     val warm = staged.limit(50000)

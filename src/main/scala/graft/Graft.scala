@@ -48,25 +48,23 @@ object Graft {
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.compression.codec", "zstd")
     // Tungsten execution memory OFF the Java heap: sort/agg/join pages are
     // 64 MB arrays that churn the old generation when on-heap — on a
     // memory-bandwidth-constrained host the resulting full GCs made a 2 GB
     // produce 30x slower (measured: 2M-msg produce 133 s -> 3.9 s with
     // off-heap pages + ParallelGC). Off-heap is also the right cluster
     // posture: executor GC stays flat no matter how much execution memory
-    // a shuffle uses. The size is a cap, allocated on demand.
+    // a shuffle uses. The size is a cap, allocated on demand; it defaults
+    // to what the host has left beside the heap (hostOffHeap).
     .config("spark.memory.offHeap.enabled", "true")
-    .config("spark.memory.offHeap.size", sys.env.getOrElse("SPARK_GRAFT_OFFHEAP", "24g"))
-    // level 1 (default 3): the produce path is compression-CPU-bound on a
-    // 2 GB batch; level 1 halves the encode cost for a few % of ratio —
-    // the same hot-ingest tradeoff the reference makes (zstd "fastest"
-    // class for chunks). Applies to store writes; testdata reads are
-    // unaffected.
+    .config("spark.memory.offHeap.size", sys.env.getOrElse("SPARK_GRAFT_OFFHEAP", hostOffHeap))
+    // The next three shape the session's OWN DataFrame parquet writes
+    // (bench stages, query outputs, fixtures): zstd at level 1 and INT64
+    // micros timestamps (INT96 is deprecated). Topic store writes do not
+    // read them — engine.SegmentWriter fixes the store's file format
+    // whatever the session says.
+    .config("spark.sql.parquet.compression.codec", "zstd")
     .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
-    // INT64 micros instead of INT96 for written timestamps: the standard
-    // modern encoding (INT96 is deprecated), and what the graft DSv2
-    // source's record reader expects when consuming topic files
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     // FAIR root scheduling: the serving path (produce/poll) runs its jobs
     // in a dedicated pool (TopicStore.inServingPool) so a long analytics
@@ -83,6 +81,17 @@ object Graft {
     // window, watermarks) wants TIMESTAMP.
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.ui.enabled", "false")
+
+  /** Default off-heap cap: physical RAM (the container's limit where one
+    * is set) minus this JVM's max heap, at least 512 MiB — a cap beyond
+    * what the host holds would let Tungsten pages push the machine into
+    * swap or the OOM killer instead of spilling.
+    */
+  private def hostOffHeap: String = {
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    s"${math.max(512L, (os.getTotalMemorySize - Runtime.getRuntime.maxMemory) >> 20)}m"
+  }
 
   def session(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -118,7 +118,7 @@ final class PlaneDrainingException(msg: String) extends IllegalStateException(ms
   *    [[heartbeatFailures]] (a `/metrics` counter), never swallowed into
   *    silence.
   *  - per-write: mutating commit points (the store's rename-first meta
-  *    swaps, the concurrent produce's stage commit) call
+  *    swaps, the Spark produce's segment publish) call
   *    [[assertCurrentAtCommit]], which re-lists the relevant lease
   *    directory and rejects the commit when a higher epoch is visible —
   *    the reference's per-group generation re-check

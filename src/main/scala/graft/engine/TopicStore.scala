@@ -2,7 +2,8 @@ package graft.engine
 
 
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -448,7 +449,7 @@ class TopicStore(
     * chain) or wholly under the new one. [[graft.serving.BrokerGroup]]
     * routes requests so concurrent flushes are partition-disjoint; a
     * misprediction only widens the lock set and costs concurrency, never
-    * duplicates an offset. The data lands through [[stageCommit]];
+    * duplicates an offset. The data lands through [[writeSegments]];
     * watermarks merge per partition, and the crash window between
     * data-in-place and watermark-advance is the at-least-once window the
     * reconcile scan heals on the next cold start.
@@ -467,10 +468,10 @@ class TopicStore(
     * batch wrote.
     */
   def produce(topic: String, records: DataFrame): Long =
-    if (deterministicPlan(records)) stagedProduce(topic, records)
+    if (deterministicPlan(records)) lockedProduce(topic, records)
     else {
       val pinned = records.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try stagedProduce(topic, pinned) finally { pinned.unpersist(); () }
+      try lockedProduce(topic, pinned) finally { pinned.unpersist(); () }
     }
 
   /** Ring assignment of the Spark produce (produceLocal evaluates the
@@ -495,17 +496,17 @@ class TopicStore(
   }
 
   /** Contiguous offsets: base(part) + rank within this batch's partition.
-    * The explicit repartition to partsOf(g) (one ring partition per task)
-    * is the coalescer's per-range serialization point. The window
+    * The explicit repartition to partsOf(g) (every ring partition in one
+    * task) is the coalescer's per-range serialization point. The window
     * partitions/orders on (token, range) — the same grouping as `part`
-    * (bijection) — so its SortExec leaves every task ordered by the
-    * dynamic-partition write's required (token, range) prefix and the
-    * writer's own sort is ELIDED: exactly ONE shuffle and ONE full-row
-    * sort per produce (the second writer-side sort of the full 1 KiB
-    * rows was ~1/3 of produce cost on a bandwidth-constrained host).
+    * (bijection) — so its SortExec leaves every task's rows grouped by
+    * ring partition and offset-ascending within it, the order the
+    * segment write ([[SegmentWriter.writeParts]]) consumes: exactly ONE
+    * shuffle and ONE full-row sort per produce. Rows come out in
+    * [[SegmentWriter.schema]]'s order.
     */
   private def offsetsAssigned(
-      keyed: DataFrame, topic: String, g: Generation, bases: Map[Int, Long]): DataFrame = {
+      keyed: DataFrame, g: Generation, bases: Map[Int, Long]): DataFrame = {
     val w = Window.partitionBy(col("token"), col("range"))
       .orderBy(col("timestamp"), col("key"), col("__seq"), xxhash64(col("value")))
     keyed
@@ -513,9 +514,7 @@ class TopicStore(
       .withColumn("__rank", row_number().over(w).cast("long"))
       .withColumn("offset",
         coalesce(element_at(typedlit(bases), col("part")), lit(0L)) + col("__rank") - 1L)
-      .withColumn("topic", lit(topic))
-      .withColumn("version", lit(g.version))
-      .select("key", "value", "timestamp", "part", "offset", "topic", "token", "range", "version")
+      .select("key", "value", "timestamp", "part", "offset")
   }
 
   /** True when the plan can be counted and then re-executed for the write
@@ -533,7 +532,7 @@ class TopicStore(
         p.expressions.exists(e => !e.deterministic)
     }.isEmpty
 
-  private def stagedProduce(topic: String, records: DataFrame): Long = {
+  private def lockedProduce(topic: String, records: DataFrame): Long = {
     ensurePlaneOwned()
     val rl = producePlane.readLock()
     rl.lock()
@@ -559,7 +558,7 @@ class TopicStore(
         // bases for THIS batch's partitions are stable: only a holder of
         // these part monitors writes them
         val bases = producerBasesFor(topic, g)
-        stageCommit(offsetsAssigned(keyed, topic, g, bases), counts.keySet)
+        writeSegments(topic, g, offsetsAssigned(keyed, g, bases), counts)
         mergeWatermarks(topic, g,
           counts.map { case (p, n) => p -> (bases.getOrElse(p, 0L) + n) })
         counts.values.sum
@@ -595,66 +594,67 @@ class TopicStore(
     }
   }
 
-  /** Stage-then-merge commit: write the batch to a private directory (its
-    * own Hadoop committer staging — no `_temporary` collision between
-    * concurrent jobs), then merge the staged tree into the log in the
-    * shape of Hadoop's `FileOutputCommitter.mergePaths`: a directory the
-    * log lacks is renamed in whole, one it has is walked with
-    * `listStatus`. File names carry the write job's UUID, so renames never
-    * collide. The walk starts at the `range=` level: below it a tree
-    * belongs to ONE ring partition, held by one producer at a time (the
-    * part monitors in this JVM, the partition lease across processes).
-    * The shared `topic=`/`token=` levels are created in place instead — two
-    * producers of disjoint partitions may both find them missing, and a
-    * rename onto a directory that appeared meanwhile nests inside it
-    * rather than failing. Per ring partition a produce stages exactly one
-    * file, so partition visibility is atomic. No recursive `listFiles`:
-    * it builds a LocatedFileStatus per file, which on a local filesystem
-    * without libhadoop loads permissions in a child process per file. A
-    * crash mid-commit leaves unharvested stage files (invisible — swept
-    * by [[sweepStages]]) or moved-but-unwatermarked files (the documented
-    * at-least-once window, healed by the reconcile scan).
+  /** The Spark plane's write: one job in which each task writes each of
+    * its ring partitions' rows to ONE hidden segment in the partition's
+    * leaf dir ([[SegmentWriter.writeParts]]); the driver checks the
+    * returned files against the batch count, re-fences, and publishes
+    * exactly those. On any failure it deletes the batch's hidden files
+    * (named by the batch prefix) in the touched dirs; a failed or
+    * speculative attempt's file is never returned and stays hidden until
+    * the retention sweep's aged-tmp rule. A crash between publish and
+    * watermark merge is the at-least-once window the reconcile heals.
     */
-  private def stageCommit(withOffsets: DataFrame, parts: Set[Int]): Unit = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    val stage = hpath(s"$root/_stage/produce-${java.util.UUID.randomUUID()}")
-    val fs = hfs(stage.toString)
-    def visible(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq
-      .filter { st => val n = st.getPath.getName; !n.startsWith("_") && !n.startsWith(".") }
-    def merge(from: FileStatus, to: Path): Unit =
-      if (from.isDirectory && fs.exists(to))
-        visible(from.getPath).foreach(c => merge(c, new Path(to, c.getPath.getName)))
-      else if (!fs.rename(from.getPath, to))
-        throw new java.io.IOException(
-          s"produce stage commit: rename ${from.getPath} -> $to failed")
+  private def writeSegments(
+      topic: String, g: Generation, withOffsets: DataFrame, counts: Map[Int, Long]): Unit = {
+    val dirs = counts.keys.map(p => p -> leafDir(topic, g, p)).toMap
+    val prefix = s"part-${java.util.UUID.randomUUID()}"
+    val conf = new org.apache.spark.sql.graft.GraftConfHolder(spark.sparkContext.hadoopConfiguration)
+    val fs = hfs(dataDir)
     try {
-      withOffsets.write.mode(SaveMode.Overwrite)
-        .partitionBy("topic", "token", "range", "version").parquet(stage.toString)
-      // re-fence AFTER the (possibly long) staged Spark write, right
-      // before the renames make its files visible: a lease taken over
-      // mid-write is caught here, so a paused producer cannot land data
-      // files a successor's heal has already offset-advanced past. The
-      // residual window is the merge itself — a few renames, the same
+      val written = withOffsets.queryExecution.toRdd
+        .mapPartitions(rows => SegmentWriter.writeParts(rows, dirs, prefix, conf.value))
+        .collect()
+      val byPart = written.groupBy(_._1).view.mapValues(_.map(_._3).toSeq).toMap
+      if (byPart != counts.map { case (p, n) => p -> Seq(n) })
+        throw new IllegalStateException(
+          s"produce: the write disagrees with the batch count per ring partition " +
+            s"(written ${byPart.toSeq.sortBy(_._1)}, counted ${counts.toSeq.sortBy(_._1)})")
+      // re-fence AFTER the (possibly long) Spark write, right before the
+      // renames make its files visible: a lease taken over mid-write is
+      // caught here, so a paused producer cannot land data files a
+      // successor's heal has already offset-advanced past. The residual
+      // window is the publish itself — one rename per file, the same
       // bounded TOCTOU the reference accepts between its coalescer's
-      // generation re-check and its segment write
-      // (`coalescer.go:93-135`); the watermark swap re-checks once more.
-      PlaneLease.assertCurrentAtCommit(lockRootKey, PlaneLease.ProduceAuthority(parts))
-      for (topicDir <- visible(stage); tokenDir <- visible(topicDir.getPath)) {
-        val logToken = new Path(
-          new Path(dataDir, topicDir.getPath.getName), tokenDir.getPath.getName)
-        fs.mkdirs(logToken)
-        visible(tokenDir.getPath).foreach(r => merge(r, new Path(logToken, r.getPath.getName)))
-      }
-    } finally { fs.delete(stage, true); () }
+      // generation re-check and its segment write (`coalescer.go:93-135`);
+      // the watermark swap re-checks once more.
+      PlaneLease.assertCurrentAtCommit(lockRootKey, PlaneLease.ProduceAuthority(counts.keySet))
+      written.foreach(w => SegmentWriter.publish(fs, hpath(w._2)))
+    } catch {
+      case e: Throwable =>
+        dirs.values.foreach { d =>
+          try fs.listStatus(hpath(d)).filter(_.getPath.getName.startsWith(s".$prefix-"))
+            .foreach(st => fs.delete(st.getPath, false))
+          catch {
+            case _: java.io.FileNotFoundException => ()
+            case c: Throwable => e.addSuppressed(c)
+          }
+        }
+        throw e
+    }
   }
+
+  /** Leaf dir of ring partition `p` of generation `g`. */
+  private def leafDir(topic: String, g: Generation, p: Int): String =
+    s"$dataDir/topic=${escapeDir(topic)}/token=${tokensOf(g)(p / rangesPerToken)}" +
+      s"/range=${p % rangesPerToken}/version=${g.version}"
 
   /** Broker-local produce for driver-resident batches — the hot ingest
     * path. The reference's coalescer writes segment files directly on
     * the broker (`internal/data/segment_writer.go:243-266` — no
     * distributed job between socket and fsync), and this is its Spark
     * twin: the serving coalescers already hold the rows on the driver,
-    * so routing, ordering, offset assignment, and the one-zstd-parquet-
-    * file-per-touched-partition write all happen driver-side under the
+    * so routing, ordering, offset assignment, and the one-segment-file-
+    * per-touched-partition write all happen driver-side under the
     * SAME shared-plane + per-partition-monitor locking as
     * [[produce]]. No Spark job runs at all (measured: the job
     * machinery costs ~1 s per flush REGARDLESS of size — the entire
@@ -668,12 +668,10 @@ class TopicStore(
     * codegen'd expressions evaluate; in-batch order replicates the
     * offset window's (timestamp, key, __seq, xxhash64(value)) ascending
     * with nulls first and Spark's UTF8String semantics (unsigned UTF-8
-    * byte comparison — NOT Java's UTF-16 order); the parquet schema
-    * (zstd, int64-micros timestamps, row-group stats for the poll's
-    * offset pruning) reads back through the same vectorized scan,
-    * compaction, purge, and reconcile paths as Spark-written files.
-    * Visibility is atomic per file (dot-prefixed write, then rename).
-    * Returns the number of records written.
+    * byte comparison — NOT Java's UTF-16 order); both planes write
+    * through [[SegmentWriter]], so the files are the same format and
+    * visibility is atomic per file. Returns the number of records
+    * written.
     *
     * Bulk produce (DataFrame sources: staged tables, streaming
     * micro-batches, the DSv2 writer) stays on the Spark plane — data
@@ -686,11 +684,10 @@ class TopicStore(
     rl.lock()
     try inServingPool {
       val g = generation(topic) // stable: the flip needs the exclusive plane
-      val toks = tokensOf(g)
       val byPart = rows.groupBy(r =>
         TokenRing.partitionOrdinal(localHash(r), g.clusterSize, rangesPerToken))
       withMonitors(partMonitors(topic, g, byPart.keys)) {
-        // entry authority + pre-data fence (see stagedProduce)
+        // entry authority + pre-data fence (see lockedProduce)
         PlaneLease.assertAuthority(lockRootKey,
           PlaneLease.ProduceAuthority(byPart.keySet))
         PlaneLease.assertCurrentAtCommit(lockRootKey,
@@ -699,6 +696,8 @@ class TopicStore(
         // touch of this (topic, generation) — serialized by its own
         // scoped lock, like every other produce plane
         val bases = producerBasesFor(topic, g)
+        val conf = SegmentWriter.conf(spark.sparkContext.hadoopConfiguration)
+        val fs = hfs(dataDir)
         // per-partition files are independent (disjoint dirs, disjoint
         // offset ranges) — write them in parallel on the shared local-
         // produce pool: a ring of 48 partitions otherwise pays 48
@@ -709,8 +708,14 @@ class TopicStore(
         val futs = byPart.toSeq.sortBy(_._1).map { case (p, rs) =>
           TopicStore.localWritePool.submit(new java.util.concurrent.Callable[Unit] {
             override def call(): Unit =
-              writeLocalPartFile(topic, toks(p / rangesPerToken), p % rangesPerToken,
-                g.version, p, bases.getOrElse(p, 0L), rs.sortWith(localLess).toIndexedSeq)
+              SegmentWriter.write(fs, hpath(s"${leafDir(topic, g, p)}/part-local-" +
+                  s"${java.util.UUID.randomUUID()}.zstd.parquet"), conf) { seg =>
+                val base = bases.getOrElse(p, 0L)
+                rs.sortWith(localLess).iterator.zipWithIndex.foreach { case (r, i) =>
+                  seg.append(if (r.key == null) null else Binary.fromString(r.key),
+                    Binary.fromConstantByteArray(r.value), r.tsMicros, p, base + i)
+                }
+              }
           })
         }
         futs.foreach(_.get())
@@ -753,114 +758,6 @@ class TopicStore(
       .hash(a.value, org.apache.spark.sql.types.BinaryType, 42L) <
       org.apache.spark.sql.catalyst.expressions.XxHash64Function
         .hash(b.value, org.apache.spark.sql.types.BinaryType, 42L)
-  }
-
-  // the data-file schema Spark's dynamic-partition write produces for the
-  // record envelope minus the partition-dir columns: key/value/timestamp
-  // payload plus (part, offset) — timestamps as int64 micros (UTC-
-  // adjusted), the layout the session writes and the vectorized reader
-  // scans
-  private val localFileSchema: org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    Types.buildMessage()
-      .addField(Types.optional(BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named("key"))
-      .addField(Types.optional(BINARY).named("value"))
-      .addField(Types.optional(INT64)
-        .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS))
-        .named("timestamp"))
-      .addField(Types.required(INT32).named("part"))
-      .addField(Types.required(INT64).named("offset"))
-      .named("record")
-  }
-
-  /** Write one partition's sorted slice of a local produce as a single
-    * zstd parquet file in its leaf dir: offsets `base..base+n-1` in slice
-    * order, dot-prefixed while being written, renamed into visibility
-    * (readers skip hidden files, so partition visibility is atomic —
-    * the same guarantee the Spark write's committer rename gives).
-    */
-  private def writeLocalPartFile(
-      topic: String, token: Long, range: Int, version: Int, part: Int,
-      base: Long, sorted: IndexedSeq[TopicStore.LocalRecord]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.io.api.Binary
-    val dir = s"$dataDir/topic=${escapeDir(topic)}/token=$token/range=$range/version=$version"
-    val fs = hfs(dir)
-    fs.mkdirs(hpath(dir))
-    val fin = new org.apache.hadoop.fs.Path(
-      hpath(dir), s"part-local-${java.util.UUID.randomUUID()}.zstd.parquet")
-    val tmp = new org.apache.hadoop.fs.Path(hpath(dir), s".${fin.getName}.tmp")
-    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
-    val gf = new SimpleGroupFactory(localFileSchema)
-    // The next write-side layer, measured but not removed here: on a host
-    // without libhadoop, RawLocalFileSystem sets each created file's
-    // permission by running `chmod` in a child process — twice per
-    // parquet file, counting the `.crc` sidecar. On a 4-core host that is
-    // ~3 ms per `chmod`, 5.9 of 12.7 ms per 64-row file in an isolated
-    // write micro-benchmark, and a 10 s ingest_wire run writes ~1,000
-    // such files. A null-permission create still forks; avoiding it
-    // needs a config knob or a second, file:-only write path.
-    val w = ExampleParquetWriter.builder(tmp).withConf(conf)
-      .withType(localFileSchema)
-      .withCompressionCodec(CompressionCodecName.ZSTD)
-      .build()
-    try {
-      var i = 0
-      while (i < sorted.length) {
-        val r = sorted(i)
-        val grp = gf.newGroup()
-        if (r.key != null) grp.append("key", r.key)
-        grp.append("value", Binary.fromConstantByteArray(r.value))
-          .append("timestamp", r.tsMicros)
-          .append("part", part)
-          .append("offset", base + i)
-        w.write(grp)
-        i += 1
-      }
-    } finally w.close()
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"produceLocal: rename $tmp -> $fin failed")
-  }
-
-  /** Reclaim orphaned produce staging directories (a produce that
-    * crashed between its stage write and the merge into the log). Age-gated
-    * so an in-flight produce's live staging is never touched; the
-    * retention sweeper calls this each tick. Returns directories removed.
-    */
-  def sweepStages(maxAgeMs: Long = 60L * 60 * 1000): Int = {
-    ensurePlaneOwnedRoot() // stage deletes mutate the produce plane
-    val stageRoot = s"$root/_stage"
-    if (!pathExists(stageRoot)) return 0
-    val fs = hfs(stageRoot)
-    val cutoff = System.currentTimeMillis() - maxAgeMs
-    // age = the NEWEST mtime anywhere under the stage dir, not the dir's
-    // own: a still-running flush keeps writing task files under the
-    // Spark job's _temporary subtree without touching the top-level
-    // dir's mtime on most filesystems, so a dir-mtime gate would delete
-    // a LIVE staging out from under a flush that merely runs longer
-    // than maxAgeMs (half-renamed commit -> duplicate records on the
-    // client's retry). Stage dirs are few and shallow; the walk is cheap.
-    def newestMtime(p: org.apache.hadoop.fs.Path, own: Long): Long = {
-      val children =
-        try fs.listStatus(p)
-        catch { case _: java.io.FileNotFoundException => return own } // raced its own commit
-      children.foldLeft(own) { (mx, c) =>
-        val m = math.max(mx, c.getModificationTime)
-        if (c.isDirectory) math.max(m, newestMtime(c.getPath, m)) else m
-      }
-    }
-    var n = 0
-    fs.listStatus(hpath(stageRoot)).foreach { st =>
-      if (st.getModificationTime < cutoff &&
-          newestMtime(st.getPath, st.getModificationTime) < cutoff) {
-        if (fs.delete(st.getPath, true)) n += 1
-      }
-    }
-    n
   }
 
   /** Convenience: string-valued records. */
@@ -1968,42 +1865,47 @@ class TopicStore(
     * conservatively kept.
     */
   def retentionSweep(topic: String, cutoff: java.sql.Timestamp): Int = withTopicMaintenance(topic) {
-    val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
-    val fs = hfs(topicPath.toString)
-    if (!fs.exists(topicPath)) return 0
     val cutoffMicros = cutoff.getTime * 1000L + (cutoff.getNanos % 1000000) / 1000L
     val conf = spark.sparkContext.hadoopConfiguration
-    val leafDirs = fs.listStatus(topicPath).filter(_.isDirectory)
-      .flatMap(t => fs.listStatus(t.getPath).filter(_.isDirectory))
-      .flatMap(r => fs.listStatus(r.getPath).filter(_.isDirectory))
-    val futs = leafDirs.toSeq.map { dir =>
-      TopicStore.localWritePool.submit(new java.util.concurrent.Callable[Int] {
-        override def call(): Int = {
-          var deleted = 0
-          val now = System.currentTimeMillis()
-          fs.listStatus(dir.getPath).foreach { f =>
-            val n = f.getPath.getName
-            if (f.isFile && n.endsWith(".parquet") && !n.startsWith(".")) {
-              TopicStore.int64StatsOf(f, conf, "timestamp") match {
-                case Some((_, mx)) if mx < cutoffMicros =>
-                  if (fs.delete(f.getPath, false)) deleted += 1
-                case _ => () // no stats -> keep (never expire blind)
-              }
-            } else if (f.isFile && n.startsWith(".") && n.endsWith(".tmp") &&
-                f.getModificationTime < now - 3600000L) {
-              // orphaned dot-tmp from a crashed compact/purge/local-produce
-              // writer: invisible to every reader and to the small-file
-              // filters, so nothing else ever reclaims it. The 1 h age
-              // gate keeps a live writer's in-flight tmp safe (its write
-              // completes in seconds; maintenance holds the write lock)
+    val fs = hfs(dataDir)
+    inLeafDirs(topic) { dir =>
+      var deleted = 0
+      val now = System.currentTimeMillis()
+      fs.listStatus(dir).foreach { f =>
+        val n = f.getPath.getName
+        if (f.isFile && n.endsWith(".parquet") && !n.startsWith(".")) {
+          TopicStore.int64StatsOf(f, conf, "timestamp") match {
+            case Some((_, mx)) if mx < cutoffMicros =>
               if (fs.delete(f.getPath, false)) deleted += 1
-            }
+            case _ => () // no stats -> keep (never expire blind)
           }
-          deleted
+        } else if (f.isFile && n.startsWith(".") && n.endsWith(".tmp") &&
+            f.getModificationTime < now - 3600000L) {
+          // orphaned hidden segment of a crashed writer (either produce
+          // plane, a failed or speculative task attempt, compact, purge):
+          // invisible to every reader, so nothing else ever reclaims it.
+          // The 1 h age gate keeps a live writer's in-flight file safe
+          if (fs.delete(f.getPath, false)) deleted += 1
         }
-      })
-    }
-    futs.map(_.get()).sum
+      }
+      deleted
+    }.sum
+  }
+
+  /** `f` over every leaf dir (`token=/range=/version=`) of `topic`, in
+    * parallel on the local-IO pool — maintenance is driver-side
+    * per-dir work, never a Spark job per dir.
+    */
+  private def inLeafDirs[T](topic: String)(f: org.apache.hadoop.fs.Path => T): Seq[T] = {
+    val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
+    val fs = hfs(topicPath.toString)
+    if (!fs.exists(topicPath)) return Seq.empty
+    def subdirs(ps: Seq[org.apache.hadoop.fs.Path]) =
+      ps.flatMap(p => fs.listStatus(p).filter(_.isDirectory).map(_.getPath))
+    subdirs(subdirs(subdirs(Seq(topicPath)))).map(dir =>
+      TopicStore.localWritePool.submit(new java.util.concurrent.Callable[T] {
+        override def call(): T = f(dir)
+      })).map(_.get())
   }
 
   /** Compaction sweep: per (token, range) partition dir, rewrite parquet
@@ -2017,28 +1919,14 @@ class TopicStore(
     * that must not run concurrently with writers to the same topic.
     * Returns the number of small files replaced.
     */
-  def compact(topic: String, smallFileBytes: Long = 128L * 1024 * 1024): Int = withTopicMaintenance(topic) {
-    import org.apache.hadoop.fs.Path
-    val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
-    val fs = hfs(topicPath.toString)
-    if (!fs.exists(topicPath)) return 0
-    // leaf dirs are topic=/token=/range=/version=; dirs compact in
-    // parallel on the local-IO pool — each merge is a DRIVER-SIDE k-way
-    // merge by offset over the small files (every topic data file is
-    // internally offset-sorted by both produce planes), O(k) memory, no
-    // Spark job: the old coalesce(1)-read-write paid a ~1 s job PER
-    // LEAF DIR, which made a routine compaction of a 48-partition topic
-    // cost ~48 jobs of scheduling floor
-    val rangeDirs = fs.listStatus(topicPath).filter(_.isDirectory)
-      .flatMap(t => fs.listStatus(t.getPath).filter(_.isDirectory))
-      .flatMap(r => fs.listStatus(r.getPath).filter(_.isDirectory))
-    val futs = rangeDirs.toSeq.map { dir =>
-      TopicStore.localWritePool.submit(new java.util.concurrent.Callable[Int] {
-        override def call(): Int = compactDir(dir.getPath, smallFileBytes)
-      })
+  def compact(topic: String, smallFileBytes: Long = 128L * 1024 * 1024): Int =
+    withTopicMaintenance(topic) {
+      // each merge is a DRIVER-SIDE k-way merge by offset over the small
+      // files (every segment is offset-sorted), O(k) memory, no Spark
+      // job: the old coalesce(1)-read-write paid a ~1 s job PER LEAF DIR,
+      // ~48 jobs of scheduling floor for a 48-partition topic
+      inLeafDirs(topic)(compactDir(_, smallFileBytes)).sum
     }
-    futs.map(_.get()).sum
-  }
 
   /** Merge one leaf dir's small files into a single offset-sorted zstd
     * file, driver-side. Loud-failure swap discipline (same as the
@@ -2051,26 +1939,16 @@ class TopicStore(
     */
   private def compactDir(dirPath: org.apache.hadoop.fs.Path, smallFileBytes: Long): Int = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.io.api.Binary
     val fs = hfs(dirPath.toString)
     val small = fs.listStatus(dirPath).filter { f =>
       f.isFile && f.getPath.getName.endsWith(".parquet") && f.getLen < smallFileBytes
     }
     if (small.length < 2) return 0
-    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    val conf = SegmentWriter.conf(spark.sparkContext.hadoopConfiguration)
     val fin = new Path(dirPath, s"compacted-${System.nanoTime()}-0.parquet")
-    val tmp = new Path(dirPath, s".${fin.getName}.tmp")
-    val gf = new SimpleGroupFactory(localFileSchema)
     val readers = small.map(f => TopicStore.groupReader(f.getPath, conf).build())
     try {
-      val w = ExampleParquetWriter.builder(tmp).withConf(conf)
-        .withType(localFileSchema)
-        .withCompressionCodec(CompressionCodecName.ZSTD)
-        .build()
-      try {
+      SegmentWriter.write(fs, fin, conf) { seg =>
         // k-way merge on (offset): heads ordered in a priority queue
         val heads = new java.util.PriorityQueue[(Long, Int)](
           math.max(1, readers.length),
@@ -2084,13 +1962,11 @@ class TopicStore(
         readers.indices.foreach(advance)
         while (!heads.isEmpty) {
           val (_, i) = heads.poll()
-          w.write(copyRecordGroup(gf, current(i)))
+          seg.copy(current(i))
           advance(i)
         }
-      } finally w.close()
+      }
     } finally readers.foreach(r => try r.close() catch { case _: Exception => () })
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"compact: rename $tmp -> $fin failed")
     small.foreach { f =>
       if (!fs.delete(f.getPath, false))
         throw new java.io.IOException(s"compact: could not delete ${f.getPath}")
@@ -2164,11 +2040,9 @@ class TopicStore(
   def topicStats(topic: String): Seq[(Int, Int, Long, Long, Long)] =
     withTopicReads(topic) {
       generations(topic).flatMap { g =>
-        val toks = tokensOf(g)
         val hw = producerOffsetsFor(topic, g)
         (0 until partsOf(g)).map { p =>
-          val dir = s"$dataDir/topic=${escapeDir(topic)}/token=${toks(p / rangesPerToken)}" +
-            s"/range=${p % rangesPerToken}/version=${g.version}"
+          val dir = leafDir(topic, g, p)
           val (files, bytes) =
             if (pathExists(dir)) {
               val st = hfs(dir).listStatus(hpath(dir))
@@ -2226,19 +2100,12 @@ class TopicStore(
   def purgeKeys(topic: String, keys: Seq[String]): Long = withTopicMaintenance(topic) {
     require(keys.nonEmpty, "purgeKeys: empty forget list")
     val live = generations(topic).map(g => s"version=${g.version}").toSet
-    val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
-    val fs = hfs(topicPath.toString)
-    if (!fs.exists(topicPath)) return 0L
     val keySet = keys.toSet
-    val leafDirs = fs.listStatus(topicPath).filter(_.isDirectory)
-      .flatMap(t => fs.listStatus(t.getPath).filter(_.isDirectory))
-      .flatMap(r => fs.listStatus(r.getPath).filter(_.isDirectory))
-      // every LIVE generation: after a metadata-only rescale the
-      // forgotten key's records live in ancestor generations too — a
-      // current-generation-only erasure would keep serving them.
-      // Non-live version dirs are reclaimed wholesale by
-      // sweepStaleGenerations, not rewritten record-by-record.
-      .filter(d => live.contains(d.getPath.getName))
+    // every LIVE generation: after a metadata-only rescale the forgotten
+    // key's records live in ancestor generations too — a current-
+    // generation-only erasure would keep serving them. Non-live version
+    // dirs are reclaimed wholesale by sweepStaleGenerations, not
+    // rewritten record-by-record.
     // FILE-granular, driver-side, dirs in parallel on the local-IO pool:
     // a cheap key-projection pass finds the files that actually contain
     // a forget key (only the key column's pages are read), and only
@@ -2246,12 +2113,7 @@ class TopicStore(
     // per leaf dir (count + coalesce(1) rewrite of the WHOLE dir),
     // ~100 s of job-scheduling floor for one key on a 48-partition
     // topic, and rewrote untouched files alongside the guilty ones.
-    val futs = leafDirs.toSeq.map { dir =>
-      TopicStore.localWritePool.submit(new java.util.concurrent.Callable[Long] {
-        override def call(): Long = purgeDir(dir.getPath, keySet)
-      })
-    }
-    futs.map(_.get()).sum
+    inLeafDirs(topic)(dir => if (live.contains(dir.getName)) purgeDir(dir, keySet) else 0L).sum
   }
 
   /** Erase `keySet`'s records from one leaf dir, file-granular: probe
@@ -2266,11 +2128,8 @@ class TopicStore(
     */
   private def purgeDir(dirPath: org.apache.hadoop.fs.Path, keySet: Set[String]): Long = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
     val fs = hfs(dirPath.toString)
-    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    val conf = SegmentWriter.conf(spark.sparkContext.hadoopConfiguration)
     // key-only projection for the probe pass: only the key column's
     // pages are decoded
     val probeConf = new org.apache.hadoop.conf.Configuration(conf)
@@ -2280,20 +2139,16 @@ class TopicStore(
       val n = f.getPath.getName
       f.isFile && n.endsWith(".parquet") && !n.startsWith(".")
     }
+    def isHit(g: org.apache.parquet.example.data.Group) =
+      g.getFieldRepetitionCount("key") > 0 && keySet.contains(g.getString("key", 0))
+    def records(r: org.apache.parquet.hadoop.ParquetReader[org.apache.parquet.example.data.Group]) =
+      Iterator.continually(r.read()).takeWhile(_ != null)
     var purged = 0L
     files.foreach { f =>
-      var hits = 0L
-      var survivors = 0L
-      locally {
+      val (hits, survivors) = {
         val r = TopicStore.groupReader(f.getPath, probeConf).build()
-        try {
-          var g = r.read()
-          while (g != null) {
-            val isHit = g.getFieldRepetitionCount("key") > 0 &&
-              keySet.contains(g.getString("key", 0))
-            if (isHit) hits += 1 else survivors += 1
-            g = r.read()
-          }
+        try records(r).foldLeft((0L, 0L)) { case ((h, s), g) =>
+          if (isHit(g)) (h + 1, s) else (h, s + 1)
         } finally r.close()
       }
       if (hits > 0 && survivors == 0) {
@@ -2302,26 +2157,9 @@ class TopicStore(
         purged += hits
       } else if (hits > 0) {
         val fin = new Path(dirPath, s"purged-${System.nanoTime()}-0.parquet")
-        val tmp = new Path(dirPath, s".${fin.getName}.tmp")
-        val gf = new SimpleGroupFactory(localFileSchema)
         val r = TopicStore.groupReader(f.getPath, conf).build()
-        try {
-          val w = ExampleParquetWriter.builder(tmp).withConf(conf)
-            .withType(localFileSchema)
-            .withCompressionCodec(CompressionCodecName.ZSTD)
-            .build()
-          try {
-            var g = r.read()
-            while (g != null) {
-              val isHit = g.getFieldRepetitionCount("key") > 0 &&
-                keySet.contains(g.getString("key", 0))
-              if (!isHit) w.write(copyRecordGroup(gf, g))
-              g = r.read()
-            }
-          } finally w.close()
-        } finally r.close()
-        if (!fs.rename(tmp, fin))
-          throw new java.io.IOException(s"purgeKeys: rename $tmp -> $fin failed")
+        try SegmentWriter.write(fs, fin, conf)(seg => records(r).filterNot(isHit).foreach(seg.copy))
+        finally r.close()
         if (!fs.delete(f.getPath, false))
           throw new java.io.IOException(s"purgeKeys: could not delete ${f.getPath}")
         purged += hits
@@ -2350,25 +2188,6 @@ class TopicStore(
       }
       mx
     } finally r.close()
-  }
-
-  /** Copy one record-envelope Group (either file flavor) into the local
-    * writer schema, field presence preserved.
-    */
-  private def copyRecordGroup(
-      gf: org.apache.parquet.example.data.simple.SimpleGroupFactory,
-      g: org.apache.parquet.example.data.Group): org.apache.parquet.example.data.Group = {
-    import org.apache.parquet.io.api.Binary
-    val out = gf.newGroup()
-    if (g.getFieldRepetitionCount("key") > 0)
-      out.append("key", g.getString("key", 0))
-    if (g.getFieldRepetitionCount("value") > 0)
-      out.append("value", Binary.fromConstantByteArray(g.getBinary("value", 0).getBytes))
-    if (g.getFieldRepetitionCount("timestamp") > 0)
-      out.append("timestamp", g.getLong("timestamp", 0))
-    out.append("part", g.getInteger("part", 0))
-      .append("offset", g.getLong("offset", 0))
-    out
   }
 
   /** Elastic rescale (C3 range split / C4 range join): open the topic's
@@ -2723,12 +2542,11 @@ class TopicStore(
       // permissions change) is now visible on /metrics
       var maxDepth = 0L
       try {
-        // the sweeper mutates (stage deletes, compaction, reclaim): a
+        // the sweeper mutates (retention deletes, compaction, reclaim): a
         // NON-owner's sweeper is rejected loudly here like every other
-        // mutating path, instead of deleting _stage dirs under the
-        // owner's feet — the rejection lands in sweepFailures below
+        // mutating path, instead of deleting files under the owner's
+        // feet — the rejection lands in sweepFailures below
         ensurePlaneOwnedRoot()
-        sweepStages() // orphaned concurrent-produce staging (age-gated)
         if (pathExists(dataDir)) {
           hfs(dataDir).listStatus(hpath(dataDir)).filter(_.isDirectory).foreach { dir =>
             val name = dir.getPath.getName
@@ -2921,7 +2739,6 @@ class TopicStore(
       rows: Seq[org.apache.parquet.example.data.Group],
       fence: PlaneLease.Authority = PlaneLease.RootAuthority): Unit = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
     val fs = hfs(p)
     val dirPath = hpath(p)
     fs.mkdirs(dirPath)
@@ -2960,10 +2777,9 @@ class TopicStore(
     val fin = new Path(dirPath,
       f"part-$stamp%019d-e${PlaneLease.commitEpoch(lockRootKey)}%012d-" +
         s"${java.util.UUID.randomUUID()}.parquet")
-    val tmp = new Path(dirPath, s".${fin.getName}.tmp")
-    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
-    // pays writeLocalPartFile's two `chmod` forks per create (see there)
-    val w = ExampleParquetWriter.builder(tmp).withConf(conf).withType(schema).build()
+    val tmp = SegmentWriter.hidden(fin)
+    val w = SegmentWriter.groupWriter(tmp,
+      schema, SegmentWriter.conf(spark.sparkContext.hadoopConfiguration))
     try rows.foreach(w.write) finally w.close()
     // PER-WRITE epoch fence at the commit point (the reference's
     // per-group generation re-check, `coalescer.go:93-106`): a paused
@@ -2973,8 +2789,7 @@ class TopicStore(
     // producer watermarks carry the touched partitions, group/registry
     // tables the consumer plane, everything else root.
     PlaneLease.assertCurrentAtCommit(lockRootKey, fence)
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"meta swap: rename $tmp -> $fin failed")
+    SegmentWriter.publish(fs, tmp)
     // FILES only: a producer-offsets scope may also hold lane-* DIRS
     // (partition-scoped writers' watermark sub-tables) — those are not
     // part of this swap; writeProducerOffsets folds them deliberately

@@ -158,8 +158,8 @@ class GraftTable(root: String, topic: String, maxRecordsPerTrigger: Option[Long]
     * doesn't have. So the write goes through Spark's V1 fallback
     * (`V1Write` → `InsertableRelation`) straight into the engine's
     * produce plan: one shuffle to the ring partitioning, one offset
-    * window, one partitioned zstd parquet append, watermark commit —
-    * the exact plan every other produce surface uses.
+    * window, one segment file per touched ring partition, watermark
+    * commit — the exact plan every other produce surface uses.
     *
     * `ACCEPT_ANY_SCHEMA`: producers write the *producer* shape
     * (`key`, `value`, optional `timestamp`), not the full 9-column record
@@ -518,9 +518,13 @@ class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader[Inter
           else try g.getLong("timestamp", 0)
           catch { case _: ClassCastException | _: UnsupportedOperationException =>
             throw new IllegalStateException(
-              s"${p.file.path}: timestamp is not INT64 micros — the file " +
-                "predates the TIMESTAMP_MICROS store format (INT96); " +
-                "rewrite the topic (compact) with a current session")
+              s"${p.file.path}: timestamp is INT96, not the store's INT64 micros — " +
+                "written by the Spark produce plane of an older engine, which took " +
+                "its timestamp encoding from the calling session (INT96 is Spark's " +
+                "default outside Graft.configure). Compaction cannot rewrite it " +
+                "(it reads timestamps as INT64 too): read the leaf dirs with " +
+                "spark.read.parquet, which decodes INT96, and produce the records " +
+                "into a new topic")
           }
         row = new GenericInternalRow(Array[Any](
           if (field("key")) UTF8String.fromString(g.getString("key", 0)) else null,

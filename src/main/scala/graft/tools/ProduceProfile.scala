@@ -8,7 +8,7 @@ import graft.Graft
 /** Stage-level attribution of one real `TopicStore.produce` of the bench
   * message shape (2M x 1 KiB keyed): shows whether time goes to the scan,
   * the routing shuffle, the offset-window sort, the count job, or the
-  * dynamic-partition parquet write.
+  * task-side segment write.
   */
 object ProduceProfile {
   def main(args: Array[String]): Unit = {
@@ -27,7 +27,7 @@ object ProduceProfile {
     val root = java.nio.file.Files.createTempDirectory("produce-profile").toString
     val store = new graft.engine.TopicStore(spark, root, clusterSize = 12)
     val msgs = BenchData.messages(spark, sfDir, n)
-    val stage = s"$root/_stage"
+    val stage = s"$root/input"
     msgs.repartition(32).write.mode("overwrite").parquet(stage)
     val staged = spark.read.parquet(stage)
 

@@ -26,7 +26,7 @@ object StreamProfile {
     val root = java.nio.file.Files.createTempDirectory("stream-profile").toString
     val store = new graft.engine.TopicStore(spark, root, clusterSize = 12)
     val msgs = BenchData.messages(spark, sfDir, n)
-    val stage = s"$root/_stage"
+    val stage = s"$root/input"
     msgs.repartition(32).write.mode("overwrite").parquet(stage)
     val staged = spark.read.parquet(stage)
 

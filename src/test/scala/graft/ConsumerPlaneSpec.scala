@@ -73,7 +73,6 @@ class ConsumerPlaneSpec extends AnyFunSuite {
         store.produceLocal("t", Seq(TopicStore.LocalRecord("k", Array[Byte](1), 1L, 0L)))
       }
       intercept[PlaneLeaseHeldException] { store.compact("t") }
-      intercept[PlaneLeaseHeldException] { store.sweepStages() }
     }
     PlaneLease.dropForTests(rootKeyOf(root))
   }

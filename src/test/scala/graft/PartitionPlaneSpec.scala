@@ -139,7 +139,6 @@ class PartitionPlaneSpec extends AnyFunSuite {
       }
       assert(reg.getMessage.contains("root-authority"), reg.getMessage)
       intercept[PlaneLeaseHeldException] { store.compact("t") }
-      intercept[PlaneLeaseHeldException] { store.sweepStages() }
     }
     PlaneLease.dropForTests(rootKeyOf(root))
   }

@@ -5,7 +5,11 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -69,6 +73,31 @@ object CondCreateFs {
   val builderCalls = new java.util.concurrent.atomic.AtomicLong
 }
 
+/** A local filesystem that runs a one-shot hook when a hidden segment file
+  * is created in a log leaf dir (`.../version=N/.<name>.tmp`): the
+  * crash-window test plants a usurper's lease from inside the produce's
+  * write task, after the pre-data fence and before the post-write one.
+  */
+class SegmentHookFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("mockseg:///")
+  private def hook(p: Path): Unit =
+    if (p.getName.endsWith(".tmp") && p.getParent.getName.startsWith("version="))
+      SegmentHookFs.onSegment.getAndSet(None).foreach(_())
+  override def create(p: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    hook(p)
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(p: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    hook(p)
+    super.create(p, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+object SegmentHookFs {
+  val onSegment = new java.util.concurrent.atomic.AtomicReference[Option[() => Unit]](None)
+}
+
 /** Per-WRITE epoch fencing (the commit-point re-check closing the
   * heartbeat-granular dual-writer window), owner-recorded TTL semantics,
   * and the heartbeat-uses-acquisition-Configuration fix — the r9 judge's
@@ -119,6 +148,45 @@ class PlaneFenceSpec extends AnyFunSuite {
       store.produceStrings("t", Seq(("k", "v3", ts(2))))
     }
     PlaneLease.dropForTests(rootKeyOf(root))
+  }
+
+  test("a Spark produce fenced after its tasks wrote leaves no data file, no watermark, no hidden file") {
+    val tmp = Files.createTempDirectory("graft-segfence").toString
+    val root = "mockseg:" + tmp
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.mockseg.impl", classOf[SegmentHookFs].getName)
+    hc.setBoolean("fs.mockseg.impl.disable.cache", true)
+    val store = new TopicStore(spark, root)
+    store.produceStrings("t", Seq(("k", "v", ts(0)))) // epoch 1, one published file
+    def files(p: java.io.File => Boolean): Set[String] = {
+      val walk = Files.walk(java.nio.file.Paths.get(tmp, "data"))
+      try walk.iterator().asScala.map(_.toFile).filter(f => f.isFile && p(f))
+        .map(_.getPath).toSet
+      finally walk.close()
+    }
+    def visible = files(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+    def hidden = files(_.getName.startsWith("."))
+    val before = visible
+    assert(before.size == 1)
+    // the usurper appears while the write task creates its segment: the
+    // pre-data fence has passed, the post-write fence must catch it
+    SegmentHookFs.onSegment.set(Some(() => {
+      writeForeignLease(tmp, 2L, "usurper@elsewhere\nttl=60000"); ()
+    }))
+    try {
+      intercept[PlaneFencedException] {
+        store.produceStrings("t", Seq(("k", "v2", ts(1)), ("j", "w", ts(2))))
+      }
+      assert(SegmentHookFs.onSegment.get.isEmpty, "no task created a segment file")
+      assert(visible == before, "a fenced produce published a data file")
+      assert(hidden.isEmpty, s"the driver left hidden files: $hidden")
+      TopicStore.dropCachesForTests(root, hc)
+      assert(store.persistedProducerOffsets("t").values.sum == 1L,
+        "a fenced produce moved the watermark")
+    } finally {
+      SegmentHookFs.onSegment.set(None)
+      PlaneLease.dropForTests(TopicStore.normalizeRoot(root, hc))
+    }
   }
 
   test("real cross-process takeover: the prior owner's next commit is rejected") {

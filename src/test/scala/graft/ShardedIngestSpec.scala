@@ -8,6 +8,8 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.Executors
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,9 +18,9 @@ import graft.engine.TopicStore
 import graft.serving.BrokerGroup
 
 /** The horizontal ingest plane: `TopicStore.produce` (shared plane +
-  * per-ring-partition monitors + stage-merge commit) and the
-  * [[BrokerGroup]] serving front that routes produce over N brokers —
-  * the repo's analog of the reference's N-broker produce path
+  * per-ring-partition monitors + task-written, driver-published segment
+  * files) and the [[BrokerGroup]] serving front that routes produce over
+  * N brokers — the repo's analog of the reference's N-broker produce path
   * (`internal/discovery/discoverer_client_service.go:30-124`). Every
   * test's oracle is the engine's own delivery contract: exactly-once,
   * per-key produce order, contiguous unique (version, part, offset).
@@ -66,6 +68,18 @@ class ShardedIngestSpec extends AnyFunSuite {
       .mapValues(_.map(_.getAs[String]("v")).toVector).toMap
   }
 
+  /** Hidden (in-flight or orphaned) segment files under the log. */
+  private def hiddenFiles(store: TopicStore): Seq[String] = {
+    val data = java.nio.file.Paths.get(store.dataDir)
+    if (!Files.exists(data)) Seq.empty
+    else {
+      val walk = Files.walk(data)
+      try walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(".") && n.endsWith(".tmp")).toList
+      finally walk.close()
+    }
+  }
+
   private def runThreads(n: Int)(body: Int => Unit): Unit = {
     val pool = Executors.newFixedThreadPool(n)
     val futs = (0 until n).map(tid => pool.submit(new Runnable {
@@ -106,9 +120,8 @@ class ShardedIngestSpec extends AnyFunSuite {
     }
     // watermarks account for every record
     assert(store.producerOffsets(topic).values.sum == total.toLong)
-    // no staging left behind
-    assert(!Files.exists(java.nio.file.Paths.get(s"${store.root}/_stage")) ||
-      new java.io.File(s"${store.root}/_stage").list().isEmpty)
+    // every segment published: none left hidden
+    assert(hiddenFiles(store).isEmpty, hiddenFiles(store).mkString("\n"))
   }
 
   test("produceConcurrent racing rescale: exactly once across the flip") {
@@ -258,16 +271,27 @@ class ShardedIngestSpec extends AnyFunSuite {
     } finally sock.close()
   }
 
-  test("sweepStages reclaims aged orphans and produceConcurrent cleans up") {
-    val store = new TopicStore(spark, Files.createTempDirectory("graft-stage").toString)
+  test("produce leaves no hidden segment; retentionSweep reclaims an aged orphan") {
+    val store = new TopicStore(spark, Files.createTempDirectory("graft-orphan").toString)
     concurrentStrings(store, "t", Seq(("a", "a#0", ts(1)), ("b", "b#0", ts(2))))
-    val stage = new java.io.File(s"${store.root}/_stage")
-    assert(!stage.exists() || stage.list().isEmpty, "produce left staging behind")
-    // a crashed produce's orphan: swept only once aged out
-    val orphan = new java.io.File(stage, "produce-orphan")
-    assert(orphan.mkdirs())
-    assert(store.sweepStages() == 0, "fresh staging must survive the age gate")
-    assert(store.sweepStages(maxAgeMs = -1000) == 1)
-    assert(!orphan.exists())
+    assert(hiddenFiles(store).isEmpty, "produce left a hidden segment behind")
+    // a crashed writer's orphans in a leaf dir (a task attempt that died
+    // after its create): reclaimed only once aged past the 1 h gate
+    val leaf = {
+      val walk = Files.walk(java.nio.file.Paths.get(store.dataDir))
+      try walk.iterator().asScala.find(_.getFileName.toString.startsWith("version=")).get.toFile
+      finally walk.close()
+    }
+    def orphan(name: String, ageMs: Long): java.io.File = {
+      val f = new java.io.File(leaf, s".part-$name.zstd.parquet.tmp")
+      Files.write(f.toPath, Array[Byte](1, 2, 3))
+      assert(f.setLastModified(System.currentTimeMillis() - ageMs))
+      f
+    }
+    val aged = orphan("aged", 2L * 3600 * 1000)
+    val fresh = orphan("fresh", 0L)
+    assert(store.retentionSweep("t", new Timestamp(0L)) == 1)
+    assert(!aged.exists() && fresh.exists())
+    assert(drainByKey(store, "t", "g") == Map("a" -> Vector("a#0"), "b" -> Vector("b#0")))
   }
 }

@@ -64,6 +64,28 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 
+  test("engine parquet writes go through SegmentWriter, which owns the topic file format") {
+    // any other writer picks its own codec and timestamp encoding: a
+    // DataFrame write takes both from the calling session, and an INT96
+    // segment is one the store's own readers reject
+    val offenders = mainSources
+      .filter { case (file, _) =>
+        file.contains("graft/engine/") && !file.endsWith("engine/SegmentWriter.scala")
+      }
+      .flatMap { case (file, text) =>
+        val builders = raw"\bExampleParquetWriter\b|\bParquetWriter\s*\.\s*Builder\b".r
+          .findAllMatchIn(text).map(m => lineOf(file, text, m.start) + " " + m.matched)
+        // a DataFrame `.parquet(` whose nearest preceding `.read`/`.write`
+        // is a write
+        val frameWrites = raw"\.\s*parquet\s*\(".r.findAllMatchIn(text).filter { m =>
+          raw"\.\s*(read|write)\b".r.findAllMatchIn(text.substring(0, m.start))
+            .map(_.group(1)).toSeq.lastOption.contains("write")
+        }.map(m => lineOf(file, text, m.start) + " DataFrame .parquet( write")
+        builders ++ frameWrites
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
   test("TopicStore walks directories with listStatus, never a recursive listFiles") {
     // `FileSystem.listFiles` builds a LocatedFileStatus per file; on a
     // local filesystem without libhadoop each one loads its permissions in
