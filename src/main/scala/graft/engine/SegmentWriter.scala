@@ -1,15 +1,16 @@
 package graft.engine
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageType
+import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType}
 import org.apache.spark.sql.catalyst.InternalRow
 
 /** The store's one parquet writer, like the reference's one segment
@@ -78,6 +79,31 @@ object SegmentWriter {
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.ZSTD)
       .build()
+
+  /** Whether segment `st` stores `timestamp` as INT64, this writer's
+    * encoding, by its footer. An older engine's Spark produce plane took
+    * the encoding from the calling session and wrote INT96 from sessions
+    * without `Graft.configure`; [[Segment.copy]] cannot rewrite those.
+    */
+  def int64Timestamps(st: FileStatus, conf: Configuration): Boolean = {
+    val rd = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, conf), HadoopReadOptions.builder(conf).build())
+    try {
+      val s: GroupType = rd.getFooter.getFileMetaData.getSchema
+      s.containsField("timestamp") && s.getType("timestamp").isPrimitive &&
+        s.getType("timestamp").asPrimitiveType.getPrimitiveTypeName ==
+          PrimitiveType.PrimitiveTypeName.INT64
+    } finally rd.close()
+  }
+
+  /** What a reader or rewriter meeting a legacy INT96 segment reports. */
+  def legacyInt96(file: String): String =
+    s"$file: timestamp is INT96, not the store's INT64 micros — written by the " +
+      "Spark produce plane of an older engine, which took its timestamp encoding " +
+      "from the calling session (INT96 is Spark's default outside Graft.configure). " +
+      "Compaction leaves such files out of its merges and purge cannot rewrite " +
+      "them: read the leaf dirs with spark.read.parquet, which decodes INT96, and " +
+      "produce the records into a new topic"
 
   /** One segment file being written under its hidden name. */
   final class Segment private[SegmentWriter] (val hiddenPath: Path, conf: Configuration) {

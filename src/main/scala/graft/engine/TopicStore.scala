@@ -104,7 +104,10 @@ class TopicStore(
     val done = readOffsets(streamMeta, scope).getOrElse(0, Long.MinValue)
     if (batchId <= done) return 0L
     produce(topic, records)
-    writeOffsets(streamMeta, scope, Map(0 -> batchId))
+    // the ledger has no lanes: a plain swap of its one-row table
+    val p = s"$streamMeta/$scope"
+    meta.swap(p, MetaTable.Offsets, Seq(0 -> batchId))
+    offsetCache.put(metaCacheKey(p), Map(0 -> batchId))
     producerOffsets(topic).values.sum
   }
 
@@ -137,10 +140,6 @@ class TopicStore(
     * rewrote all ancestor data into the current generation. Cached
     * write-through.
     */
-  private val generationSchema =
-    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message generation { required int32 version; required int32 cluster_size; }")
-
   def generations(topic: String): Seq[Generation] = genRows(topic).filter(_.clusterSize > 0)
 
   /** Versions dropped from the chain as record-free-and-state-free
@@ -159,64 +158,22 @@ class TopicStore(
   def droppedEmptyVersions(topic: String): Set[Int] =
     genRows(topic).filter(_.clusterSize == 0).map(_.version).toSet
 
-  private def genRows(topic: String): Seq[Generation] = {
-    val dirKey = scopeDir(topic)
+  private def genRows(topic: String): Seq[Generation] =
     genCache.computeIfAbsent(genCacheKey(topic), _ => {
-      val p = s"$genMeta/$dirKey"
-      // driver-side group read (no Spark job on the serving path) with
-      // the same transient-swap retry as readOffsets: setGenerations'
-      // swap can yank a just-listed file from under a cross-instance
-      // reader. Files written by the old Spark path (optional fields)
-      // read identically.
-      def readOnce(): Seq[Generation] =
-        if (!pathExists(p)) Seq(Generation(1, clusterSize))
-        else {
-          val fs = hfs(p)
-          val files = fs.listStatus(hpath(p)).toSeq.map(_.getPath)
-            .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-          // two visible files = a rename-first swap in flight (or a crash
-          // between its rename and delete): the lexically-newest name is
-          // the current table (monotonic stamp in swapWriteGroups)
-          files.sortBy(_.getName).lastOption.map { f =>
-            val r = TopicStore.groupReader(f, spark.sparkContext.hadoopConfiguration).build()
-            val out = Seq.newBuilder[Generation]
-            try {
-              var g = r.read()
-              while (g != null) {
-                out += Generation(g.getInteger("version", 0), g.getInteger("cluster_size", 0))
-                g = r.read()
-              }
-            } finally r.close()
-            val chain = out.result().sortBy(_.version)
-            if (chain.isEmpty) Seq(Generation(1, clusterSize)) else chain
-          }.getOrElse(Seq(Generation(1, clusterSize)))
-        }
-      var res: Either[Throwable, Seq[Generation]] =
-        try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
-      var i = 0
-      while (res.isLeft && i < 5) {
-        Thread.sleep(50)
-        res = try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
-        i += 1
-      }
-      res.fold(throw _, identity)
+      val chain = meta.read(s"$genMeta/${scopeDir(topic)}", MetaTable.Generations)
+        .sortBy(_.version)
+      if (chain.isEmpty) Seq(Generation(1, clusterSize)) else chain
     })
-  }
 
   /** Persist the full generation row set: the live chain plus any
     * dropped-empty tombstones (`cluster_size = 0`), ascending by
     * version; the LAST row must be live (it is the current generation).
     */
   private def setGenerations(topic: String, chain: Seq[Generation]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
     require(chain.nonEmpty && chain.map(_.version) == chain.map(_.version).sorted &&
         chain.map(_.version).distinct.size == chain.size && chain.last.clusterSize > 0,
       s"generation rows must be ascending, unique, live-tailed: $chain")
-    val key = scopeDir(topic)
-    val gf = new SimpleGroupFactory(generationSchema)
-    swapWriteGroups(s"$genMeta/$key", generationSchema,
-      chain.map(g =>
-        gf.newGroup().append("version", g.version).append("cluster_size", g.clusterSize)))
+    meta.swap(s"$genMeta/${scopeDir(topic)}", MetaTable.Generations, chain)
     genCache.put(genCacheKey(topic), chain)
     ()
   }
@@ -296,7 +253,7 @@ class TopicStore(
   // (`internal/ownership/generator.go:134-144`). A partition-scoped
   // process is produce-only: its batches must hash entirely into its
   // claim (BrokerGroup's ShardRouter computes exactly this routing), its
-  // watermarks land in a per-claim LANE table (writeProducerOffsets),
+  // watermarks land in a per-claim LANE table (writeOffsets),
   // and every root-authority path — maintenance, rescale, registry,
   // group commits, the stream ledger — fails loudly, staying with a
   // root-lease owner.
@@ -415,6 +372,9 @@ class TopicStore(
   // of one directory ("/x/y", "file:///x/y", trailing slash) share locks
   private lazy val lockRootKey: String =
     TopicStore.normalizeRoot(root, spark.sparkContext.hadoopConfiguration)
+
+  // every `_meta` table read and swap (generations, registry, offsets)
+  private lazy val meta = new MetaTable(spark.sparkContext.hadoopConfiguration, lockRootKey)
 
   /** Run `body` with this thread's Spark jobs scheduled in the dedicated
     * serving pool: under the session's FAIR root (Graft.configure), the
@@ -585,12 +545,13 @@ class TopicStore(
     * producers of OTHER partitions interleave here, so re-read and overlay
     * only these partitions under the scope's merge lock (cross-process
     * disjoint producers never meet: each writes its own lane table —
-    * writeProducerOffsets).
+    * writeOffsets).
     */
   private def mergeWatermarks(topic: String, g: Generation, next: Map[Int, Long]): Unit = {
     val scope = producerScopeFor(topic, g)
     TopicStore.scopedLockFor(s"$lockRootKey|pwm|$scope").synchronized {
-      writeProducerOffsets(scope, producerWatermarksForUpdate(scope) ++ next, next.keySet)
+      writeOffsets(producerMeta, scope, producerWatermarksForUpdate(scope) ++ next,
+        planeLeasePartitions, PlaneLease.ProduceAuthority(next.keySet))
     }
   }
 
@@ -1324,64 +1285,10 @@ class TopicStore(
       owns && off >= cur.getOrElse(p, 0L)
     }
     if (accepted.nonEmpty)
-      writeGroupOffsets(scope, cur ++ accepted, accepted.keySet)
+      writeOffsets(groupMeta, scope, cur ++ accepted, consumerClaim,
+        PlaneLease.ConsumerCommitAuthority(accepted.keySet))
     accepted
   } }
-
-  // group-offset scopes known lane-free by this full-plane holder — the
-  // same once-per-scope fold discipline as the producer watermark lanes:
-  // range-scoped consumer claimants abort on a live full-consumer/root
-  // lease, so no lane can appear while we hold it
-  private val groupLaneFreeScopes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Route a group-offset write by consumer-lease mode. A full-plane
-    * holder (root or full consumer) swaps the scope's single table and
-    * folds leftover lanes from a previous range-scoped deployment (their
-    * values are contained in the merged `full` being written). A
-    * RANGE-SCOPED consumer member swaps only its claim's LANE sub-table
-    * (`<scope>/lane-<spec>`), so disjoint members never read-modify-write
-    * one shared file; readers merge base + lanes per-partition max
-    * (readOffsets) — group commits are monotonic per partition, so the
-    * max IS the latest commit.
-    */
-  private def writeGroupOffsets(
-      scope: String, full: Map[Int, Long], touched: Set[Int]): Unit =
-    consumerClaim match {
-      case Some(owned) =>
-        val stray = touched.filterNot(owned.contains)
-        require(stray.isEmpty,
-          s"range-scoped group-offset write touches unowned partitions $stray")
-        import org.apache.parquet.example.data.simple.SimpleGroupFactory
-        val lane = s"$groupMeta/$scope/lane-${PlaneLease.specOf(owned)}"
-        val gf = new SimpleGroupFactory(offsetsSchema)
-        swapWriteGroups(lane, offsetsSchema,
-          full.filter(kv => owned.contains(kv._1)).toSeq.sortBy(_._1).map {
-            case (part, next) =>
-              gf.newGroup().append("part", part).append("next", next)
-          }, PlaneLease.ConsumerCommitAuthority(touched))
-        // other members' lanes advance in other processes: invalidate the
-        // merged view so the next read re-merges (commits are low-rate —
-        // no owned-slice cache needed, unlike the producer hot path)
-        offsetCache.remove(metaCacheKey(s"$groupMeta/$scope"))
-        ()
-      case None =>
-        writeOffsets(groupMeta, scope, full,
-          PlaneLease.ConsumerCommitAuthority(touched))
-        if (!groupLaneFreeScopes.contains(scope)) {
-          val fs = hfs(s"$groupMeta/$scope")
-          val dirPath = hpath(s"$groupMeta/$scope")
-          fs.listStatus(dirPath)
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("lane-"))
-            .foreach { st =>
-              if (!fs.delete(st.getPath, true))
-                throw new java.io.IOException(
-                  s"group-offset lane fold: could not delete ${st.getPath}")
-            }
-          groupLaneFreeScopes.add(scope)
-          ()
-        }
-    }
 
   private def producerScope(topic: String): String =
     producerScopeFor(topic, generation(topic))
@@ -1448,53 +1355,35 @@ class TopicStore(
           // without stats. The old Spark scan's offset predicate sat on
           // the same row-group stats but still paid a full dataDir
           // listing + one job per first touch.
-          val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
-          val fs = hfs(topicPath.toString)
-          val healed: Map[Int, Long] =
-            if (!fs.exists(topicPath)) persisted
-            else {
-              val conf = spark.sparkContext.hadoopConfiguration
-              val toks = tokensOf(g)
-              val updates = scala.collection.mutable.Map.empty[Int, Long]
-              fs.listStatus(topicPath).filter(_.isDirectory).foreach { tokenDir =>
-                val idx = tokenDir.getPath.getName.stripPrefix("token=").toLongOption
-                  .map(toks.indexOf(_)).getOrElse(-1)
-                if (idx >= 0) fs.listStatus(tokenDir.getPath).filter(_.isDirectory)
-                  .foreach { rangeDir =>
-                    rangeDir.getPath.getName.stripPrefix("range=").toIntOption.foreach { rg =>
-                      val p = idx * rangesPerToken + rg
-                      val verPath = new org.apache.hadoop.fs.Path(
-                        rangeDir.getPath, s"version=${g.version}")
-                      if (p < partsOf(g) && fs.exists(verPath)) {
-                        var mx = Long.MinValue
-                        fs.listStatus(verPath).foreach { f =>
-                          val n = f.getPath.getName
-                          if (f.isFile && n.endsWith(".parquet") && !n.startsWith(".")) {
-                            mx = math.max(mx,
-                              TopicStore.int64StatsOf(f, conf, "offset")
-                                .map(_._2).getOrElse(maxOffsetByRead(f, conf)))
-                          }
-                        }
-                        if (mx != Long.MinValue && mx >= persisted.getOrElse(p, 0L)) {
-                          updates(p) = mx + 1L
-                          ()
-                        }
-                      }
-                    }
-                  }
+          val conf = spark.sparkContext.hadoopConfiguration
+          val toks = tokensOf(g)
+          val version = s"version=${g.version}"
+          val fs = hfs(dataDir)
+          val updates = inLeafDirs(topic) { dir =>
+            val range = dir.getParent
+            val idx = range.getParent.getName.stripPrefix("token=").toLongOption
+              .fold(-1)(toks.indexOf(_))
+            range.getName.stripPrefix("range=").toIntOption.map(idx * rangesPerToken + _)
+              .filter(p => dir.getName == version && idx >= 0 && p < partsOf(g))
+              .flatMap { p =>
+                val mx = fs.listStatus(dir).iterator.filter { f =>
+                  val n = f.getPath.getName
+                  f.isFile && n.endsWith(".parquet") && !n.startsWith(".")
+                }.map(f => TopicStore.int64StatsOf(f, conf, "offset")
+                  .map(_._2).getOrElse(maxOffsetByRead(f, conf)))
+                  .foldLeft(Long.MinValue)(math.max)
+                Option.when(mx != Long.MinValue && mx >= persisted.getOrElse(p, 0L))(p -> (mx + 1L))
               }
-              // a partition-scoped process heals only ITS partitions:
-              // orphans in another claim's partitions are that owner's
-              // authority (its own first-touch heal advances them)
-              val mine = planeLeasePartitions match {
-                case Some(owned) => updates.filter(kv => owned.contains(kv._1))
-                case None => updates
-              }
-              persisted ++ mine
-            }
+          }.flatten
+          // a partition-scoped process heals only ITS partitions:
+          // orphans in another claim's partitions are that owner's
+          // authority (its own first-touch heal advances them)
+          val healed = persisted ++
+            updates.filter(kv => planeLeasePartitions.forall(_.contains(kv._1)))
           if (healed != persisted)
-            writeProducerOffsets(scope, healed,
-              healed.keySet.filter(p => healed.get(p) != persisted.get(p)))
+            writeOffsets(producerMeta, scope, healed, planeLeasePartitions,
+              PlaneLease.ProduceAuthority(
+                healed.keySet.filter(p => healed.get(p) != persisted.get(p))))
         }
         reconciled.add(rscope)
         ()
@@ -1584,22 +1473,6 @@ class TopicStore(
     val Earliest, Latest = Value
   }
 
-  // the durable group-registry row shape (_meta/groups): policy always,
-  // plus one row per Latest-snapshot (topic, part, next, snap_version)
-  private val registrySchema: org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    Types.buildMessage()
-      .addField(Types.required(BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named("policy"))
-      .addField(Types.optional(BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named("topic"))
-      .addField(Types.optional(INT32).named("part"))
-      .addField(Types.optional(INT64).named("next"))
-      .addField(Types.optional(INT32).named("snap_version"))
-      .named("group")
-  }
-
   /** Consumer-group registry (R1/R2): deterministic round-robin of the
     * topic generation's ring partitions over sorted consumer ids. Live
     * membership is driver-side (the gossip/anti-entropy layers C7-C9
@@ -1627,53 +1500,14 @@ class TopicStore(
       */
     private def loadIfAbsent(group: String): Unit = {
       if (policies.contains(group)) return
-      val p = persistedDir(group)
-      if (!pathExists(p)) return
-      def readOnce(): Seq[(String, Option[String], Option[Int], Option[Long], Int)] = {
-        val fs = hfs(p)
-        val files = fs.listStatus(hpath(p)).toSeq.map(_.getPath)
-          .filter(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-        // newest file only — see readOffsets' rename-first swap note
-        files.sortBy(_.getName).lastOption.toSeq.flatMap { f =>
-          val out = Seq.newBuilder[(String, Option[String], Option[Int], Option[Long], Int)]
-          val r = TopicStore.groupReader(f, spark.sparkContext.hadoopConfiguration).build()
-          try {
-            var g = r.read()
-            while (g != null) {
-              def has(field: String) =
-                g.getType.containsField(field) && g.getFieldRepetitionCount(field) > 0
-              out += ((
-                g.getString("policy", 0),
-                if (has("topic")) Some(g.getString("topic", 0)) else None,
-                if (has("part")) Some(g.getInteger("part", 0)) else None,
-                if (has("next")) Some(g.getLong("next", 0)) else None,
-                // tolerate registries persisted before snapshots carried
-                // a version
-                if (has("snap_version")) g.getInteger("snap_version", 0) else 1))
-              g = r.read()
-            }
-          } finally r.close()
-          out.result()
-        }
-      }
-      // same transient-swap FNF retry as readOffsets: a concurrent
-      // persist's swap can yank a just-listed file from a cross-instance
-      // reader
-      var res: Either[Throwable, Seq[(String, Option[String], Option[Int], Option[Long], Int)]] =
-        try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
-      var i = 0
-      while (res.isLeft && i < 5) {
-        Thread.sleep(50)
-        res = try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
-        i += 1
-      }
-      val rows = res.fold(throw _, identity)
+      val rows = meta.read(persistedDir(group), MetaTable.Registry)
       rows.headOption.foreach { r =>
-        policies = policies.updated(group, StartFrom.withName(r._1))
+        policies = policies.updated(group, StartFrom.withName(r.policy))
       }
       rows.collect {
-        case (_, Some(t), Some(part), Some(next), v) => (t, part, next, v)
+        // registries persisted before snapshots carried a version read as 1
+        case MetaTable.RegistryRow(_, Some(t), Some(part), Some(next), v) =>
+          (t, part, next, v.getOrElse(1))
       }.groupBy(_._1).foreach { case (t, snap) =>
         latestSnapshots = latestSnapshots
           .updated((group, t), (snap.head._4, snap.map(s => s._2 -> s._3).toMap))
@@ -1681,28 +1515,17 @@ class TopicStore(
     }
 
     private def persist(group: String): Unit = {
-      import org.apache.parquet.example.data.simple.SimpleGroupFactory
       val pol = policies(group).toString
       val snaps = latestSnapshots.collect {
         case ((`group`, t), (v, m)) if m.nonEmpty =>
           m.toSeq.map { case (part, next) =>
-            (pol, Option(t), Option(part), Option(next), Option(v))
+            MetaTable.RegistryRow(pol, Some(t), Some(part), Some(next), Some(v))
           }
       }.flatten.toSeq
       val rows =
         if (snaps.nonEmpty) snaps
-        else Seq((pol, Option.empty[String], Option.empty[Int],
-          Option.empty[Long], Option.empty[Int]))
-      val gf = new SimpleGroupFactory(registrySchema)
-      swapWriteGroups(persistedDir(group), registrySchema, rows.map {
-        case (p, t, part, next, v) =>
-          val g = gf.newGroup().append("policy", p)
-          t.foreach { x => g.append("topic", x); () }
-          part.foreach { x => g.append("part", x); () }
-          next.foreach { x => g.append("next", x); () }
-          v.foreach { x => g.append("snap_version", x); () }
-          g
-      }, PlaneLease.ConsumerAuthority)
+        else Seq(MetaTable.RegistryRow(pol, None, None, None, None))
+      meta.swap(persistedDir(group), MetaTable.Registry, rows, PlaneLease.ConsumerAuthority)
     }
 
     /** Idempotent register; Latest groups snapshot current watermarks per
@@ -1898,11 +1721,7 @@ class TopicStore(
     */
   private def inLeafDirs[T](topic: String)(f: org.apache.hadoop.fs.Path => T): Seq[T] = {
     val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
-    val fs = hfs(topicPath.toString)
-    if (!fs.exists(topicPath)) return Seq.empty
-    def subdirs(ps: Seq[org.apache.hadoop.fs.Path]) =
-      ps.flatMap(p => fs.listStatus(p).filter(_.isDirectory).map(_.getPath))
-    subdirs(subdirs(subdirs(Seq(topicPath)))).map(dir =>
+    TopicStore.leafDirs(hfs(topicPath.toString), topicPath).map(dir =>
       TopicStore.localWritePool.submit(new java.util.concurrent.Callable[T] {
         override def call(): T = f(dir)
       })).map(_.get())
@@ -1930,7 +1749,7 @@ class TopicStore(
 
   /** Merge one leaf dir's small files into a single offset-sorted zstd
     * file, driver-side. Loud-failure swap discipline (same as the
-    * writeOffsets swap): the merged file is written dot-prefixed
+    * `_meta` swap, MetaTable.swap): the merged file is written dot-prefixed
     * (hidden from readers), renamed visible FIRST, and only then are
     * the originals deleted — a silently-false rename would let the
     * delete destroy the only copy, a silently-false delete would
@@ -1940,11 +1759,16 @@ class TopicStore(
   private def compactDir(dirPath: org.apache.hadoop.fs.Path, smallFileBytes: Long): Int = {
     import org.apache.hadoop.fs.Path
     val fs = hfs(dirPath.toString)
-    val small = fs.listStatus(dirPath).filter { f =>
+    val candidates = fs.listStatus(dirPath).filter { f =>
       f.isFile && f.getPath.getName.endsWith(".parquet") && f.getLen < smallFileBytes
     }
-    if (small.length < 2) return 0
+    if (candidates.length < 2) return 0
     val conf = SegmentWriter.conf(spark.sparkContext.hadoopConfiguration)
+    // a legacy INT96 segment stays out of the merge (Segment.copy reads
+    // timestamps as INT64) and is left as it is, so the sweeper's tick
+    // goes on to the generation sweep instead of failing here each time
+    val small = candidates.filter(SegmentWriter.int64Timestamps(_, conf))
+    if (small.length < 2) return 0
     val fin = new Path(dirPath, s"compacted-${System.nanoTime()}-0.parquet")
     val readers = small.map(f => TopicStore.groupReader(f.getPath, conf).build())
     try {
@@ -2156,6 +1980,8 @@ class TopicStore(
           throw new java.io.IOException(s"purgeKeys: could not delete ${f.getPath}")
         purged += hits
       } else if (hits > 0) {
+        if (!SegmentWriter.int64Timestamps(f, conf))
+          throw new java.io.IOException("purgeKeys: " + SegmentWriter.legacyInt96(f.getPath.toString))
         val fin = new Path(dirPath, s"purged-${System.nanoTime()}-0.parquet")
         val r = TopicStore.groupReader(f.getPath, conf).build()
         try SegmentWriter.write(fs, fin, conf)(seg => records(r).filterNot(isHit).foreach(seg.copy))
@@ -2357,23 +2183,24 @@ class TopicStore(
     * duplicate every partially-copied record.
     */
   private def clearGenerationData(topic: String, g: Generation): Unit = {
-    import org.apache.hadoop.fs.Path
-    val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
-    val fs = hfs(topicPath.toString)
-    if (fs.exists(topicPath)) {
-      fs.listStatus(topicPath).filter(_.isDirectory).foreach { tokenDir =>
-        fs.listStatus(tokenDir.getPath).filter(_.isDirectory).foreach { rangeDir =>
-          val verPath = new Path(rangeDir.getPath, s"version=${g.version}")
-          if (fs.exists(verPath) && !fs.delete(verPath, true))
-            throw new java.io.IOException(s"rescale: could not clear $verPath")
-        }
-      }
+    val fs = hfs(dataDir)
+    inLeafDirs(topic) { dir =>
+      if (dir.getName == s"version=${g.version}" && !fs.delete(dir, true))
+        throw new java.io.IOException(s"rescale: could not clear $dir")
     }
-    val scope = producerScopeFor(topic, g)
-    val metaPath = s"$producerMeta/$scope"
-    if (pathExists(metaPath) && !hfs(metaPath).delete(hpath(metaPath), true))
-      throw new java.io.IOException(s"rescale: could not clear $metaPath")
-    offsetCache.remove(metaCacheKey(metaPath))
+    dropOffsetsScope(producerMeta, producerScopeFor(topic, g))
+  }
+
+  /** Delete offsets table `dir/scope` and forget this JVM's state of it:
+    * the cached view, the lane-fold mark and the reconcile mark (only
+    * producer scopes have one).
+    */
+  private def dropOffsetsScope(dir: String, scope: String): Unit = {
+    val p = s"$dir/$scope"
+    if (pathExists(p) && !hfs(p).delete(hpath(p), true))
+      throw new java.io.IOException(s"could not delete offsets table $p")
+    offsetCache.remove(metaCacheKey(p))
+    laneFree.remove(p)
     reconciled.remove(lockRootKey + "|" + scope)
     ()
   }
@@ -2439,30 +2266,19 @@ class TopicStore(
     // there fails loudly instead of silently skipping its data
     val neverProduced = reclaimable.filter(g => producerOffsetsFor(topic, g).isEmpty)
     val keepNames = keep.map(g => s"version=${g.version}").toSet
-    // partitionBy escapes special characters in partition-value dir names,
-    // so addressing a topic dir must escape the same way (NOT the _meta
-    // scopeDir encoding)
-    val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
-    val fs = hfs(topicPath.toString)
+    val fs = hfs(dataDir)
     // a listStatus walk, not a recursive listFiles: that builds a
     // LocatedFileStatus per file, forking per file where libhadoop is absent
     def fileCount(dir: org.apache.hadoop.fs.Path): Int =
       fs.listStatus(dir).map(st => if (st.isDirectory) fileCount(st.getPath) else 1).sum
-    var deleted = 0
-    if (fs.exists(topicPath)) {
-      fs.listStatus(topicPath).filter(_.isDirectory).foreach { tokenDir =>
-        fs.listStatus(tokenDir.getPath).filter(_.isDirectory).foreach { rangeDir =>
-          fs.listStatus(rangeDir.getPath).filter(_.isDirectory).foreach { verDir =>
-            val name = verDir.getPath.getName
-            if (name.startsWith("version=") && !keepNames.contains(name)) {
-              deleted += fileCount(verDir.getPath)
-              fs.delete(verDir.getPath, true)
-              ()
-            }
-          }
-        }
-      }
-    }
+    val deleted = inLeafDirs(topic) { dir =>
+      val name = dir.getName
+      if (name.startsWith("version=") && !keepNames.contains(name)) {
+        val n = fileCount(dir)
+        fs.delete(dir, true)
+        n
+      } else 0
+    }.sum
     // the chain truncation is durable AFTER the deletes: a crash between
     // them leaves a swept generation still chained, whose polls read an
     // empty dir (no lag) — harmless; the next sweep re-truncates.
@@ -2473,21 +2289,16 @@ class TopicStore(
       // drop the swept generations' watermark scopes + caches AND the
       // groups' committed scopes under them (all unreachable once the
       // chain no longer lists the generation; leaving them would leak
-      // one tiny dir per swept generation per group)
-      reclaimable.foreach { g =>
-        val scope = producerScopeFor(topic, g)
-        val metaPath = s"$producerMeta/$scope"
-        if (pathExists(metaPath)) { hfs(metaPath).delete(hpath(metaPath), true); () }
-        offsetCache.remove(metaCacheKey(metaPath))
-        reconciled.remove(lockRootKey + "|" + scope)
-        groups.foreach { gr =>
-          val gScope = s"${scopeDir(gr)}/${scopeDir(topic)}/v${g.version}"
-          val gPath = s"$groupMeta/$gScope"
-          if (pathExists(gPath)) { hfs(gPath).delete(hpath(gPath), true); () }
-          offsetCache.remove(metaCacheKey(gPath))
-        }
-        ()
+      // one tiny dir per swept generation per group). Every scope is
+      // tried before a failure is thrown: no later sweep finds the ones
+      // after it, as the chain no longer names their generation.
+      val failures = reclaimable.flatMap { g =>
+        (producerMeta, producerScopeFor(topic, g)) +: groups.map(gr =>
+          (groupMeta, s"${scopeDir(gr)}/${scopeDir(topic)}/v${g.version}"))
+      }.flatMap { case (dir, scope) =>
+        scala.util.Try(dropOffsetsScope(dir, scope)).failed.toOption
       }
+      failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
     }
     deleted
   }
@@ -2651,208 +2462,36 @@ class TopicStore(
   // Spark job to read/write them (the old toDF.write / spark.read path)
   // put a whole job-scheduling round trip into EVERY produce ack and every
   // streaming micro-batch — the serving path's fixed overhead. They are
-  // instead written with parquet-hadoop directly on the driver (same
-  // format, same layout: a directory with one visible part file, so stores
-  // written by either path stay mutually readable). The reference keeps
-  // this state driver-local too (SQLite, `internal/localdb/queries.go`).
-  private val offsetsSchema =
-    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message offsets { required int32 part; required int64 next; }")
-
+  // instead read and swapped with parquet-hadoop directly on the driver
+  // (MetaTable; same format, same layout, so stores written by either
+  // path stay mutually readable). The reference keeps this state
+  // driver-local too (SQLite, `internal/localdb/queries.go`).
   private def readOffsets(dir: String, scope: String): Map[Int, Long] = {
-    import org.apache.hadoop.fs.Path
     val p = s"$dir/$scope" // scope components are pre-encoded (scopeDir)
-    def readTable(statuses: Seq[org.apache.hadoop.fs.FileStatus]): Map[Int, Long] = {
-      val files = statuses.filter(st => st.isFile &&
-          st.getPath.getName.endsWith(".parquet") &&
-          !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-        .map(_.getPath)
-      val m = Map.newBuilder[Int, Long]
-      // the newest file ONLY: a rename-first swap in flight leaves the
-      // old table visible beside the new one, and merging the two
-      // would resurrect stale positions for parts the new table moved
-      files.sortBy(_.getName).lastOption.foreach { f =>
-        val r = TopicStore.groupReader(f, spark.sparkContext.hadoopConfiguration).build()
-        try {
-          var g = r.read()
-          while (g != null) {
-            m += (g.getInteger("part", 0) -> g.getLong("next", 0))
-            g = r.read()
-          }
-        } finally r.close()
-      }
-      m.result()
-    }
-    def readOnce(): Map[Int, Long] =
-      if (!pathExists(p)) Map.empty
-      else {
-        val fs = hfs(p)
-        val statuses = fs.listStatus(hpath(p)).toSeq
-        val base = readTable(statuses)
-        // partition-scoped writers keep their watermarks in LANE
-        // sub-tables (one per claim — writeProducerOffsets); the merged
-        // view takes the per-partition MAX across base + lanes: lanes
-        // hold disjoint partition sets while live, and a stale lane left
-        // behind after a root-mode fold only ever carries values the
-        // folded base already contains. GROUP-OFFSET scopes gain lanes
-        // too (range-scoped consumer members, writeGroupOffsets) with the
-        // same max-merge semantics — group commits are monotonic per
-        // partition; the stream ledger and registry never have lanes.
-        statuses.filter(st => st.isDirectory && st.getPath.getName.startsWith("lane-"))
-          .foldLeft(base) { (acc, laneDir) =>
-            val lane = readTable(fs.listStatus(laneDir.getPath).toSeq)
-            lane.foldLeft(acc) { case (a, (part, next)) =>
-              if (next > a.getOrElse(part, Long.MinValue)) a + (part -> next) else a
-            }
-          }
-      }
-    offsetCache.computeIfAbsent(metaCacheKey(p), _ => {
-      // a concurrent writer's swap (rename new in, delete old) can still
-      // yank a just-listed OLD file from under a READ-SIDE observer (the
-      // DSv2 source polling another instance's store) between the list
-      // and the open: retry the list+read — the swap window is
-      // milliseconds and the table is ring-size rows
-      var res: Either[Throwable, Map[Int, Long]] =
-        try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
-      var i = 0
-      while (res.isLeft && i < 5) {
-        Thread.sleep(50)
-        res = try Right(readOnce()) catch { case TopicStore.Vanished(e) => Left(e) }
-        i += 1
-      }
-      res.fold(throw _, identity)
-    })
+    offsetCache.computeIfAbsent(metaCacheKey(p), _ => meta.readOffsets(p))
   }
 
-  /** Swap-write a tiny driver-side parquet table: dot-prefixed while
-    * being written (Spark and the group readers both skip hidden files),
-    * then swap — rename the new table visible FIRST, then delete the old
-    * files. A crash leaves the old state alone, or both tables visible
-    * (readers take the lexically-newest; the next swap folds the rest).
-    * Loud failure on either swap step: proceeding past a failed rename
-    * would leave the old state silently current after a "successful"
-    * write, past a failed delete an ever-growing dir.
-    */
-  private def swapWriteGroups(
-      p: String,
-      schema: org.apache.parquet.schema.MessageType,
-      rows: Seq[org.apache.parquet.example.data.Group],
-      fence: PlaneLease.Authority = PlaneLease.RootAuthority): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = hfs(p)
-    val dirPath = hpath(p)
-    fs.mkdirs(dirPath)
-    // RENAME-FIRST swap: the old delete-then-rename order had a window
-    // with NO visible file, which an unlocked cross-instance reader
-    // (refreshed DSv2 observer) read as VALID EMPTY state — a default
-    // generation chain or empty offsets — and cached. With rename first
-    // the window holds TWO visible files instead, and every reader
-    // resolves it by taking the lexically-newest name (the zero-padded
-    // monotonic stamp below); a crash between rename and delete leaves
-    // both files for the NEXT swap's delete pass to fold.
-    //
-    // The stamp is derived from DURABLE state, not a process clock:
-    // max(wall clock, newest visible stamp + 1). System.nanoTime()'s
-    // origin is per-JVM/per-boot, so after a crash between rename and
-    // delete a successor writer on another host (or after a reboot)
-    // could stamp its fresh table lexically OLDER than the stale
-    // leftover — readers would then prefer the stale chain/offsets
-    // until a delete pass folded it, or forever if that delete throws.
-    // Taking the on-disk maximum + 1 keeps lexical order = write order
-    // across JVMs and reboots (and absorbs legacy nanoTime-stamped
-    // files, whose huge values simply become the floor).
-    val newestStamp = fs.listStatus(dirPath).iterator
-      .map(_.getPath.getName)
-      .filter(n => !n.startsWith(".") && n.startsWith("part-"))
-      .flatMap { n =>
-        val digits = n.stripPrefix("part-").takeWhile(_.isDigit)
-        scala.util.Try(digits.toLong).toOption
-      }
-      .foldLeft(0L)(math.max)
-    val stamp = math.max(System.currentTimeMillis(), newestStamp + 1L)
-    // the held lease epoch rides in the name (after the ordering stamp —
-    // readers keep taking the lexically-newest, and at equal stamps a
-    // higher epoch correctly sorts later): forensics for a takeover, and
-    // the per-write fence below makes a stale-epoch commit impossible
-    val fin = new Path(dirPath,
-      f"part-$stamp%019d-e${PlaneLease.commitEpoch(lockRootKey)}%012d-" +
-        s"${java.util.UUID.randomUUID()}.parquet")
-    val tmp = SegmentWriter.hidden(fin)
-    val w = SegmentWriter.groupWriter(tmp,
-      schema, SegmentWriter.conf(spark.sparkContext.hadoopConfiguration))
-    try rows.foreach(w.write) finally w.close()
-    // PER-WRITE epoch fence at the commit point (the reference's
-    // per-group generation re-check, `coalescer.go:93-106`): a paused
-    // process whose lease was taken over is rejected HERE — before the
-    // rename makes its stale-authority table visible — not merely at its
-    // next heartbeat. `fence` names the authority this table belongs to:
-    // producer watermarks carry the touched partitions, group/registry
-    // tables the consumer plane, everything else root.
-    PlaneLease.assertCurrentAtCommit(lockRootKey, fence)
-    SegmentWriter.publish(fs, tmp)
-    // FILES only: a producer-offsets scope may also hold lane-* DIRS
-    // (partition-scoped writers' watermark sub-tables) — those are not
-    // part of this swap; writeProducerOffsets folds them deliberately
-    fs.listStatus(dirPath).filter(_.isFile).foreach { st =>
-      val n = st.getPath.getName
-      // fold only files lexically OLDER than ours, and tolerate a
-      // concurrent folder having deleted them first: most scopes are
-      // single-writer (lease + lock serialized), but the group REGISTRY
-      // is written concurrently by RANGE-SCOPED consumer members — the
-      // old "delete everything but fin" pass could annihilate a
-      // concurrent winner's newer table (each side deleting the other's)
-      // and threw when the loser's file was already gone. Readers take
-      // the lexically-newest name, so leaving a NEWER file in place is
-      // exactly right: our own write is the superseded one.
-      if (!n.startsWith(".") && n < fin.getName &&
-          !fs.delete(st.getPath, false) && fs.exists(st.getPath))
-        throw new java.io.IOException(s"meta swap: could not delete ${st.getPath}")
-      // crashed swaps orphan dot-tmp files nothing reads — but a
-      // CONCURRENT registry swapper's in-flight tmp is indistinguishable
-      // by name, so reclaim only tmps old enough that their writer is
-      // certainly gone (best-effort)
-      if (n.startsWith(".") && n.endsWith(".tmp") && n != tmp.getName &&
-          System.currentTimeMillis() - st.getModificationTime > 10 * 60 * 1000L) {
-        fs.delete(st.getPath, false); ()
-      }
-    }
-  }
+  // offsets tables known lane-free by this full-authority holder: once
+  // the fold in writeOffsets ran (or found nothing), no lane can appear
+  // while we hold the root or full consumer lease (scoped claimants abort
+  // on it), so the per-write lane listing is paid once per table
+  private val laneFree = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def writeOffsets(
-      dir: String, scope: String, offsets: Map[Int, Long],
-      fence: PlaneLease.Authority = PlaneLease.RootAuthority): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    val p = s"$dir/$scope" // scope components are pre-encoded (scopeDir)
-    val gf = new SimpleGroupFactory(offsetsSchema)
-    swapWriteGroups(p, offsetsSchema,
-      offsets.toSeq.sortBy(_._1).map { case (part, next) =>
-        gf.newGroup().append("part", part).append("next", next)
-      }, fence)
-    offsetCache.put(metaCacheKey(p), offsets)
-    ()
-  }
-
-  // producer-watermark scopes known lane-free by this root-lease holder:
-  // once the fold below ran (or found nothing), no lane can appear while
-  // we hold the root lease (partition claimants abort on a live root
-  // lease), so the per-write lane listing is paid once per scope
-  private val laneFreeScopes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  // lane-view cache key: shares the topic's scope prefix so topic-level
+  // lane-view cache key: shares the table's path prefix so topic-level
   // cache invalidation sweeps it too; the '#view' suffix keeps it off any
   // real path's key
-  private def ownedViewKey(
-      scope: String, owned: scala.collection.immutable.SortedSet[Int]): String =
-    metaCacheKey(s"$producerMeta/$scope/lane-${PlaneLease.specOf(owned)}#view")
+  private def laneViewKey(
+      p: String, owned: scala.collection.immutable.SortedSet[Int]): String =
+    metaCacheKey(MetaTable.lane(p, owned) + "#view")
 
   /** The OWNED partitions' current watermarks on a partition-scoped
-    * process — this process's own authority, cached (writeProducerOffsets
+    * process — this process's own authority, cached (writeOffsets
     * maintains it), so the produce hot path pays no per-flush storage
     * re-read; the first touch seeds it from the merged view.
     */
   private def ownedWatermarkView(
       scope: String, owned: scala.collection.immutable.SortedSet[Int]): Map[Int, Long] = {
-    val k = ownedViewKey(scope, owned)
+    val k = laneViewKey(s"$producerMeta/$scope", owned)
     val cur = offsetCache.get(k)
     if (cur != null) cur
     else {
@@ -2872,61 +2511,42 @@ class TopicStore(
       case None => readOffsets(producerMeta, scope)
     }
 
-  /** Route a producer-watermark write by lease mode. A root-lease holder
-    * swaps the scope's single table (and folds any leftover lane tables
-    * from a previous partition-scoped deployment into it — their values
-    * are contained in the merged view being written). A PARTITION-scoped
-    * holder swaps only its own claim's LANE sub-table
-    * (`<scope>/lane-<spec>`), restricted to the partitions it owns — so
-    * disjoint-partition writer processes never read-modify-write one
-    * shared file; readers merge base + lanes with per-partition max
-    * (readOffsets). `full` is the merged view the JVM-global cache keeps;
-    * `touched` are the partitions this write advances (the per-write
-    * fence scope).
+  /** Write offsets table `dir/scope` (producer watermarks or group
+    * offsets) under this process's `claim` on it. A CLAIMANT (partition-
+    * scoped producer, range-scoped consumer member) swaps only its LANE
+    * sub-table, restricted to the partitions it owns, so disjoint
+    * claimants never read-modify-write one shared file; readers merge
+    * base + lanes per-partition max ([[MetaTable.readOffsets]]). It
+    * caches its owned slice (only this process advances it) and DROPS
+    * the merged view: other claimants' lanes advance in other processes,
+    * so a cached merge would go stale for every non-owned partition. A
+    * full-authority holder swaps the base table with the merged `full`
+    * and, once per table, folds leftover lanes of a previous scoped
+    * deployment (their values are contained in `full`). `fence` names
+    * the partitions this write advances; the swap checks them against
+    * the held lease at its commit point.
     */
-  private def writeProducerOffsets(
-      scope: String, full: Map[Int, Long], touched: Set[Int]): Unit =
-    planeLeasePartitions match {
+  private def writeOffsets(
+      dir: String, scope: String, full: Map[Int, Long],
+      claim: Option[scala.collection.immutable.SortedSet[Int]],
+      fence: PlaneLease.Authority): Unit = {
+    val p = s"$dir/$scope"
+    claim match {
       case Some(owned) =>
-        val stray = touched.filterNot(owned.contains)
-        require(stray.isEmpty,
-          s"partition-scoped watermark write touches unowned partitions $stray")
-        import org.apache.parquet.example.data.simple.SimpleGroupFactory
-        val lane = s"$producerMeta/$scope/lane-${PlaneLease.specOf(owned)}"
-        val gf = new SimpleGroupFactory(offsetsSchema)
-        swapWriteGroups(lane, offsetsSchema,
-          full.filter(kv => owned.contains(kv._1)).toSeq.sortBy(_._1).map {
-            case (part, next) =>
-              gf.newGroup().append("part", part).append("next", next)
-          }, PlaneLease.ProduceAuthority(touched))
-        // cache the OWNED slice under the lane-view key (only this
-        // process advances it — always fresh) and INVALIDATE the merged
-        // scope view rather than caching `full`: other claimants' lanes
-        // advance in other processes, so a cached merge would go
-        // permanently stale for every non-owned partition (poll and
-        // persistedProducerOffsets on this member would never see them
-        // move). Observer reads re-merge base + lanes from storage; the
-        // produce hot path reads the owned slice from the lane view.
-        offsetCache.put(ownedViewKey(scope, owned),
-          full.filter(kv => owned.contains(kv._1)))
-        offsetCache.remove(metaCacheKey(s"$producerMeta/$scope"))
-        ()
+        val mine = full.filter(kv => owned.contains(kv._1))
+        meta.swap(MetaTable.lane(p, owned), MetaTable.Offsets, mine.toSeq.sortBy(_._1), fence)
+        offsetCache.put(laneViewKey(p, owned), mine)
+        offsetCache.remove(metaCacheKey(p))
       case None =>
-        writeOffsets(producerMeta, scope, full, PlaneLease.ProduceAuthority(touched))
-        if (!laneFreeScopes.contains(scope)) {
-          val fs = hfs(s"$producerMeta/$scope")
-          val dirPath = hpath(s"$producerMeta/$scope")
-          fs.listStatus(dirPath)
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("lane-"))
-            .foreach { st =>
-              if (!fs.delete(st.getPath, true))
-                throw new java.io.IOException(
-                  s"watermark lane fold: could not delete ${st.getPath}")
-            }
-          laneFreeScopes.add(scope)
-          ()
+        meta.swap(p, MetaTable.Offsets, full.toSeq.sortBy(_._1), fence)
+        offsetCache.put(metaCacheKey(p), full)
+        if (!laneFree.contains(p)) {
+          meta.foldLanes(p)
+          laneFree.add(p)
         }
     }
+    ()
+  }
 
   /** Encode ONE raw scope component (a topic, group, or stream id) as a
     * `_meta` directory segment — the SAME injective Hive path escaping
@@ -2944,6 +2564,22 @@ class TopicStore(
 }
 
 object TopicStore {
+  /** The leaf dirs (`token=/range=/version=`) under `topicDir`, by three
+    * levels of `listStatus`; empty when the topic dir does not exist. Not
+    * a recursive `listFiles`: that builds a `LocatedFileStatus` per file,
+    * whose permission load forks `ls` where libhadoop is absent and fails
+    * when a produce renames a hidden segment between the listing and
+    * the fork.
+    */
+  def leafDirs(
+      fs: org.apache.hadoop.fs.FileSystem,
+      topicDir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
+    if (!fs.exists(topicDir)) return Seq.empty
+    def subdirs(ps: Seq[org.apache.hadoop.fs.Path]) =
+      ps.flatMap(p => fs.listStatus(p).filter(_.isDirectory).map(_.getPath))
+    subdirs(subdirs(subdirs(Seq(topicDir))))
+  }
+
   /** One driver-resident record for [[TopicStore.produceLocal]]: the
     * envelope a serving coalescer holds in hand — `key` null for keyless,
     * `seq` the request-order tiebreak (the `__seq` column's twin).

@@ -4,7 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.TopicStore
+import graft.engine.{SegmentWriter, TopicStore}
 
 /** DataSource V2 connector: a graft topic as a first-class Spark table.
   *
@@ -104,11 +104,8 @@ object GraftSource {
     val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(topic)
     val topicDir = new Path(s"$root/data/topic=$esc")
     val fs = topicDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(topicDir)) return Seq.empty
-    val it = fs.listFiles(topicDir, true)
     val out = Seq.newBuilder[GraftFile]
-    while (it.hasNext) {
-      val st: FileStatus = it.next()
+    TopicStore.leafDirs(fs, topicDir).iterator.flatMap(fs.listStatus(_)).foreach { st =>
       val p = st.getPath.toString
       if (st.isFile && p.endsWith(".parquet")) {
         def seg(re: scala.util.matching.Regex): Option[String] =
@@ -332,23 +329,10 @@ class GraftMicroBatchStream(
 
   private def pollChain(): Seq[graft.engine.Generation] = {
     // another store instance owns the writes: drop the read-side caches
-    // so the poll observes its advanced watermarks (and chain). A
-    // concurrent swap can still yank a just-listed OLD file between the
-    // list and the read — retry through THAT window only (Vanished): a broad
-    // Exception retry would sit through 5 sleeps on genuinely fatal
-    // misconfiguration (bad root, permissions) and delay cancellation.
-    var attempt = 0
-    while (true) {
-      try {
-        store.refreshOffsets(topic)
-        return store.generations(topic)
-      } catch {
-        case TopicStore.Vanished(_) if attempt < 5 =>
-          attempt += 1
-          Thread.sleep(100)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    // so the poll observes its advanced watermarks (and chain); the
+    // `_meta` read retries through a concurrent swap's window itself
+    store.refreshOffsets(topic)
+    store.generations(topic)
   }
 
   private def highFor(version: Int): Map[Int, Long] =
@@ -517,14 +501,7 @@ class GraftPartitionReader(p: GraftInputPartition) extends PartitionReader[Inter
           if (!field("timestamp")) null
           else try g.getLong("timestamp", 0)
           catch { case _: ClassCastException | _: UnsupportedOperationException =>
-            throw new IllegalStateException(
-              s"${p.file.path}: timestamp is INT96, not the store's INT64 micros — " +
-                "written by the Spark produce plane of an older engine, which took " +
-                "its timestamp encoding from the calling session (INT96 is Spark's " +
-                "default outside Graft.configure). Compaction cannot rewrite it " +
-                "(it reads timestamps as INT64 too): read the leaf dirs with " +
-                "spark.read.parquet, which decodes INT96, and produce the records " +
-                "into a new topic")
+            throw new IllegalStateException(SegmentWriter.legacyInt96(p.file.path))
           }
         row = new GenericInternalRow(Array[Any](
           if (field("key")) UTF8String.fromString(g.getString("key", 0)) else null,

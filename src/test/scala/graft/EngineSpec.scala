@@ -1285,6 +1285,28 @@ class EngineSpec extends AnyFunSuite {
     assert(store.sweepStaleGenerations("t") == 0)
   }
 
+  test("sweepStaleGenerations tries every offsets scope when one delete fails") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.mockfd.impl", classOf[FailDeleteFs].getName)
+    hc.setBoolean("fs.mockfd.impl.disable.cache", true)
+    val tmp = Files.createTempDirectory("graft-engine").toString
+    val store = new TopicStore(spark, "mockfd:" + tmp)
+    store.produceStrings("t", (0 until 6).map(i => ("k", s"m$i", ts(i))))
+    store.registry.register("g", "c", Seq("t"), store.StartFrom.Earliest)
+    store.rescale("t", 6)
+    assert(store.poll("g", "t", "c").count() == 6L)
+    val producerScope = new java.io.File(s"$tmp/_meta/producer_offsets/t/v1")
+    val groupScope = new java.io.File(s"$tmp/_meta/group_offsets/g/t/v1")
+    assert(producerScope.isDirectory && groupScope.isDirectory)
+    // the producer scope is dropped first; its delete fails
+    FailDeleteFs.failSubstring = Some("/_meta/producer_offsets/t/v1")
+    try intercept[java.io.IOException](store.sweepStaleGenerations("t"))
+    finally FailDeleteFs.failSubstring = None
+    assert(!groupScope.exists, "the group scope after the failed one must still be dropped")
+    assert(producerScope.isDirectory)
+    assert(store.generations("t").map(_.version) == Seq(2))
+  }
+
   test("scheduled retention sweeper reclaims expired files") {
     val store = freshStore()
     store.produceStrings("t", Seq(("a", "old", ts(0)))) // 2023 timestamp

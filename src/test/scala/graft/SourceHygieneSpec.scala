@@ -86,6 +86,20 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 
+  test("the _meta table protocol lives in MetaTable: no other reader retries a vanished file or builds rows") {
+    // a second copy of the read (newest-file choice, vanished-file retry)
+    // or of the row building drifts from the swap that writes the tables
+    val offenders = mainSources
+      .filterNot { case (file, _) =>
+        file.endsWith("engine/MetaTable.scala") || file.endsWith("engine/SegmentWriter.scala")
+      }
+      .flatMap { case (file, text) =>
+        raw"\bVanished\s*\(|\bSimpleGroupFactory\b".r.findAllMatchIn(text)
+          .map(m => lineOf(file, text, m.start) + " " + m.matched)
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
   test("TopicStore walks directories with listStatus, never a recursive listFiles") {
     // `FileSystem.listFiles` builds a LocatedFileStatus per file; on a
     // local filesystem without libhadoop each one loads its permissions in

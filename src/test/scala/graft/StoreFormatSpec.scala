@@ -75,4 +75,59 @@ class StoreFormatSpec extends AnyFunSuite {
         true, LogicalTypeAnnotation.TimeUnit.MICROS), s"$f: $ts")
     }
   }
+
+  test("compaction merges around a legacy INT96 segment; purge names it instead of rewriting it") {
+    val root = Files.createTempDirectory("graft-int96").toString
+    val store = new TopicStore(spark, root)
+    // one key, one partition: two small INT64 segments in one leaf dir
+    val t0 = 1700000000000000L
+    Seq("a", "b").zipWithIndex.foreach { case (v, i) =>
+      store.produceLocal("t", Seq(TopicStore.LocalRecord("k", v.getBytes("UTF-8"), t0 + i, 0L)))
+    }
+    def segments(dir: java.io.File) = dir.listFiles().toSeq
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).sortBy(_.getName)
+    val leaf = {
+      val walk = Files.walk(java.nio.file.Paths.get(store.dataDir))
+      try walk.iterator().asScala.map(_.toFile)
+        .filter(d => d.isDirectory && segments(d).nonEmpty).toList
+      finally walk.close()
+    } match {
+      case Seq(d) => d
+      case ds => fail(s"want one leaf dir, got $ds")
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val part = {
+      val r = TopicStore.groupReader(new Path(segments(leaf).head.toURI), conf).build()
+      try r.read().getInteger("part", 0) finally r.close()
+    }
+    // what an older engine's Spark produce plane wrote from a session
+    // without Graft.configure: the same columns, INT96 timestamps, here
+    // with a second key so that a purge of "k" must rewrite it
+    val legacy = spark.newSession()
+    legacy.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    import legacy.implicits._
+    val out = Files.createTempDirectory("graft-int96-out").resolve("seg").toString
+    Seq(("k", "c".getBytes("UTF-8"), new Timestamp(1700000000002L), part, 2L),
+        ("j", "d".getBytes("UTF-8"), new Timestamp(1700000000003L), part, 3L))
+      .toDF("key", "value", "timestamp", "part", "offset").coalesce(1).write.parquet(out)
+    val int96 = new java.io.File(leaf, "part-legacy-int96.parquet")
+    Files.move(segments(new java.io.File(out)).head.toPath, int96.toPath)
+
+    assert(store.compact("t") == 2)
+    val after = segments(leaf)
+    assert(after.size == 2 && after.contains(int96), s"$after")
+    val merged = after.filterNot(_ == int96).head
+    val r = TopicStore.groupReader(new Path(merged.toURI), conf).build()
+    val offsets = try Iterator.continually(r.read()).takeWhile(_ != null)
+      .map(_.getLong("offset", 0)).toList finally r.close()
+    assert(offsets == List(0L, 1L))
+
+    val e = intercept[Exception](store.purgeKeys("t", Seq("k")))
+    val io = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: java.io.IOException => x }
+      .getOrElse(fail("purge did not fail with an IOException", e))
+    assert(io.getMessage.contains(int96.getName) && io.getMessage.contains("spark.read.parquet"),
+      io.getMessage)
+    assert(int96.exists(), "purge removed the INT96 segment it could not rewrite")
+  }
 }
