@@ -1,5 +1,7 @@
 package graft.engine
 
+import java.nio.file.{Files, StandardCopyOption}
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
@@ -9,6 +11,7 @@ import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -24,12 +27,17 @@ import org.apache.spark.sql.catalyst.InternalRow
   * made visible by one rename ([[publish]]); a crashed writer's hidden
   * file is reclaimed by `TopicStore.retentionSweep`'s aged-tmp rule.
   *
-  * Output is `HadoopOutputFile` for every scheme. On a host without
-  * libhadoop each local create runs `chmod` in a child process twice
-  * (file + `.crc`): ~3 ms each on a 4-core host, 5.9 of 12.7 ms per
-  * 64-row file in an isolated write micro-benchmark. A null-permission
-  * create still forks; avoiding it takes another `OutputFile` for
-  * `file:` roots, chosen in [[groupWriter]].
+  * The output is chosen by the path's URI scheme. A `file:` path is
+  * written through parquet's `LocalOutputFile` and published with one
+  * `Files.move(ATOMIC_MOVE)`; every other scheme keeps `HadoopOutputFile`
+  * and `FileSystem.rename`. On a host without libhadoop, Hadoop's local
+  * create runs `chmod` in a child process twice (file + `.crc`), ~16 ms
+  * of fixed cost per file. The choice is by scheme, not by FileSystem
+  * class: filesystems that subclass `RawLocalFileSystem` under their own
+  * schemes keep their `create`/`rename` hooks. Neither path fsyncs. A
+  * `file:` segment has no `.crc` sidecar; its integrity rests on
+  * parquet's page CRCs, which the writer emits by default and a reader
+  * checks under `parquet.page.verify-checksum.enabled`.
   */
 object SegmentWriter {
 
@@ -63,22 +71,42 @@ object SegmentWriter {
 
   def hidden(fin: Path): Path = new Path(fin.getParent, s".${fin.getName}.tmp")
 
+  /** `p` as a local file when its scheme (else `defaultScheme`, the
+    * scheme of its FileSystem) is `file`.
+    */
+  private def localFile(p: Path, defaultScheme: => String): Option[java.nio.file.Path] =
+    if (Option(p.toUri.getScheme).getOrElse(defaultScheme) == "file")
+      Some(java.nio.file.Paths.get(p.toUri.getPath))
+    else None
+
   /** Rename hidden file `tmp` to its visible name; loud on failure. */
   def publish(fs: FileSystem, tmp: Path): Unit = {
     val n = tmp.getName
     require(n.startsWith(".") && n.endsWith(".tmp"), s"not a hidden segment name: $tmp")
     val fin = new Path(tmp.getParent, n.substring(1, n.length - ".tmp".length))
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"publish: rename $tmp -> $fin failed")
+    localFile(tmp, fs.getUri.getScheme) match {
+      case Some(t) =>
+        Files.move(t, t.resolveSibling(fin.getName), StandardCopyOption.ATOMIC_MOVE); ()
+      case None =>
+        if (!fs.rename(tmp, fin))
+          throw new java.io.IOException(s"publish: rename $tmp -> $fin failed")
+    }
   }
 
   /** The store's only parquet writer construction (segments, `_meta`). */
   private[engine] def groupWriter(
-      tmp: Path, schema: MessageType, conf: Configuration): ParquetWriter[Group] =
-    ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf)).withConf(conf)
+      tmp: Path, schema: MessageType, conf: Configuration): ParquetWriter[Group] = {
+    val out = localFile(tmp, FileSystem.getDefaultUri(conf).getScheme) match {
+      case Some(t) =>
+        Files.createDirectories(t.getParent)
+        new LocalOutputFile(t)
+      case None => HadoopOutputFile.fromPath(tmp, conf)
+    }
+    ExampleParquetWriter.builder(out).withConf(conf)
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.ZSTD)
       .build()
+  }
 
   /** Whether segment `st` stores `timestamp` as INT64, this writer's
     * encoding, by its footer. An older engine's Spark produce plane took

@@ -1717,14 +1717,19 @@ class TopicStore(
 
   /** `f` over every leaf dir (`token=/range=/version=`) of `topic`, in
     * parallel on the local-IO pool — maintenance is driver-side
-    * per-dir work, never a Spark job per dir.
+    * per-dir work, never a Spark job per dir. A failed dir rethrows its
+    * task's own exception, not the pool's `ExecutionException`.
     */
   private def inLeafDirs[T](topic: String)(f: org.apache.hadoop.fs.Path => T): Seq[T] = {
     val topicPath = hpath(s"$dataDir/topic=${escapeDir(topic)}")
     TopicStore.leafDirs(hfs(topicPath.toString), topicPath).map(dir =>
       TopicStore.localWritePool.submit(new java.util.concurrent.Callable[T] {
         override def call(): T = f(dir)
-      })).map(_.get())
+      })).map { task =>
+        try task.get()
+        catch { case e: java.util.concurrent.ExecutionException if e.getCause != null =>
+          throw e.getCause }
+      }
   }
 
   /** Compaction sweep: per (token, range) partition dir, rewrite parquet
