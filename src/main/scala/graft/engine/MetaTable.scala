@@ -111,7 +111,7 @@ private[graft] final class MetaTable(conf: Configuration, rootKey: String) {
     // higher epoch correctly sorts later): forensics for a takeover, and
     // the per-write fence below makes a stale-epoch commit impossible
     val fin = new Path(dirPath,
-      f"part-$stamp%019d-e${PlaneLease.commitEpoch(rootKey)}%012d-" +
+      f"part-$stamp%019d-e${PlaneLease.heldEpoch(rootKey).getOrElse(0L)}%012d-" +
         s"${java.util.UUID.randomUUID()}.parquet")
     val tmp = SegmentWriter.hidden(fin)
     val gf = new SimpleGroupFactory(table.schema)

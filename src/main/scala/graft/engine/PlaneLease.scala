@@ -7,6 +7,7 @@ import scala.collection.immutable.SortedSet
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.logging.log4j.LogManager
 
 /** Another live process holds the produce/maintenance plane (or one of the
   * requested ring partitions) for this root.
@@ -34,107 +35,93 @@ final class PlaneDrainingException(msg: String) extends IllegalStateException(ms
   * commit an ownership epoch among live processes; here process liveness
   * is a heartbeat on an epoch-named lease file over the shared store).
   *
-  * Three claim shapes, splitting the reference's broker role across
-  * processes:
+  * THE CLAIM TREE. Every lease lives in one node of a directory tree
+  * under `<root>/_meta/_plane`, as `lease-<epoch>` files:
+  * {{{
+  *   _plane                      Root           produce, maintenance, rescale,
+  *   |                                          registry, group commits
+  *   |-- part-pNNNNN             Parts(ps)      produce to ring partition N
+  *   `-- consumer                Consumer       registry + every group commit
+  *       `-- part-pNNNNN         ConsumerParts  registry + group commits of N
+  * }}}
+  * A process holds ONE [[Claim]] shape per root for its lifetime; the
+  * shape names the nodes it owns. Partition producers are the reference's
+  * horizontal write plane (disjoint token ranges, offsets assigned without
+  * coordination — `internal/ownership/generator.go:134-144`); range-scoped
+  * consumers are its consumers-per-broker fan-out
+  * (`docs/developer/CONSUMER_ASSIGNMENT.md`).
   *
-  *  - ROOT lease (`<root>/_meta/_plane/lease-<epoch>`): ONE writer JVM
-  *    owns every mutating path — produce, maintenance, rescale, consumer
-  *    registry, group commits.
-  *  - PARTITION leases (`<root>/_meta/_plane/part-p<NNNNN>/lease-<epoch>`,
-  *    one directory per ring partition): N writer JVMs own DISJOINT ring
-  *    partitions of one root and produce to them concurrently — the
-  *    reference's horizontal write plane, where each broker owns disjoint
-  *    token ranges and assigns their offsets without coordination
-  *    (`internal/ownership/generator.go:134-144`,
-  *    `internal/discovery/discoverer.go:343-366`). A partition-scoped
-  *    writer may ONLY produce to its owned partitions (watermarks land in
-  *    a per-claim lane table, never the shared root table).
-  *  - CONSUMER-PLANE lease (`<root>/_meta/_plane/consumer/lease-<epoch>`):
-  *    one JVM owns the registry rows and group-offset commits — the
-  *    consumer-serving half of the reference broker — COMPATIBLE with
-  *    live partition producers (disjoint tables), exclusive with a root
-  *    owner and with a second consumer process (group commits are a
-  *    cross-process read-modify-write).
-  *  - RANGE-SCOPED CONSUMER leases
-  *    (`<root>/_meta/_plane/consumer/part-p<NNNNN>/lease-<epoch>`): N
-  *    JVMs fan the consumer plane out over disjoint ring partitions —
-  *    each registers its own consumers and commits group offsets for its
-  *    claim only (per-claim lane tables under the group-offset scopes) —
-  *    the reference's consumers-per-broker assignment
-  *    (`docs/developer/CONSUMER_ASSIGNMENT.md`). Compatible with
-  *    partition producers and with each other; exclusive with a root
-  *    owner and with a FULL consumer owner (both ways).
+  * THE COMPATIBILITY RULE. Two nodes conflict when they are the same node
+  * or one is an ancestor of the other; siblings never do. So producer
+  * `part-p*` and the consumer subtree coexist (disjoint tables), and so do
+  * disjoint partition sets; everything else excludes:
+  * {{{
+  *   holder \ claimant   Root   Parts(B)     Consumer   ConsumerParts(B)
+  *   Root                 x      x            x          x
+  *   Parts(A)             x      if A∩B≠∅     -          -
+  *   Consumer             x      -            x          x
+  *   ConsumerParts(A)     x      -            x          if A∩B≠∅
+  * }}}
   *
-  *  Whatever no shape covers — rescale, maintenance, the stream ledger —
-  *  stays with a root-lease owner and fails loudly elsewhere
-  *  ([[assertAuthority]]).
+  * ONE ACQUISITION ([[acquire]]), claim-then-validate, safe under races
+  * because each side validates AFTER creating its own files, so at least
+  * one of two racing conflicting claimants observes the other and backs
+  * off (both backing off is possible — loud and retryable, never dual
+  * authority):
+  *  1. a scoped claim (anything but Root) checks the drain gate;
+  *  1. each ancestor node with a live REAL foreign lease throws; a stale
+  *     one gets a MARKER at epoch+1 (`mode=marker`, `by=<role>`): it
+  *     fences the paused owner but claims nothing, so it blocks no other
+  *     claimant;
+  *  1. own nodes are claimed ascending, create-exclusive on the next
+  *     epoch ([[claimDir]]);
+  *  1. the ancestors are re-validated;
+  *  1. each existing descendant node with a live foreign lease throws; a
+  *     stale one is superseded at epoch+1 by a real lease this process
+  *     holds and beats (a paused owner resuming later fences);
+  *  1. a failure rolls back only this claimant's own files;
+  *  1. superseded epochs are folded only after the whole claim validated,
+  *     so a failed claim never erases a marker that keeps an owner fenced.
   *
-  * COORDINATED DRAIN ([[requestDrain]]/[[clearDrain]]): a maintenance
-  * coordinator asks every scoped claimant to flush-and-release without
-  * operator sequencing — drain files ride the per-commit fence listing
-  * (zero extra round-trips for active claimants; idle ones release at
-  * the next beat), in-flight commits abort RETRYABLY
-  * ([[PlaneDrainingException]]), and claimants re-acquire automatically
-  * after the clear. Abandoned drains age out ([[DrainMaxAgeMs]]).
+  * Mutual exclusion within a node is CREATE-EXCLUSIVE on the per-epoch
+  * name: O_CREAT|O_EXCL via NIO on the local filesystem, HDFS
+  * `create(overwrite=false)`, the conditional-create builder on connectors
+  * that advertise `fs.option.create.conditional.overwrite` (S3
+  * If-None-Match, GCS generation-match); anything else falls back to
+  * `create(overwrite=false)` with a logged warning (a narrow
+  * check-then-create window on simultaneous FIRST acquisition only).
   *
-  * Mutual exclusion is CREATE-EXCLUSIVE on the fixed per-epoch name inside
-  * each directory: the epoch number itself is the mutex, so an acquisition
-  * race has exactly one winner per directory (O_CREAT|O_EXCL via NIO on
-  * the local filesystem; HDFS `create(overwrite=false)` is atomic
-  * create-exclusive; object-store connectors that advertise conditional
-  * creates — `fs.option.create.conditional.overwrite`, S3 If-None-Match /
-  * GCS generation-match under the hood — get the builder path below;
-  * everything else falls back to plain `create(overwrite=false)` with a
-  * once-per-scheme warning, a narrow check-then-create window on
-  * simultaneous FIRST acquisition only).
-  *
-  * Root/partition exclusion is claim-then-validate, safe under races
-  * because each side validates AFTER creating its own file, so at least
-  * one side always observes the other and backs off (both backing off is
-  * possible — loud and retryable, never dual authority):
-  *  - a root claimant creates its root lease, then scans the partition
-  *    dirs: any LIVE foreign partition lease → release + throw; any STALE
-  *    one is superseded at epoch+1 (file kept, so a paused partition owner
-  *    resuming later fences instead of writing).
-  *  - a partition claimant first supersedes a STALE real root lease with a
-  *    higher-epoch MARKER file (`mode=parts` in the content — it fences a
-  *    paused root owner but does not claim root authority, so concurrent
-  *    partition claimants are not blocked by it), claims its partition
-  *    dirs ascending, then re-validates that no live real root lease
-  *    appeared.
-  *
-  * Liveness is judged by the TTL the OWNER recorded in its lease file
-  * content (falling back to the claimant's TTL for pre-TTL-format files):
-  * a claimant configured with a short test TTL can therefore never judge
-  * a healthy production owner stale.
+  * Liveness is judged by the TTL the OWNER recorded in its lease content
+  * (the claimant's TTL only for pre-TTL-format files): a claimant with a
+  * short test TTL can never judge a healthy production owner stale.
   *
   * Fencing is two-layered:
-  *  - heartbeat-granular: the beat (TTL/4) refreshes mtimes THROUGH THE
-  *    FILESYSTEM RESOLVED AT ACQUISITION (a fresh default Configuration
-  *    here silently broke conf-dependent filesystems — S3A credentials,
-  *    custom `fs.<scheme>.impl` — leaving the owner unrefreshed AND
-  *    unfenced: the exact dual-writer the lease exists to prevent), and
-  *    fences when a higher epoch is visible. Beat failures are counted on
-  *    [[heartbeatFailures]] (a `/metrics` counter), never swallowed into
-  *    silence.
-  *  - per-write: mutating commit points (the store's rename-first meta
-  *    swaps, the Spark produce's segment publish) call
-  *    [[assertCurrentAtCommit]], which re-lists the relevant lease
-  *    directory and rejects the commit when a higher epoch is visible —
-  *    the reference's per-group generation re-check
-  *    (`internal/producing/coalescer.go:93-106`). This closes the TTL/4
-  *    dual-writer window at the point that matters: a paused owner's next
-  *    COMMIT fails, not merely its next heartbeat.
+  *  - heartbeat-granular: the beat (TTL/4) refreshes every held file
+  *    through the FileSystem resolved at acquisition (conf-dependent
+  *    schemes — S3A credentials, custom `fs.<scheme>.impl` — keep
+  *    beating) and fences when a higher epoch is visible or the own file
+  *    vanished. Beat failures count on [[heartbeatFailures]].
+  *  - per-write: commit points call [[assertCurrentAtCommit]], which
+  *    re-lists the own nodes the write touches and rejects the commit when
+  *    a higher epoch is visible — the reference's per-group generation
+  *    re-check (`internal/producing/coalescer.go:93-106`). A paused
+  *    owner's next COMMIT fails, not merely its next heartbeat.
+  *
+  * COORDINATED DRAIN ([[requestDrain]]/[[clearDrain]]): a coordinator asks
+  * every scoped claimant to release; drain files ride the per-commit fence
+  * listing, in-flight commits abort RETRYABLY ([[PlaneDrainingException]]),
+  * and claimants re-acquire after the clear. Abandoned drains age out
+  * ([[DrainMaxAgeMs]]).
   *
   * Read-only observers (the DSv2 source/observer pattern) never acquire
   * and need no lease.
   */
 object PlaneLease {
 
-  /** What a mutating operation needs from the lease plane. A ROOT-lease
-    * holder has all three; a partition-scoped holder has only
-    * [[ProduceAuthority]] within its claim; a consumer-plane holder has
-    * only [[ConsumerAuthority]].
+  private val log = LogManager.getLogger(getClass.getName.stripSuffix("$"))
+
+  /** What a mutating operation needs from the lease plane; which
+    * [[Claim]] grants which is [[grants]].
     */
   sealed trait Authority
   /** Maintenance, rescale, generation flips, the stream ledger —
@@ -147,8 +134,7 @@ object PlaneLease {
     * rows. Every consumer-plane holder (full or range-scoped) has it —
     * the registry swap is convergent across members (rename-first,
     * last-writer-wins on identical policy rows), so range-scoped members
-    * may register their own consumers, the reference's
-    * consumers-per-broker fan-out (`docs/developer/CONSUMER_ASSIGNMENT.md`).
+    * may register their own consumers.
     */
   case object ConsumerAuthority extends Authority
   /** Committing group offsets for exactly `parts` — a range-scoped
@@ -156,6 +142,70 @@ object PlaneLease {
     * per-claim lane table, like producer watermarks).
     */
   final case class ConsumerCommitAuthority(parts: Set[Int]) extends Authority
+
+  /** The nodes of the claim tree one process owns for a root. */
+  sealed trait Claim {
+    /** Role tag: a marker's `by=` value and the wording of refusals. */
+    def by: String
+    /** How refusals and mode-change errors name the claim. */
+    def label: String
+    /** What the claim may write, for the refusal of everything else. */
+    def may: String
+    /** The ring partitions a scoped claim covers. */
+    def parts: Option[SortedSet[Int]] = None
+    /** The nodes this claim owns under the plane dir, ascending. */
+    private[engine] def own(plane: Path): Seq[Path]
+  }
+
+  object Claim {
+    case object Root extends Claim {
+      val by = "root"
+      val label = "the root lease"
+      val may = "write everything"
+      def own(plane: Path) = Seq(plane)
+    }
+    final case class Parts(ps: SortedSet[Int]) extends Claim {
+      val by = "partition"
+      require(ps.nonEmpty && ps.head >= 0, s"$by lease needs a non-empty set of ring ordinals, got $ps")
+      def label = s"a PARTITION-scoped lease (${specOf(ps)})"
+      val may = "produce to its own partitions"
+      override def parts = Some(ps)
+      def own(plane: Path) = ps.toSeq.map(partDir(plane, _))
+    }
+    case object Consumer extends Claim {
+      val by = "consumer-plane"
+      val label = "the CONSUMER-PLANE lease"
+      val may = "register consumers and commit group offsets"
+      def own(plane: Path) = Seq(consumerDir(plane))
+    }
+    final case class ConsumerParts(ps: SortedSet[Int]) extends Claim {
+      val by = "consumer-partition"
+      require(ps.nonEmpty && ps.head >= 0, s"$by lease needs a non-empty set of ring ordinals, got $ps")
+      def label = s"a RANGE-SCOPED consumer lease (${specOf(ps)})"
+      val may = "register consumers and commit group offsets within its claim"
+      override def parts = Some(ps)
+      def own(plane: Path) = ps.toSeq.map(partDir(consumerDir(plane), _))
+    }
+  }
+
+  /** Whether `c` grants `a` at all; a scoped claim then also needs the
+    * authority's partitions inside its own ([[checkAuthority]]).
+    */
+  private def grants(c: Claim, a: Authority): Boolean = (c, a) match {
+    case (Claim.Root, _) | (Claim.Parts(_), ProduceAuthority(_)) => true
+    case (Claim.Consumer | Claim.ConsumerParts(_),
+          ConsumerAuthority | ConsumerCommitAuthority(_)) => true
+    case _ => false
+  }
+
+  /** The partitions an authority restricts its write to; None for a
+    * partition-agnostic write.
+    */
+  private def partsOf(a: Authority): Option[Set[Int]] = a match {
+    case ProduceAuthority(ps) => Some(ps)
+    case ConsumerCommitAuthority(ps) => Some(ps)
+    case _ => None
+  }
 
   /** Stable identity of this process for lease ownership: pid@host plus a
     * random component (two processes can share pid@host across container
@@ -183,29 +233,31 @@ object PlaneLease {
     */
   private[graft] val commitFenceLists = new AtomicLong
 
-  /** One lease file this JVM holds: the directory it guards (the root
-    * plane dir, or one ring partition's dir) and the epoch claimed there.
+  /** One lease file this JVM holds: the claim node it guards and the
+    * epoch claimed there.
     */
   private final case class LeaseFile(dir: Path, epoch: Long) {
     def path: Path = new Path(dir, f"lease-$epoch%020d")
   }
 
-  /** Everything needed to keep (and release) a claim WITHOUT re-resolving
-    * session state: `fs` is the FileSystem resolved from the acquisition
-    * Configuration — heartbeats and the shutdown release reuse it, so a
-    * root whose filesystem needs session conf keeps beating.
+  /** A claim this JVM holds. `own` are the files in the claim's own
+    * nodes (the ones commits fence on); `kept` the stale descendant leases
+    * it superseded, held and beaten so their paused owners stay fenced.
+    * `fs` is the FileSystem resolved from the acquisition Configuration —
+    * heartbeats and releases reuse it.
     */
   private final case class Held(
       root: String,
-      files: Vector[LeaseFile],
-      parts: Option[SortedSet[Int]],
-      consumer: Boolean,
+      claim: Claim,
+      own: Vector[LeaseFile],
+      kept: Vector[LeaseFile],
       ttlMs: Long,
-      fs: FileSystem)
+      fs: FileSystem) {
+    def files: Vector[LeaseFile] = own ++ kept
+  }
 
   /** Parsed lease-file content. `ttlMs` None for pre-format or in-flight
-    * (empty) files; `marker` for a partition claimant's root-dir fence
-    * marker, which fences a paused root owner but claims no authority.
+    * (empty) files; `marker` for a fence marker, which claims nothing.
     */
   private final case class LeaseInfo(owner: String, ttlMs: Option[Long], marker: Boolean)
 
@@ -236,7 +288,7 @@ object PlaneLease {
   @volatile private var beater: java.util.concurrent.ScheduledExecutorService = _
 
   private def planeDir(root: String) = new Path(new Path(root, "_meta"), "_plane")
-  private def partDir(plane: Path, p: Int) = new Path(plane, f"part-p$p%05d")
+  private def partDir(parent: Path, p: Int) = new Path(parent, f"part-p$p%05d")
   private def consumerDir(plane: Path) = new Path(plane, "consumer")
 
   /** Fast-path guard for every root-authority mutating store operation:
@@ -245,116 +297,61 @@ object PlaneLease {
     * if another live process holds the plane or any of its partitions,
     * loud [[PlaneFencedException]] forever after a takeover.
     */
-  def ensureOwned(
-      rootKey: String,
-      root: String,
-      conf: Configuration,
+  def ensureOwned(rootKey: String, root: String, conf: Configuration,
       ttlMs: Long = DefaultTtlMs): Boolean =
-    ensure(rootKey, root, conf, ttlMs, None, consumer = false)
+    ensure(rootKey, root, conf, Claim.Root, ttlMs)
 
-  /** CONSUMER-PLANE acquisition: claim the registry/group-commit plane
-    * of the root (`_meta/_plane/consumer/lease-<epoch>`) without any
-    * produce or maintenance authority. Compatible with live
-    * partition-scoped producers (they never touch consumer tables);
-    * mutually exclusive with a root-lease owner (who IS the consumer
-    * plane) and with a second consumer-plane process (group-offset
-    * commits are a cross-process read-modify-write).
+  /** The registry/group-commit plane of the root, without produce or
+    * maintenance authority ([[Claim.Consumer]]).
     */
-  def ensureOwnedConsumer(
-      rootKey: String,
-      root: String,
-      conf: Configuration,
+  def ensureOwnedConsumer(rootKey: String, root: String, conf: Configuration,
       ttlMs: Long = DefaultTtlMs): Boolean =
-    ensure(rootKey, root, conf, ttlMs, None, consumer = true)
+    ensure(rootKey, root, conf, Claim.Consumer, ttlMs)
 
-  /** RANGE-SCOPED consumer-plane acquisition
-    * (`_meta/_plane/consumer/part-p<NNNNN>/lease-<epoch>`): this process
-    * serves polls and commits group offsets for exactly `parts` — the
-    * reference's consumers-per-broker fan-out over disjoint token ranges
-    * (`docs/developer/CONSUMER_ASSIGNMENT.md`). Compatible with live
-    * partition producers AND with other range-scoped consumer members
-    * (disjoint claims); exclusive with a root owner and with a FULL
-    * consumer-plane owner (whose commits cover every partition).
+  /** Polls and group commits for exactly `parts` ([[Claim.ConsumerParts]]). */
+  def ensureOwnedConsumerPartitions(rootKey: String, root: String, conf: Configuration,
+      parts: SortedSet[Int], ttlMs: Long = DefaultTtlMs): Boolean =
+    ensure(rootKey, root, conf, Claim.ConsumerParts(parts), ttlMs)
+
+  /** Produce to exactly `parts` (ring partition ordinals) of the root
+    * ([[Claim.Parts]]).
     */
-  def ensureOwnedConsumerPartitions(
-      rootKey: String,
-      root: String,
-      conf: Configuration,
-      parts: SortedSet[Int],
-      ttlMs: Long = DefaultTtlMs): Boolean = {
-    require(parts.nonEmpty && parts.head >= 0,
-      s"consumer-partition lease needs a non-empty set of ring ordinals, got $parts")
-    ensure(rootKey, root, conf, ttlMs, Some(parts), consumer = true)
-  }
+  def ensureOwnedPartitions(rootKey: String, root: String, conf: Configuration,
+      parts: SortedSet[Int], ttlMs: Long = DefaultTtlMs): Boolean =
+    ensure(rootKey, root, conf, Claim.Parts(parts), ttlMs)
 
-  /** Partition-scoped acquisition: claim exactly `parts` (ring partition
-    * ordinals) of the root. Disjoint claimants coexist; an overlapping
-    * claim or a live root-lease owner rejects loudly. The holding JVM may
-    * only produce to these partitions.
+  /** Hold `claim` on the root: a no-op (false) when this JVM already holds
+    * it, acquisition (true) on first touch; a different claim shape than
+    * the one held throws.
     */
-  def ensureOwnedPartitions(
-      rootKey: String,
-      root: String,
-      conf: Configuration,
-      parts: SortedSet[Int],
-      ttlMs: Long = DefaultTtlMs): Boolean = {
-    require(parts.nonEmpty && parts.head >= 0,
-      s"partition lease needs a non-empty set of ring ordinals, got $parts")
-    ensure(rootKey, root, conf, ttlMs, Some(parts), consumer = false)
-  }
-
-  private def ensure(
-      rootKey: String,
-      root: String,
-      conf: Configuration,
-      ttlMs: Long,
-      parts: Option[SortedSet[Int]],
-      consumer: Boolean): Boolean = {
-    if (fencedRoots.contains(rootKey))
-      throw new PlaneFencedException(
-        s"this process's plane lease for $root was superseded by a higher epoch " +
-          "(another process took over after a missed heartbeat) — refusing to " +
-          "write with stale authority; restart the store against the root to " +
-          "contend for a fresh lease")
+  def ensure(rootKey: String, root: String, conf: Configuration, claim: Claim,
+      ttlMs: Long): Boolean = {
+    assertNotFenced(rootKey)
     // a drain window releases this JVM's scoped claims and holds off
     // re-acquisition until the coordinator clears it (retryable). Under
     // the acquisition lock with a RE-CHECK: two threads racing here after
     // a clear would otherwise double-release — the second one deleting
-    // the first one's freshly re-acquired lease files (a retryable drain
-    // turned into a permanent fence, or a vacuous-fence window while
-    // held is empty).
+    // the first one's freshly re-acquired lease files
     if (drainingRoots.contains(rootKey)) monitorFor(rootKey).synchronized {
       if (drainingRoots.contains(rootKey)) handleDraining(rootKey, root, conf)
     }
     val cur = held.get(rootKey)
     if (cur != null) {
-      if (cur.parts == parts && cur.consumer == consumer) return false
+      if (cur.claim == claim) return false
       throw new IllegalStateException(
-        s"plane-lease mode change for $root (held=${modeName(cur.parts, cur.consumer)}, " +
-          s"requested=${modeName(parts, consumer)}): a process claims ONE shape per " +
-          "root for its lifetime — restart the process to change the claim")
+        s"plane-lease mode change for $root (held ${cur.claim.label}, requested " +
+          s"${claim.label}): a process claims ONE shape per root for its " +
+          "lifetime — restart the process to change the claim")
     }
     // PER-ROOT monitor: acquisition and drain handling for one root
-    // serialize with each other (the double-release fix needs exactly
-    // that atomicity) without stalling unrelated roots behind this
-    // root's filesystem round-trips
-    monitorFor(rootKey).synchronized {
-      if (held.containsKey(rootKey)) {
-        return ensure(rootKey, root, conf, ttlMs, parts, consumer)
-      }
-      val h =
-        if (consumer) parts match {
-          case None => acquireConsumer(root, conf, ttlMs)
-          case Some(ps) => acquireConsumerParts(root, conf, ps, ttlMs)
-        }
-        else parts match {
-          case None => acquireRoot(root, conf, ttlMs)
-          case Some(ps) => acquireParts(root, conf, ps, ttlMs)
-        }
-      held.put(rootKey, h)
-      startBeater()
-      true
+    // serialize without stalling unrelated roots behind this root's
+    // filesystem round-trips
+    val acquired = monitorFor(rootKey).synchronized {
+      !held.containsKey(rootKey) && { held.put(rootKey, acquire(root, conf, claim, ttlMs)); true }
     }
+    if (!acquired) return ensure(rootKey, root, conf, claim, ttlMs)
+    startBeater()
+    true
   }
 
   // one monitor per root for {acquire | drain-release} mutual exclusion;
@@ -369,18 +366,9 @@ object PlaneLease {
     * hold off until the coordinator clears the master drain file.
     */
   private def handleDraining(rootKey: String, root: String, conf: Configuration): Unit = {
-    val h = held.remove(rootKey)
-    if (h != null) h.files.foreach { lf =>
-      deleteLease(h.fs, lf)
-    }
+    Option(held.remove(rootKey)).foreach(release)
     val plane = planeDir(root)
-    val fs = plane.getFileSystem(conf)
-    if (activeDrainAt(fs, new Path(plane, DrainFileName)))
-      throw new PlaneDrainingException(
-        s"the write plane for $root is draining for a coordinated " +
-          "rescale/maintenance window — this process's scoped claims were " +
-          "released; retry after the coordinator clears the drain (the store " +
-          "re-acquires automatically on the next mutating call)")
+    assertNotDraining(plane.getFileSystem(conf), plane, root)
     drainingRoots.remove(rootKey)
     ()
   }
@@ -389,10 +377,6 @@ object PlaneLease {
   private def activeDrainAt(fs: FileSystem, p: Path): Boolean =
     try drainActive(fs.getFileStatus(p))
     catch { case _: java.io.FileNotFoundException => false }
-
-  private def modeName(parts: Option[SortedSet[Int]], consumer: Boolean): String =
-    if (consumer) parts.fold("consumer-plane")(ps => s"consumer partitions ${specOf(ps)}")
-    else parts.fold("root")(ps => s"partitions ${specOf(ps)}")
 
   /** Canonical dash-range spec of a partition set ("0-5" / "0-3_8-11"). */
   def specOf(parts: SortedSet[Int]): String = {
@@ -410,175 +394,101 @@ object PlaneLease {
     sb.result()
   }
 
-  /** Acquire (or take over) the root's ROOT lease: claim the plane dir,
-    * then validate no live foreign partition claims exist (superseding
-    * stale ones so their paused owners fence on resume).
-    */
-  private def acquireRoot(root: String, conf: Configuration, ttlMs: Long): Held = {
+  /** Acquire `claim` on the root: the seven steps of the class doc. */
+  private def acquire(root: String, conf: Configuration, claim: Claim, ttlMs: Long): Held = {
     val plane = planeDir(root)
     val fs = plane.getFileSystem(conf)
-    fs.mkdirs(plane)
-    val rootClaim = claimDir(fs, plane, ttlMs,
-      what = s"the produce/maintenance plane for $root")
-    val taken = Vector.newBuilder[LeaseFile]
-    taken += rootClaim
+    if (claim != Claim.Root) assertNotDraining(fs, plane, root)
+    val own = claim.own(plane)
+    val above = own.flatMap(ancestorsOf(plane, _)).distinct
+    val markers = above.flatMap(fenceStaleAncestor(fs, _, root, claim, ttlMs))
+    val owned = Vector.newBuilder[LeaseFile]
+    val kept = Vector.newBuilder[LeaseFile]
     try {
-      // a root claim subsumes every SCOPED claim (partition producers,
-      // the consumer plane): live foreign scoped claims reject the root
-      // claim; stale ones are superseded at epoch+1 (file KEPT) so a
-      // paused scoped owner resuming later observes the higher epoch and
-      // fences instead of writing
-      scopedDirs(fs, plane).foreach { d =>
+      own.foreach { d =>
+        fs.mkdirs(d)
+        owned += claimDir(fs, d, ttlMs, s"${nodeName(d)} of $root")
+      }
+      above.foreach { a =>
+        liveRealLease(fs, a, ttlMs).foreach { case (e, info) =>
+          throw new PlaneLeaseHeldException(
+            s"${nodeName(a)} of $root was claimed concurrently (epoch $e by " +
+              s"${ownerName(info)}) — releasing this ${claim.by} claim")
+        }
+      }
+      own.flatMap(subtree(fs, _)).foreach { d =>
         newestLease(fs, d) match {
           case Some((e, st, info)) if info.owner != ownerId =>
             if (isLive(st, info, ttlMs))
               throw new PlaneLeaseHeldException(
-                s"${scopedName(d)} of $root is leased by ${ownerName(info)} " +
-                  s"(epoch $e) — a root-plane writer would race the scoped " +
-                  "owner; wait for the scoped processes to exit")
+                s"${nodeName(d)} of $root is leased by ${ownerName(info)} (epoch $e) — " +
+                  s"a ${claim.by} claim would race its owner; wait for that process to exit")
             val lf = LeaseFile(d, e + 1)
             if (!createExclusive(fs, lf.path, leaseContent(ttlMs)))
-              throw new PlaneLeaseHeldException(
-                s"lost the race superseding a stale scoped lease under $d")
-            taken += lf
+              throw new PlaneLeaseHeldException(s"lost the race superseding a stale lease under $d")
+            kept += lf
           case _ => ()
         }
       }
     } catch {
       case t: Throwable =>
-        taken.result().foreach(lf =>
-          deleteLease(fs, lf))
+        (owned.result() ++ kept.result()).foreach(deleteLease(fs, _))
         throw t
     }
-    val files = taken.result()
-    // fold superseded epochs only AFTER the whole acquisition validated: a
-    // rollback above deletes only OUR files, so every pre-existing epoch
-    // (including a scoped claimant's fence marker over a paused root
-    // owner) survives a FAILED acquisition — folding inside claimDir
-    // erased that history and let the paused owner self-heal unfenced
-    files.foreach(lf => foldBelow(fs, lf.dir, lf.epoch))
-    Held(root, files, None, consumer = false, ttlMs, fs)
+    val h = Held(root, claim, owned.result(), kept.result(), ttlMs, fs)
+    (h.files ++ markers).foreach(lf => foldBelow(fs, lf.dir, lf.epoch))
+    h
   }
 
-  /** Acquire the FULL CONSUMER-PLANE lease: fence a stale real root owner
-    * with a marker, claim the consumer dir, re-validate the root — the
-    * same claim-then-validate dance as partitions; live partition
-    * producer claims are COMPATIBLE (producers never touch
-    * registry/group tables), but live RANGE-SCOPED consumer claims
-    * (`consumer/part-p*`) reject (a full owner's commits cover every
-    * partition); stale ones are superseded at epoch+1 (file kept) so a
-    * paused scoped owner fences on resume.
+  /** Step 2 for one ancestor node: a live real foreign lease throws; a
+    * stale one gets a marker at epoch+1. Losing the marker race needs no
+    * handling here: a real winner fails the re-validation after the
+    * claim, and a concurrent scoped claimant's marker fences the same
+    * owner.
     */
-  private def acquireConsumer(root: String, conf: Configuration, ttlMs: Long): Held = {
-    val plane = planeDir(root)
-    val fs = plane.getFileSystem(conf)
-    fs.mkdirs(plane)
-    assertNotDraining(fs, plane, root)
-    supersedeStaleRoot(fs, plane, root, ttlMs, "consumer-plane")
-    val d = consumerDir(plane)
-    fs.mkdirs(d)
-    val claim = claimDir(fs, d, ttlMs,
-      what = s"the consumer plane (registry/group commits) for $root")
-    val taken = Vector.newBuilder[LeaseFile]
-    taken += claim
-    try {
-      liveRealRootLease(fs, plane, ttlMs).foreach { case (e, info) =>
-        throw new PlaneLeaseHeldException(
-          s"the root plane for $root was claimed concurrently " +
-            s"(epoch $e by ${ownerName(info)}) — releasing this consumer-plane claim")
-      }
-      partSubDirs(fs, d).foreach { pd =>
-        newestLease(fs, pd) match {
-          case Some((e, st, info)) if info.owner != ownerId =>
-            if (isLive(st, info, ttlMs))
-              throw new PlaneLeaseHeldException(
-                s"${scopedName(pd)} of $root is leased by ${ownerName(info)} " +
-                  s"(epoch $e) — a full consumer-plane owner would race the " +
-                  "range-scoped member's group commits; wait for the scoped " +
-                  "consumer processes to exit")
-            val lf = LeaseFile(pd, e + 1)
-            if (!createExclusive(fs, lf.path, leaseContent(ttlMs)))
-              throw new PlaneLeaseHeldException(
-                s"lost the race superseding a stale consumer range claim under $pd")
-            taken += lf
-          case _ => ()
-        }
-      }
-    } catch {
-      case t: Throwable =>
-        taken.result().foreach(lf =>
-          deleteLease(fs, lf))
-        throw t
-    }
-    val files = taken.result()
-    files.foreach(lf => foldBelow(fs, lf.dir, lf.epoch)) // post-validation only
-    Held(root, files, None, consumer = true, ttlMs, fs)
-  }
-
-  /** Acquire RANGE-SCOPED consumer leases: fence a stale real root owner
-    * and a stale FULL consumer owner with markers, claim each
-    * `consumer/part-p*` dir ascending, re-validate both.
-    */
-  private def acquireConsumerParts(
-      root: String, conf: Configuration, parts: SortedSet[Int], ttlMs: Long): Held = {
-    val plane = planeDir(root)
-    val fs = plane.getFileSystem(conf)
-    fs.mkdirs(plane)
-    assertNotDraining(fs, plane, root)
-    supersedeStaleRoot(fs, plane, root, ttlMs, "consumer-partition")
-    val cd = consumerDir(plane)
-    fs.mkdirs(cd)
-    // a live FULL consumer owner blocks; a stale one is superseded by a
-    // marker in the consumer dir (fences it on resume, claims nothing)
-    newestLease(fs, cd) match {
+  private def fenceStaleAncestor(fs: FileSystem, a: Path, root: String, claim: Claim,
+      ttlMs: Long): Option[LeaseFile] =
+    newestLease(fs, a) match {
       case Some((e, st, info)) if !info.marker && info.owner != ownerId =>
         if (isLive(st, info, ttlMs))
           throw new PlaneLeaseHeldException(
-            s"the consumer plane for $root is leased PLANE-WIDE by " +
-              s"${ownerName(info)} (epoch $e) — consumer-partition claimants " +
-              "cannot coexist with a full consumer-plane owner")
-        if (!createExclusive(fs, new Path(cd, f"lease-${e + 1}%020d"),
-            markerContent(ttlMs, "consumer-partition"))) {
-          liveRealDirLease(fs, cd, ttlMs).foreach { case (e2, i2) =>
-            throw new PlaneLeaseHeldException(
-              s"the consumer plane for $root was claimed (epoch $e2 by " +
-                s"${ownerName(i2)}) while this consumer-partition claim was " +
-                "superseding a stale lease")
-          }
-        } else foldBelow(fs, cd, e + 1)
-      case _ => ()
+            s"${nodeName(a)} of $root is leased " +
+              s"${if (a.getName == "_plane") "ROOT-WIDE" else "PLANE-WIDE"} by " +
+              s"${ownerName(info)} (epoch $e) — ${claim.by} claimants cannot " +
+              "coexist with its owner")
+        val lf = LeaseFile(a, e + 1)
+        if (createExclusive(fs, lf.path, markerContent(ttlMs, claim.by))) Some(lf) else None
+      case _ => None
     }
-    val taken = Vector.newBuilder[LeaseFile]
-    var ok = false
-    try {
-      parts.foreach { p =>
-        val d = new Path(cd, f"part-p$p%05d")
-        fs.mkdirs(d)
-        taken += claimDir(fs, d, ttlMs,
-          what = s"consumer range partition $p of $root")
-      }
-      liveRealRootLease(fs, plane, ttlMs).foreach { case (e, info) =>
-        throw new PlaneLeaseHeldException(
-          s"the root plane for $root was claimed concurrently " +
-            s"(epoch $e by ${ownerName(info)}) — releasing this consumer-partition claim")
-      }
-      liveRealDirLease(fs, cd, ttlMs).foreach { case (e, info) =>
-        throw new PlaneLeaseHeldException(
-          s"the consumer plane for $root was claimed PLANE-WIDE concurrently " +
-            s"(epoch $e by ${ownerName(info)}) — releasing this consumer-partition claim")
-      }
-      ok = true
-    } finally {
-      if (!ok) taken.result().foreach(lf =>
-        deleteLease(fs, lf))
+
+  /** Claim nodes strictly above `d` in the plane tree, top-down. */
+  private def ancestorsOf(plane: Path, d: Path): Seq[Path] =
+    Iterator.iterate(d)(_.getParent).slice(1, 1 + d.depth - plane.depth).toSeq.reverse
+
+  /** Existing claim nodes strictly below `d`: the plane dir and the
+    * consumer dir have children, `part-p*` nodes are leaves (not listed).
+    */
+  private def subtree(fs: FileSystem, d: Path): Seq[Path] =
+    if (d.getName.startsWith("part-p")) Nil
+    else {
+      val kids = (try fs.listStatus(d).toSeq
+        catch { case _: java.io.FileNotFoundException => Seq.empty })
+        .filter(st => st.isDirectory &&
+          (st.getPath.getName.startsWith("part-p") || st.getPath.getName == "consumer"))
+        .map(_.getPath)
+      kids ++ kids.flatMap(subtree(fs, _))
     }
-    val files = taken.result()
-    files.foreach(lf => foldBelow(fs, lf.dir, lf.epoch)) // post-validation only
-    Held(root, files, Some(parts), consumer = true, ttlMs, fs)
+
+  private def nodeName(d: Path): String = d.getName match {
+    case "_plane" => "the produce/maintenance plane"
+    case "consumer" => "the consumer plane"
+    case n if d.getParent.getName == "consumer" =>
+      s"consumer range partition ${n.stripPrefix("part-p").toInt}"
+    case n => s"ring partition ${n.stripPrefix("part-p").toInt}"
   }
 
-  /** A live REAL (non-marker) foreign lease in one directory, if any. */
-  private def liveRealDirLease(
+  /** A live REAL (non-marker) foreign lease in one node, if any. */
+  private def liveRealLease(
       fs: FileSystem, dir: Path, ttlMs: Long): Option[(Long, LeaseInfo)] =
     newestLease(fs, dir) match {
       case Some((e, st, info))
@@ -587,104 +497,16 @@ object PlaneLease {
       case _ => None
     }
 
-  /** `part-p*` claim dirs directly under `dir`. */
-  private def partSubDirs(fs: FileSystem, dir: Path): Seq[Path] =
-    (try fs.listStatus(dir).toSeq
-     catch { case _: java.io.FileNotFoundException => Seq.empty })
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("part-p"))
-      .map(_.getPath)
-
-  /** A live REAL (non-marker) foreign root lease, if any. */
-  private def liveRealRootLease(
-      fs: FileSystem, plane: Path, ttlMs: Long): Option[(Long, LeaseInfo)] =
-    liveRealDirLease(fs, plane, ttlMs)
-
-  /** A STALE real root lease is superseded by a higher-epoch MARKER
-    * (fences the paused root owner, blocks no scoped claimant); a LIVE
-    * one throws. Shared by the partition and consumer acquisitions.
-    */
-  private def supersedeStaleRoot(
-      fs: FileSystem, plane: Path, root: String, ttlMs: Long, who: String): Unit =
-    newestLease(fs, plane) match {
-      case Some((e, st, info)) if !info.marker && info.owner != ownerId =>
-        if (isLive(st, info, ttlMs))
-          throw new PlaneLeaseHeldException(
-            s"the produce/maintenance plane for $root is leased ROOT-WIDE by " +
-              s"${ownerName(info)} (epoch $e) — $who claimants cannot coexist " +
-              "with a root-plane owner")
-        if (createExclusive(fs, new Path(plane, f"lease-${e + 1}%020d"),
-            markerContent(ttlMs, who))) {
-          foldBelow(fs, plane, e + 1)
-        } else {
-          // lost the supersede race: a real claimant winning here means
-          // the root plane is being taken — back off
-          liveRealRootLease(fs, plane, ttlMs).foreach { case (e2, i2) =>
-            throw new PlaneLeaseHeldException(
-              s"the root plane for $root was claimed (epoch $e2 by ${ownerName(i2)}) " +
-                s"while this $who claim was superseding a stale lease")
-          }
-        }
-      case _ => ()
-    }
-
-  /** Acquire partition-scoped leases: fence a stale real root owner with
-    * a marker, claim each partition dir ascending, re-validate the root.
-    */
-  private def acquireParts(
-      root: String, conf: Configuration, parts: SortedSet[Int], ttlMs: Long): Held = {
-    val plane = planeDir(root)
-    val fs = plane.getFileSystem(conf)
-    fs.mkdirs(plane)
-    assertNotDraining(fs, plane, root)
-    // step 1: a live real root lease blocks; a STALE one is superseded by
-    // a higher-epoch MARKER (fences the paused root owner, blocks nobody)
-    supersedeStaleRoot(fs, plane, root, ttlMs, "partition")
-    // step 2: claim each partition dir ascending (the partition name is
-    // the mutex — overlapping claimants get exactly one winner per part)
-    val taken = Vector.newBuilder[LeaseFile]
-    var ok = false
-    try {
-      parts.foreach { p =>
-        val d = partDir(plane, p)
-        fs.mkdirs(d)
-        taken += claimDir(fs, d, ttlMs,
-          what = s"ring partition $p of $root")
-      }
-      // step 3: validate-after-claim against a racing root claimant (it
-      // validates the scoped dirs after creating its root file, so at
-      // least one of us observes the other)
-      liveRealRootLease(fs, plane, ttlMs).foreach { case (e, info) =>
-        throw new PlaneLeaseHeldException(
-          s"the root plane for $root was claimed concurrently " +
-            s"(epoch $e by ${ownerName(info)}) — releasing this partition claim")
-      }
-      ok = true
-    } finally {
-      if (!ok) taken.result().foreach(lf =>
-        deleteLease(fs, lf))
-    }
-    val files = taken.result()
-    files.foreach(lf => foldBelow(fs, lf.dir, lf.epoch)) // post-validation only
-    Held(root, files, Some(parts), consumer = false, ttlMs, fs)
-  }
-
   /** Claim the next epoch in one lease directory. Loud on a live foreign
     * lease (or an in-flight claimant's empty file); a stale one — judged
-    * by the TTL its owner recorded — is superseded at epoch+1. Superseded
-    * epochs are NOT folded here: the caller folds after its WHOLE
-    * acquisition validates, so a failed acquisition (which rolls back only
-    * its own files) leaves every pre-existing epoch — fence markers
-    * included — in place to keep paused former owners fenced.
+    * by the TTL its owner recorded — is superseded at epoch+1. A MARKER
+    * never blocks, but its epoch still seeds the chain, so the owner it
+    * fenced stays fenced.
     */
   private def claimDir(
       fs: FileSystem, dir: Path, ttlMs: Long, what: String): LeaseFile = {
     val claim = newestLease(fs, dir) match {
       case Some((e, st, info)) =>
-        // a MARKER (a scoped claimant's fence over a stale root owner)
-        // claims no authority and never blocks: the real exclusion for a
-        // root claimant is the scoped-dir validation that follows its
-        // claim — but the marker's EPOCH still seeds the chain, so the
-        // fenced old owner stays fenced
         if (info.owner != ownerId && !info.marker && isLive(st, info, ttlMs)) {
           val age = System.currentTimeMillis() - st.getModificationTime
           throw new PlaneLeaseHeldException(
@@ -707,8 +529,7 @@ object PlaneLease {
   }
 
   /** Liveness of a lease file: age under the TTL the OWNER recorded (the
-    * claimant's own TTL only for pre-format files) — a short-TTL claimant
-    * can never judge a healthy long-TTL owner stale. An in-flight
+    * claimant's own TTL only for pre-format files). An in-flight
     * claimant's empty content reads as live-but-unknown (still loud).
     */
   private def isLive(st: FileStatus, info: LeaseInfo, claimantTtlMs: Long): Boolean =
@@ -720,38 +541,37 @@ object PlaneLease {
 
   private def leaseContent(ttlMs: Long): String = ownerId + s"\nttl=$ttlMs"
 
-  /** A fence MARKER's content: supersedes a stale root owner's epoch
-    * without claiming root authority. Tagged with the superseder's role
-    * (`by=partition` / `by=consumer-plane`) so a takeover is attributable
-    * from the file alone; `mode=parts` kept for pre-r11 files.
+  /** A fence MARKER's content, tagged with the superseder's role so a
+    * takeover is attributable from the file alone.
     */
   private def markerContent(ttlMs: Long, by: String): String =
     ownerId + s"\nttl=$ttlMs\nmode=marker\nby=$by"
 
   /** Delete a lease file and its `beat-` twin, best-effort. The twin
-    * delete is UNCONDITIONAL (one cheap extra RPC on lease-release paths,
-    * which are rare — exit, drain, fold): twin presence cannot be
-    * inferred from the setTimes-capability latch, because a transient
-    * IOException beats the twin WITHOUT latching the scheme.
+    * delete is UNCONDITIONAL: twin presence cannot be inferred from the
+    * setTimes-capability latch, because a transient IOException beats the
+    * twin WITHOUT latching the scheme.
     */
   private def deleteLease(fs: FileSystem, lf: LeaseFile): Unit = {
     try { fs.delete(lf.path, false); () } catch { case _: Exception => () }
     try { fs.delete(beatPath(lf), false); () } catch { case _: Exception => () }
   }
 
+  /** Delete every lease file a claim holds, best-effort (a failed delete
+    * just means the lease expires at its TTL).
+    */
+  private def release(h: Held): Unit = h.files.foreach(deleteLease(h.fs, _))
+
   /** Delete superseded epochs below `claim` (and their beat twins) in
-    * one dir (best-effort: a failure just leaves tiny stale files below
-    * the winning epoch).
+    * one dir, best-effort.
     */
   private def foldBelow(fs: FileSystem, dir: Path, claim: Long): Unit =
     listLeases(fs, dir).filter(_._1 < claim)
       .foreach { case (e, _) => deleteLease(fs, LeaseFile(dir, e)) }
 
   /** Conditional-create capability probe: connectors that support atomic
-    * put-if-absent (S3 If-None-Match / GCS generation-match) advertise
-    * the public Hadoop option key as a path capability; the builder path
-    * below then makes first-acquisition races single-winner on object
-    * stores too. (Hadoop's `Options.CreateFileOptionKeys`.)
+    * put-if-absent advertise the public Hadoop option key as a path
+    * capability (Hadoop's `Options.CreateFileOptionKeys`).
     */
   private[graft] val CondCreateCapability: String =
     org.apache.hadoop.fs.Options.CreateFileOptionKeys.FS_OPTION_CREATE_CONDITIONAL_OVERWRITE
@@ -768,39 +588,41 @@ object PlaneLease {
   private[graft] def createExclusive(fs: FileSystem, p: Path, content: String): Boolean =
     try {
       val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      fs match {
-        case _ if fs.hasPathCapability(p, CondCreateCapability) =>
-          // conditional-write connector: overwrite(false) + the option key
-          // make the PUT atomic put-if-absent; the race loser throws at
-          // close() (the connector's conditional-PUT failure)
-          val out = fs.createFile(p).overwrite(false)
-            .opt(CondCreateCapability, true).build()
-          try out.write(bytes) finally out.close()
-          true
-        case _: org.apache.hadoop.fs.LocalFileSystem |
-             _: org.apache.hadoop.fs.RawLocalFileSystem =>
-          val local = java.nio.file.Paths.get(p.toUri.getPath)
-          java.nio.file.Files.createFile(local) // O_CREAT|O_EXCL
-          java.nio.file.Files.write(local, bytes)
-          true
-        case _ =>
-          val scheme = Option(p.toUri.getScheme).getOrElse(fs.getScheme)
-          if (scheme != "hdfs" && warnedSchemes.add(scheme))
-            System.err.println(
-              s"graft: filesystem scheme '$scheme' advertises no conditional " +
-                "creates; plane-lease acquisition falls back to " +
-                "create(overwrite=false) — atomic on HDFS, check-then-create " +
-                "on classic object stores (narrow first-acquisition race only; " +
-                "steady-state rejection and fencing are unaffected)")
-          val out = fs.create(p, false) // atomic create-exclusive on HDFS
-          try out.write(bytes) finally out.close()
-          true
+      if (fs.hasPathCapability(p, CondCreateCapability)) {
+        val out = fs.createFile(p).overwrite(false)
+          .opt(CondCreateCapability, true).build()
+        try out.write(bytes) finally out.close()
+      } else if (localFs(fs)) {
+        val local = java.nio.file.Paths.get(p.toUri.getPath)
+        java.nio.file.Files.createFile(local) // O_CREAT|O_EXCL
+        java.nio.file.Files.write(local, bytes)
+      } else {
+        val scheme = Option(p.toUri.getScheme).getOrElse(fs.getScheme)
+        if (scheme != "hdfs" && warnedSchemes.add(scheme))
+          log.warn(
+            s"filesystem scheme '$scheme' advertises no conditional creates; " +
+              "plane-lease acquisition falls back to create(overwrite=false) — " +
+              "atomic on HDFS, check-then-create on classic object stores (narrow " +
+              "first-acquisition race only; steady-state rejection and fencing " +
+              "are unaffected)")
+        val out = fs.create(p, false) // atomic create-exclusive on HDFS
+        try out.write(bytes) finally out.close()
       }
+      true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
       case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
       case e: java.io.IOException => if (fs.exists(p)) false else throw e
     }
+
+  /** Overwrite `p` with this process's identity: a beat twin or a drain
+    * file, whose mtime is what readers judge.
+    */
+  private def putOwnerId(fs: FileSystem, p: Path): Unit = {
+    val out = fs.create(p, true)
+    try out.write(ownerId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
 
   private def readLease(fs: FileSystem, p: Path): LeaseInfo =
     try {
@@ -817,12 +639,10 @@ object PlaneLease {
 
   /** Visible lease files ascending by epoch: (epoch, status). A lease's
     * liveness mtime is the freshest of the file itself and its `beat-`
-    * twin (see [[refreshLease]] — on stores without `setTimes` the beat
-    * twin carries liveness so the AUTHORITY file is never re-PUT). The
-    * twin rides the SAME listing: no extra round-trip. An orphaned beat
-    * (its lease vanished) pairs with nothing and confers nothing; it is
-    * also always OLDER than any later lease at a reused epoch, so the
-    * max() can never extend a fresh lease with stale history.
+    * twin (see [[refreshLease]]), read from the SAME listing. An orphaned
+    * beat (its lease vanished) pairs with nothing and confers nothing;
+    * it is also always OLDER than any later lease at a reused epoch, so
+    * the max() can never extend a fresh lease with stale history.
     */
   private def listLeases(fs: FileSystem, dir: Path): Seq[(Long, FileStatus)] = {
     val sts = (try fs.listStatus(dir).toSeq
@@ -848,131 +668,53 @@ object PlaneLease {
   private def newestLease(fs: FileSystem, dir: Path): Option[(Long, FileStatus, LeaseInfo)] =
     listLeases(fs, dir).lastOption.map { case (e, st) => (e, st, readLease(fs, st.getPath)) }
 
-  /** All SCOPED claim dirs under the plane: per-partition producer dirs,
-    * the consumer-plane dir, and range-scoped consumer claim dirs inside
-    * it (`consumer/part-p*`).
-    */
-  private def scopedDirs(fs: FileSystem, plane: Path): Seq[Path] = {
-    val top = (try fs.listStatus(plane).toSeq
-     catch { case _: java.io.FileNotFoundException => Seq.empty })
-      .filter(st => st.isDirectory &&
-        (st.getPath.getName.startsWith("part-p") || st.getPath.getName == "consumer"))
-      .map(_.getPath)
-    top ++ top.filter(_.getName == "consumer").flatMap(partSubDirs(fs, _))
-  }
-
-  private def scopedName(d: Path): String =
-    if (d.getName == "consumer") "the consumer plane"
-    else if (Option(d.getParent).exists(_.getName == "consumer"))
-      s"consumer range partition ${d.getName.stripPrefix("part-p")}"
-    else s"ring partition ${d.getName.stripPrefix("part-p")}"
-
   // ------------------------------------------------------ write authority
 
   /** Cheap authority check at a mutating operation's ENTRY (no FS I/O):
-    * fenced roots throw; a root-lease holder has every authority; a
-    * partition-scoped holder has [[ProduceAuthority]] within its claim
-    * only; a consumer-plane holder has [[ConsumerAuthority]] only.
+    * fenced roots throw; otherwise the held claim must grant `a`.
     */
   def assertAuthority(rootKey: String, a: Authority): Unit = {
     assertNotFenced(rootKey)
     val h = held.get(rootKey)
-    if (h == null) return // acquisition happens first on every mutating path
-    if (h.consumer) h.parts match {
-      case None => a match {
-        case ConsumerAuthority | ConsumerCommitAuthority(_) => ()
-        case _ =>
-          throw new PlaneLeaseHeldException(
-            s"this process holds the CONSUMER-PLANE lease for ${h.root} — it may " +
-              "register consumers and commit group offsets only; produce, " +
-              "maintenance, rescale and the stream ledger need a root-lease " +
-              "(or, for produce, partition-scoped) owner process")
-      }
-      case Some(owned) => a match {
-        case ConsumerAuthority => () // registry writes: convergent across members
-        case ConsumerCommitAuthority(ps) =>
-          val missing = ps.filterNot(owned.contains)
-          if (missing.nonEmpty)
-            throw new PlaneLeaseHeldException(
-              s"group-offset commit touches ring partitions " +
-                s"${missing.toSeq.sorted.mkString(",")} outside this process's " +
-                s"consumer-partition lease (${specOf(owned)}) for ${h.root} — " +
-                "route the consumer to the member owning those ranges, or " +
-                "widen the claim")
-        case _ =>
-          throw new PlaneLeaseHeldException(
-            s"this process holds a RANGE-SCOPED consumer lease (${specOf(owned)}) " +
-              s"for ${h.root} — it may register consumers and commit group " +
-              "offsets within its claim only; produce, maintenance, rescale " +
-              "and the stream ledger live in other processes")
-      }
-    }
-    else h.parts match {
-      case None => ()
-      case Some(owned) =>
-        a match {
-          case ProduceAuthority(ps) =>
-            val missing = ps.filterNot(owned.contains)
-            if (missing.nonEmpty)
-              throw new PlaneLeaseHeldException(
-                s"batch touches ring partitions ${missing.toSeq.sorted.mkString(",")} " +
-                  s"outside this process's partition lease (${specOf(owned)}) for " +
-                  s"${h.root} — route records to the owning writer " +
-                  "(BrokerGroup/ShardRouter), or widen the claim")
-          case _ =>
-            throw new PlaneLeaseHeldException(
-              s"this process holds a PARTITION-scoped lease (${specOf(owned)}) for " +
-                s"${h.root} — root-authority operations (maintenance, rescale, " +
-                "the stream ledger) and the consumer plane (registry, group " +
-                "commits) live in other processes")
-        }
+    if (h != null) checkAuthority(h, a) // acquisition happens first on every mutating path
+  }
+
+  private def checkAuthority(h: Held, a: Authority): Unit = {
+    if (!grants(h.claim, a))
+      throw new PlaneLeaseHeldException(
+        s"this process holds ${h.claim.label} for ${h.root} — it may only " +
+          s"${h.claim.may}; root-authority operations (maintenance, rescale, the " +
+          "stream ledger) need a root-lease owner process, and the other planes " +
+          "live in other processes")
+    for (owned <- h.claim.parts; ps <- partsOf(a)) {
+      val missing = ps.filterNot(owned.contains)
+      if (missing.nonEmpty)
+        throw new PlaneLeaseHeldException(
+          s"this write touches ring partitions ${missing.toSeq.sorted.mkString(",")} " +
+            s"outside this process's ${h.claim.by} lease (${specOf(owned)}) for " +
+            s"${h.root} — route it to the process owning them (BrokerGroup/" +
+            "ShardRouter for produce), or widen the claim")
     }
   }
 
-  /** Per-write fence at a COMMIT point: re-list the lease directory (root
-    * dir for a root holder; each touched partition dir for a
-    * partition-scoped holder; the consumer dir for a consumer-plane
-    * holder) and reject the commit when a higher epoch is visible — a
-    * paused owner's next commit fails loudly instead of landing with
-    * stale authority, closing the heartbeat-granular dual-writer window
-    * at the point that matters. One tiny-dir listStatus per commit (per
-    * touched partition in partition mode).
+  /** Per-write fence at a COMMIT point: the authority check, then re-list
+    * each own node the write touches (every own node, or only the touched
+    * partitions' when the authority names partitions) and reject the
+    * commit when a higher epoch is visible — a paused owner's next commit
+    * fails loudly instead of landing with stale authority.
     */
   def assertCurrentAtCommit(rootKey: String, a: Authority): Unit = {
     assertNotFenced(rootKey)
     val h = held.get(rootKey)
     if (h == null) return // read-side/test paths that never acquired
-    if (h.consumer) {
-      assertAuthority(rootKey, a)
-      h.parts match {
-        case None => checkDirCurrent(rootKey, h, h.files.head)
-        case Some(owned) =>
-          val ps = a match {
-            case ConsumerCommitAuthority(x) => x
-            case _ => owned.toSet // registry write: re-check the whole claim
-          }
-          checkClaimDirs(rootKey, h, ps)
-      }
-    }
-    else h.parts match {
-      case None =>
-        // root holder: files.head is the root-dir claim (scoped-dir
-        // supersede files follow it and need no per-write re-check —
-        // scoped claimants validate against OUR live root lease)
-        checkDirCurrent(rootKey, h, h.files.head)
-      case Some(owned) =>
-        assertAuthority(rootKey, a) // subset / authority contract
-        val ps = a match {
-          case ProduceAuthority(x) => x
-          case _ => owned.toSet // unreachable: assertAuthority threw
-        }
-        checkClaimDirs(rootKey, h, ps)
-    }
+    checkAuthority(h, a)
+    val scope = partsOf(a)
+    checkClaimDirs(rootKey, h,
+      h.own.filter(lf => dirPart(lf.dir).forall(p => scope.forall(_.contains(p)))))
   }
 
-  /** Fence-check every claim dir whose partition is in `ps`. */
-  private def checkClaimDirs(rootKey: String, h: Held, ps: Set[Int]): Unit = {
-    val toCheck = h.files.filter(lf => dirPart(lf.dir).exists(ps.contains))
+  /** Fence-check each of `toCheck`, the holder's own lease files. */
+  private def checkClaimDirs(rootKey: String, h: Held, toCheck: Vector[LeaseFile]): Unit = {
     if (toCheck.sizeIs <= 1 || localFs(h.fs))
       // per-dir listings: on the LOCAL filesystem they are the fast
       // path (a recursive listFiles materializes LocatedFileStatus,
@@ -980,28 +722,28 @@ object PlaneLease {
       // on the wire bench), and latency-per-round-trip is nil anyway
       toCheck.foreach(lf => checkDirCurrent(rootKey, h, lf))
     else {
-      // multi-partition commit on a remote store: ONE recursive
-      // listing of the plane dir covers every touched partition dir —
-      // a single prefix LIST on S3-shaped connectors instead of one
-      // LIST round-trip per partition (a 12-partition flush would
-      // otherwise pay 12 sequential LISTs). Producer claim dirs and
-      // consumer claim dirs share the part-p name shape but have
-      // different PARENTS — key the recursive map on parent/name.
+      // multi-partition commit on a remote store: ONE recursive listing
+      // of the plane dir covers every touched partition dir — a single
+      // prefix LIST on S3-shaped connectors instead of one per partition
       commitFenceLists.incrementAndGet()
       val (newestByDir, drainSeen) = listLeasesRecursive(h.fs, planeDir(h.root))
-      // same master cross-check as the single-dir fence: a drain file in
-      // the recursive listing aborts only while the master copy is live
+      // same master cross-check as the single-dir fence
       if (drainSeen && masterDrainActive(h)) throwDraining(rootKey, h)
-      toCheck.foreach { lf =>
-        val newest = newestByDir.get(dirKeyOf(lf.dir))
-        if (newest.exists(_ > lf.epoch)) fenceAtCommit(rootKey, h, lf)
-        else if (!newest.contains(lf.epoch)) {
-          if (drainingRoots.contains(rootKey)) throwDraining(rootKey, h)
-          else fenceAtCommit(rootKey, h, lf)
-        }
-      }
+      toCheck.foreach(lf => checkNewest(rootKey, h, lf, newestByDir.get(dirKeyOf(lf.dir))))
     }
   }
+
+  /** Judge one own lease file against the newest epoch visible in its
+    * node: a higher one fences; a missing own file with no higher epoch
+    * means this JVM's drain release raced an in-flight commit (retryable)
+    * or the claim was erased externally (fence — same rule as the beat).
+    */
+  private def checkNewest(rootKey: String, h: Held, lf: LeaseFile, newest: Option[Long]): Unit =
+    if (newest.exists(_ > lf.epoch)) fenceAtCommit(rootKey, h, lf)
+    else if (!newest.contains(lf.epoch)) {
+      if (drainingRoots.contains(rootKey)) throwDraining(rootKey, h)
+      else fenceAtCommit(rootKey, h, lf)
+    }
 
   /** Disambiguating key for a claim dir inside the plane: its name plus
     * its parent's when the parent is the consumer dir (producer
@@ -1018,9 +760,10 @@ object PlaneLease {
     case _ => false
   }
 
-  /** Newest visible lease epoch per lease DIRECTORY NAME under the whole
-    * plane dir, from one recursive listing (object stores answer it with
-    * a single prefix LIST).
+  /** Newest visible lease epoch per claim node under the whole plane dir
+    * (keyed by [[dirKeyOf]]), and whether an active drain file is in it,
+    * from one recursive listing (object stores answer it with a single
+    * prefix LIST).
     */
   private def listLeasesRecursive(
       fs: FileSystem, plane: Path): (Map[String, Long], Boolean) = {
@@ -1053,32 +796,19 @@ object PlaneLease {
       catch { case _: java.io.FileNotFoundException => Seq.empty })
       .filter(_.isFile)
     // a SCOPED claimant observes a coordinator's drain request here, in
-    // the listing it already pays for: abort this commit RETRYABLY and
-    // release the claims at the next ensure() (root holders ignore drain
-    // files — a drain targets scoped claims so a root claimant can run).
-    // The per-dir copy is honored only while the MASTER drain file is
-    // still active (one extra getFileStatus, paid only when a copy is
-    // visible): the master is the drain's source of truth everywhere
-    // else (acquisition gate, heartbeat release, handleDraining), so an
-    // orphaned per-dir copy — a clearDrain whose per-dir delete failed —
-    // must not trap this claimant in an abort/release/re-acquire loop
-    // for up to DrainMaxAgeMs while the coordinator believes the drain
-    // is over
-    if ((h.parts.isDefined || h.consumer) &&
+    // the listing it already pays for, and aborts this commit RETRYABLY
+    // (root holders ignore drain files — a drain targets scoped claims so
+    // a root claimant can run). The per-dir copy is honored only while
+    // the MASTER drain file is active: an orphaned copy left by a
+    // clearDrain whose per-dir delete failed must not trap this claimant
+    // in an abort/release/re-acquire loop
+    if (h.claim != Claim.Root &&
         sts.exists(st => st.getPath.getName == DrainFileName && drainActive(st)) &&
         masterDrainActive(h))
       throwDraining(rootKey, h)
     val epochs = sts.map(_.getPath.getName).filter(_.startsWith("lease-"))
       .flatMap(n => n.stripPrefix("lease-").toLongOption)
-    if (epochs.nonEmpty && epochs.max > lf.epoch)
-      fenceAtCommit(rootKey, h, lf)
-    else if (!epochs.contains(lf.epoch)) {
-      // our own lease file is gone with no higher epoch visible: either
-      // this JVM's drain release raced an in-flight commit (retryable) or
-      // the claim was erased externally (fence — same rule as the beat)
-      if (drainingRoots.contains(rootKey)) throwDraining(rootKey, h)
-      else fenceAtCommit(rootKey, h, lf)
-    }
+    checkNewest(rootKey, h, lf, epochs.maxOption)
   }
 
   /** The MASTER drain file under the plane dir exists and is young enough
@@ -1114,11 +844,12 @@ object PlaneLease {
           "write with stale authority; restart the store to contend for a " +
           "fresh lease")
 
-  /** Highest epoch this JVM holds for a root (forensic stamp for the meta
-    * swaps' filenames; 0 before acquisition).
+  /** The highest epoch this JVM holds for a root, if any: the `/metrics`
+    * gauge's source (an INCREASE across scrapes means a takeover happened
+    * somewhere) and the forensic stamp in the meta swaps' file names.
     */
-  def commitEpoch(rootKey: String): Long =
-    Option(held.get(rootKey)).map(_.files.map(_.epoch).max).getOrElse(0L)
+  private[graft] def heldEpoch(rootKey: String): Option[Long] =
+    Option(held.get(rootKey)).map(_.files.map(_.epoch).max)
 
   // ---------------------------------------------------------- heartbeats
 
@@ -1127,18 +858,9 @@ object PlaneLease {
       // clean exits RELEASE (the reference's goodbye gossip): a restarted
       // driver contends immediately instead of waiting out the TTL; a
       // crash skips the hook and leaves the lease to expire — exactly the
-      // takeover path. Best-effort: a failed delete just means TTL expiry.
-      // Uses each claim's ACQUISITION FileSystem — a fresh default
-      // Configuration cannot resolve conf-dependent schemes.
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        val it = held.values().iterator()
-        while (it.hasNext) {
-          val h = it.next()
-          h.files.foreach { lf =>
-            deleteLease(h.fs, lf)
-          }
-        }
-      }, "graft-plane-lease-release"))
+      // takeover path
+      Runtime.getRuntime.addShutdownHook(new Thread(
+        () => held.values().forEach(release(_)), "graft-plane-lease-release"))
       beater = Executors.newSingleThreadScheduledExecutor(r => {
         val t = new Thread(r, "graft-plane-lease")
         t.setDaemon(true)
@@ -1156,14 +878,11 @@ object PlaneLease {
   }
 
   /** One heartbeat pass over every held claim: refresh each lease file's
-    * mtime, detect takeover (higher epoch visible → FENCE this root), and
-    * drop claims whose root no longer exists (a torn-down test/dev
-    * store). All FS access goes through the FileSystem resolved at
-    * ACQUISITION (`Held.fs`) — resolving with a fresh default
-    * Configuration broke every conf-dependent root (S3A credentials,
-    * custom impls): the beat failed silently, the lease expired
-    * unrefreshed, a successor took over, and the live owner never fenced.
-    * Failures now count on [[heartbeatFailures]] and retry next tick.
+    * liveness, FENCE the root when a higher epoch is visible or an own
+    * file vanished (re-creating it at the old epoch is how a paused owner
+    * would regain authority it already lost), release an idle scoped
+    * claim on a drain request, and drop claims whose root no longer
+    * exists. All FS access goes through the acquisition FileSystem.
     * Package-visible so the fencing tests can drive it deterministically.
     */
   private[graft] def heartbeatTick(): Unit = {
@@ -1174,58 +893,36 @@ object PlaneLease {
       try {
         if (!h.fs.exists(new Path(h.root))) {
           it.remove() // the store is gone; nothing left to guard
-        } else if ((h.parts.isDefined || h.consumer) &&
-            activeDrainAt(h.fs, new Path(planeDir(h.root), DrainFileName))) {
-          // a coordinator requested a drain and this claimant is idle (no
-          // commit has observed it): release here so the drain completes
-          // without waiting out the TTL. Mark draining FIRST — a racing
-          // in-flight commit then aborts retryably on its vanished lease
-          // file instead of passing a vacuous fence.
+        } else if (h.claim != Claim.Root && masterDrainActive(h)) {
+          // an idle claimant (no commit has observed the drain): release
+          // here so the drain completes without waiting out the TTL. Mark
+          // draining FIRST — a racing in-flight commit then aborts
+          // retryably on its vanished lease file instead of passing a
+          // vacuous fence
           drainingRoots.add(e.getKey)
-          h.files.foreach { lf =>
-            deleteLease(h.fs, lf)
-          }
+          release(h)
           it.remove()
         } else {
-          var fenced = false
-          h.files.foreach { lf =>
-            if (!fenced) {
-              if (listLeases(h.fs, lf.dir).lastOption.exists(_._1 > lf.epoch)) {
-                // superseded: fence, and do NOT touch the successor's file
-                fencedRoots.add(e.getKey)
-                it.remove()
-                fenced = true
-              } else if (!h.fs.exists(lf.path)) {
-                // our own lease file vanished with no higher epoch visible:
-                // a takeover whose trace was folded/rolled back, or an
-                // external sweep — either way this process cannot prove it
-                // still holds the claim, so FENCE (re-creating at the old
-                // epoch here is how a paused owner regains authority it
-                // already lost)
-                fencedRoots.add(e.getKey)
-                it.remove()
-                fenced = true
-              } else {
-                refreshLease(h, lf)
-              }
-            }
+          val lost = h.files.exists { lf =>
+            // a higher epoch, or the own file vanished
+            val gone = !listLeases(h.fs, lf.dir).lastOption.exists(_._1 == lf.epoch)
+            if (!gone) refreshLease(h, lf)
+            gone
           }
+          if (lost) { fencedRoots.add(e.getKey); it.remove() }
         }
       } catch {
         case _: InterruptedException => throw new InterruptedException
         case ex: Exception =>
-          if (sys.env.contains("GRAFT_DEBUG_HB")) ex.printStackTrace()
           heartbeatFailures.incrementAndGet() // visible on /metrics; next tick
-          ()
+          log.warn(s"plane-lease heartbeat for ${h.root} failed; retrying next tick", ex)
       }
     }
   }
 
   // schemes whose setTimes threw UnsupportedOperationException: later
-  // beats go straight to the rewrite (S3A and most object-store
-  // connectors do not support setTimes — without the fallback a healthy
-  // owner's lease would silently expire at TTL, inviting a takeover the
-  // commit fence then has to repel)
+  // beats go straight to the beat twin (S3A and most object-store
+  // connectors do not support setTimes)
   private val setTimesUnsupported = ConcurrentHashMap.newKeySet[String]()
 
   /** Heartbeat refreshes that fell back from `setTimes` to PUTting the
@@ -1243,23 +940,14 @@ object PlaneLease {
   /** Refresh one held lease file's liveness: `setTimes` where supported
     * (one tiny metadata op that FAILS on a vanished file — inherently
     * resurrection-safe), otherwise PUT the `beat-` twin. The AUTHORITY
-    * file is NEVER re-PUT: a rewrite is check-then-PUT, and in the window
-    * between the existence check and the PUT an external sweep's delete
-    * would be silently undone — the resurrection-at-the-old-epoch the
-    * vanished-lease fence rule forbids. A resurrected BEAT twin is inert:
-    * liveness readers pair it with a PRESENT lease file of the same
-    * epoch, and the owner's next tick fences on the vanished lease. A
-    * transient failure of either path propagates to the tick's counter
-    * and retries next beat.
+    * file is NEVER re-PUT: a rewrite is check-then-PUT, and an external
+    * sweep's delete inside that window would be silently undone. A
+    * resurrected BEAT twin is inert: liveness readers pair it with a
+    * PRESENT lease file of the same epoch. A transient failure of either
+    * path propagates to the tick's counter and retries next beat.
     */
   private def refreshLease(h: Held, lf: LeaseFile): Unit = {
-    def beat(): Unit = {
-      val out = h.fs.create(beatPath(lf), true)
-      try out.write(ownerId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      leaseRefreshBeats.incrementAndGet()
-      ()
-    }
+    def beat(): Unit = { putOwnerId(h.fs, beatPath(lf)); leaseRefreshBeats.incrementAndGet(); () }
     // NB: FileSystem.getScheme is unimplemented on some bases
     // (RawLocalFileSystem) — the URI scheme is always present
     val scheme = Option(h.fs.getUri.getScheme).getOrElse("")
@@ -1274,26 +962,13 @@ object PlaneLease {
     }
   }
 
-  /** The epoch this JVM holds for a root, if any — the `/metrics`
-    * gauge's source (an epoch INCREASE across scrapes means a takeover
-    * happened somewhere: alert-worthy). Partition-scoped claims report
-    * their highest partition epoch.
-    */
-  private[graft] def heldEpoch(rootKey: String): Option[Long] =
-    Option(held.get(rootKey)).map(_.files.map(_.epoch).max)
-
   /** Test aid: forget (and delete) this JVM's claim for a root so a new
     * acquisition contends from scratch; clears any fenced mark.
     */
   private[graft] def dropForTests(rootKey: String): Unit = {
-    val h = held.remove(rootKey)
     fencedRoots.remove(rootKey)
     drainingRoots.remove(rootKey)
-    if (h != null) {
-      h.files.foreach { lf =>
-        deleteLease(h.fs, lf)
-      }
-    }
+    releaseOwned(rootKey)
   }
 
   // ------------------------------------------------- coordinated draining
@@ -1303,7 +978,8 @@ object PlaneLease {
       throw new PlaneDrainingException(
         s"the write plane for $root is draining for a coordinated " +
           "rescale/maintenance window — scoped claims cannot be acquired " +
-          "until the coordinator clears the drain; retry later")
+          "until the coordinator clears the drain; retry later (the store " +
+          "re-acquires automatically on the next mutating call)")
 
   /** COORDINATOR side of the online rescale: ask every scoped claimant
     * (partition producers, consumer members) to flush-and-release — the
@@ -1319,19 +995,15 @@ object PlaneLease {
     val plane = planeDir(root)
     val fs = plane.getFileSystem(conf)
     fs.mkdirs(plane)
-    liveRealRootLease(fs, plane, DefaultTtlMs).foreach { case (e, info) =>
+    liveRealLease(fs, plane, DefaultTtlMs).foreach { case (e, info) =>
       throw new IllegalStateException(
         s"the root plane for $root is owned live by ${ownerName(info)} " +
           s"(epoch $e) — issue the rescale/maintenance on that process " +
           "instead of draining")
     }
-    def put(d: Path): Unit = {
-      val out = fs.create(new Path(d, DrainFileName), true)
-      try out.write(ownerId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    def put(d: Path): Unit = putOwnerId(fs, new Path(d, DrainFileName))
     put(plane)
-    scopedDirs(fs, plane).foreach(put)
+    subtree(fs, plane).foreach(put)
     // second pass: a claimant that passed assertNotDraining just before
     // the master write may have created its claim dir after the listing
     // above — re-list once now that the master gates new acquisitions, so
@@ -1341,7 +1013,7 @@ object PlaneLease {
     // (DefaultTtl/4 = 15 s, under rescaleWithDrain's 60 s default
     // timeout) — callers shortening the drain timeout below TTL/4 must
     // expect the drain-poll to report that claimant live until then.
-    scopedDirs(fs, plane)
+    subtree(fs, plane)
       .filter(d => !activeDrainAt(fs, new Path(d, DrainFileName)))
       .foreach(put)
   }
@@ -1351,9 +1023,7 @@ object PlaneLease {
     * exists, and handleDraining gates re-acquisition on the master, so
     * deleting in this order can never strand a claimant behind an
     * orphaned per-dir copy. Per-dir delete failures retry and then THROW
-    * (the master is left in place): a silently-swallowed failure here
-    * used to trap the claimant in a retryable-abort loop for up to
-    * [[DrainMaxAgeMs]].
+    * with the master left in place.
     */
   def clearDrain(root: String, conf: Configuration): Unit = {
     val plane = planeDir(root)
@@ -1371,7 +1041,7 @@ object PlaneLease {
           s"3 attempts — the master drain file is left in place so the " +
           "window stays coherent; clear manually or retry", last)
     }
-    scopedDirs(fs, plane).foreach(rm)
+    subtree(fs, plane).foreach(rm)
     rm(plane)
   }
 
@@ -1382,25 +1052,15 @@ object PlaneLease {
   def liveScopedClaims(root: String, conf: Configuration): Seq[String] = {
     val plane = planeDir(root)
     val fs = plane.getFileSystem(conf)
-    scopedDirs(fs, plane).flatMap { d =>
-      newestLease(fs, d) match {
-        case Some((_, st, info))
-            if !info.marker && info.owner != ownerId &&
-              isLive(st, info, DefaultTtlMs) =>
-          Some(s"${scopedName(d)} (${ownerName(info)})")
-        case _ => None
-      }
-    }
+    subtree(fs, plane).flatMap(d =>
+      liveRealLease(fs, d, DefaultTtlMs).map { case (_, info) =>
+        s"${nodeName(d)} (${ownerName(info)})"
+      })
   }
 
   /** Release this JVM's claim for a root cleanly (delete lease files,
     * forget the claim — no fence): the coordinator hands the plane back
     * after a maintenance window so scoped claimants can re-acquire.
     */
-  def releaseOwned(rootKey: String): Unit = {
-    val h = held.remove(rootKey)
-    if (h != null) h.files.foreach { lf =>
-      deleteLease(h.fs, lf)
-    }
-  }
+  def releaseOwned(rootKey: String): Unit = Option(held.remove(rootKey)).foreach(release)
 }

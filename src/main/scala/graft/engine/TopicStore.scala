@@ -302,19 +302,12 @@ class TopicStore(
     require(!(planeLeaseConsumer && planeLeasePartitions.isDefined),
       "spark.graft.planeLeaseRole=consumer and spark.graft.planeLeasePartitions " +
         "are mutually exclusive — one claim shape per process per root")
-    val acquired =
-      if (planeLeaseConsumer) consumerClaim match {
-        case Some(ps) => PlaneLease.ensureOwnedConsumerPartitions(lockRootKey, root,
-          spark.sparkContext.hadoopConfiguration, ps, planeLeaseTtlMs)
-        case None => PlaneLease.ensureOwnedConsumer(lockRootKey, root,
-          spark.sparkContext.hadoopConfiguration, planeLeaseTtlMs)
-      }
-      else planeLeasePartitions match {
-        case Some(ps) => PlaneLease.ensureOwnedPartitions(lockRootKey, root,
-          spark.sparkContext.hadoopConfiguration, ps, planeLeaseTtlMs)
-        case None => PlaneLease.ensureOwned(lockRootKey, root,
-          spark.sparkContext.hadoopConfiguration, planeLeaseTtlMs)
-      }
+    import PlaneLease.Claim
+    val claim =
+      if (planeLeaseConsumer) consumerClaim.fold[Claim](Claim.Consumer)(Claim.ConsumerParts)
+      else planeLeasePartitions.fold[Claim](Claim.Root)(Claim.Parts)
+    val acquired = PlaneLease.ensure(lockRootKey, root,
+      spark.sparkContext.hadoopConfiguration, claim, planeLeaseTtlMs)
     if (acquired) {
       // EVERY fresh acquisition drops this root's shared caches: the
       // process may have been preceded by other writers whose state a

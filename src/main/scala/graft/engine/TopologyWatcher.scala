@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.apache.logging.log4j.LogManager
+
 import graft.core.TokenRing
 
 /** Topology discovery (C5): poll a pluggable desired-replicas supplier
@@ -60,8 +62,7 @@ class TopologyWatcher(
               // operator-visible, like the reference's warn-and-continue:
               // a persistent refusal (e.g. requireDrained with lagging
               // groups) retries every tick and must not fail silently
-              System.err.println(
-                s"[topology] rescale $topic -> $size failed: ${e.getMessage}")
+              TopologyWatcher.log.warn(s"rescale $topic -> $size failed: ${e.getMessage}")
           }
         }
       }
@@ -84,6 +85,8 @@ class TopologyWatcher(
 }
 
 object TopologyWatcher {
+  private val log = LogManager.getLogger(classOf[TopologyWatcher])
+
   // one shared daemon watchdog thread for every commandReplicas tick —
   // a Timer per invocation was a thread create/teardown per poll
   private lazy val watchdog = new java.util.Timer("graft-k8s-watchdog", true)

@@ -10,6 +10,7 @@ import scala.collection.immutable.SortedSet
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.logging.log4j.LogManager
 
 import graft.engine.TopicStore
 
@@ -134,6 +135,8 @@ class MemberDirectory(root: String, conf: Configuration, cacheMs: Long = 2000L) 
 }
 
 object MemberDirectory {
+  private val log = LogManager.getLogger(classOf[MemberDirectory])
+
   private lazy val refresher = Executors.newSingleThreadScheduledExecutor(r => {
     val t = new Thread(r, "graft-member-ad")
     t.setDaemon(true)
@@ -222,8 +225,8 @@ object MemberDirectory {
                 // peers drop the ad intermittently); it rewrites THIS
                 // tick to keep liveness and retries setTimes next tick
                 setTimesBroken.set(true)
-                System.err.println(
-                  s"graft: fs.setTimes unsupported for the member ad at $p — " +
+                log.warn(
+                  s"fs.setTimes unsupported for the member ad at $p — " +
                     "falling back to rewriting the ad file each tick " +
                     "(expected on object-store connectors)")
                 rewrite(); adRefreshRewrites.incrementAndGet()

@@ -190,6 +190,89 @@ class PlaneLeaseSpec extends AnyFunSuite {
     } finally procs.foreach { p => p.destroyForcibly(); () }
   }
 
+  test("compatibility table: every holder/claimant pair of the four claim shapes, live and stale") {
+    import scala.collection.immutable.SortedSet
+    // a shape: its claim nodes (relative to _plane) for a part set, and
+    // the public entry point that acquires it
+    final case class Shape(name: String, nodes: SortedSet[Int] => Seq[String],
+        acquire: (String, String, SortedSet[Int]) => Boolean)
+    val rootShape = Shape("root", _ => Seq(""), (k, r, _) => PlaneLease.ensureOwned(k, r, hconf))
+    val partsShape = Shape("parts", _.toSeq.map(p => f"part-p$p%05d"),
+      (k, r, ps) => PlaneLease.ensureOwnedPartitions(k, r, hconf, ps))
+    val consumerShape = Shape("consumer", _ => Seq("consumer"),
+      (k, r, _) => PlaneLease.ensureOwnedConsumer(k, r, hconf))
+    val consumerPartsShape = Shape("consumer-parts", _.toSeq.map(p => f"consumer/part-p$p%05d"),
+      (k, r, ps) => PlaneLease.ensureOwnedConsumerPartitions(k, r, hconf, ps))
+    // does a LIVE holder reject the claimant, with the claimant's part set
+    // overlapping the holder's / disjoint from it?
+    val table = Seq(
+      // holder            claimant            overlap disjoint
+      (rootShape,          rootShape,          true,   true),
+      (rootShape,          partsShape,         true,   true),
+      (rootShape,          consumerShape,      true,   true),
+      (rootShape,          consumerPartsShape, true,   true),
+      (partsShape,         rootShape,          true,   true),
+      (partsShape,         partsShape,         true,   false),
+      (partsShape,         consumerShape,      false,  false),
+      (partsShape,         consumerPartsShape, false,  false),
+      (consumerShape,      rootShape,          true,   true),
+      (consumerShape,      partsShape,         false,  false),
+      (consumerShape,      consumerShape,      true,   true),
+      (consumerShape,      consumerPartsShape, true,   true),
+      (consumerPartsShape, rootShape,          true,   true),
+      (consumerPartsShape, partsShape,         false,  false),
+      (consumerPartsShape, consumerShape,      true,   true),
+      (consumerPartsShape, consumerPartsShape, true,   false))
+    val holderParts = SortedSet(2, 3)
+    // the tree rule the table spells out: two nodes conflict when equal or
+    // when one is an ancestor of the other
+    def related(a: String, b: String): Boolean =
+      a == b || a.isEmpty || b.isEmpty || a.startsWith(b + "/") || b.startsWith(a + "/")
+    def newestEpoch(d: java.io.File): Long =
+      d.listFiles().map(_.getName).filter(_.startsWith("lease-"))
+        .map(_.stripPrefix("lease-").toLong).max
+    for {
+      (holder, claimant, rejectsOverlap, rejectsDisjoint) <- table
+      (overlap, claimParts) <- Seq(true -> SortedSet(3, 4), false -> SortedSet(5, 6))
+      live <- Seq(true, false)
+    } {
+      val what = s"${if (live) "live" else "stale"} ${holder.name} holder vs " +
+        s"${claimant.name} claimant (${if (overlap) "overlapping" else "disjoint"} parts)"
+      val claimNodes = claimant.nodes(claimParts)
+      val conflicting = holder.nodes(holderParts).filter(h => claimNodes.exists(related(h, _)))
+      assert(conflicting.nonEmpty == (if (overlap) rejectsOverlap else rejectsDisjoint),
+        s"table row disagrees with the tree rule: $what")
+      val root = Files.createTempDirectory("graft-compat").toString
+      val rootKey = TopicStore.normalizeRoot(root, hconf)
+      // plant the holder's files where its acquisition lays them out
+      val holderDirs = holder.nodes(holderParts).map(n =>
+        n -> (if (n.isEmpty) leaseDir(root) else new java.io.File(leaseDir(root), n)))
+      holderDirs.foreach { case (_, d) =>
+        d.mkdirs()
+        val f = new java.io.File(d, f"lease-${4L}%020d")
+        Files.write(f.toPath, "holder@elsewhere\nttl=60000".getBytes("UTF-8"))
+        if (!live) f.setLastModified(System.currentTimeMillis() - 3600 * 1000L)
+      }
+      try {
+        if (live && conflicting.nonEmpty)
+          withClue(what) {
+            intercept[PlaneLeaseHeldException](claimant.acquire(rootKey, root, claimParts))
+          }
+        else {
+          assert(claimant.acquire(rootKey, root, claimParts), what)
+          // a stale conflicting holder node is fenced at a higher epoch;
+          // a compatible one is left alone
+          holderDirs.foreach { case (n, d) =>
+            val expected = if (conflicting.contains(n)) "higher than 4" else "4"
+            val got = newestEpoch(d)
+            assert(if (conflicting.contains(n)) got > 4L else got == 4L,
+              s"$what: holder node '$n' newest epoch $got, expected $expected")
+          }
+        }
+      } finally PlaneLease.dropForTests(rootKey)
+    }
+  }
+
   /** Fork a real probe JVM against `root`: (exit code, combined output). */
   private def probe(root: String): (Int, String) = {
     val javaBin = System.getProperty("java.home") + "/bin/java"

@@ -111,4 +111,17 @@ class SourceHygieneSpec extends AnyFunSuite {
       .map(m => lineOf(file, text, m.start)).toSeq
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
+
+  test("engine and serving report through a logger: no stderr prints, stack dumps or debug env switches") {
+    // a stderr line carries no level, logger name or timestamp and cannot
+    // be routed or silenced; a debug env var is a switch only its author
+    // knows about
+    val offenders = mainSources
+      .filter { case (file, _) => file.contains("graft/engine/") || file.contains("graft/serving/") }
+      .flatMap { case (file, text) =>
+        raw"""\bSystem\s*\.\s*err\b|\bprintStackTrace\b|\bsys\s*\.\s*env\s*\.\s*contains\s*\(\s*"GRAFT_DEBUG""".r
+          .findAllMatchIn(text).map(m => lineOf(file, text, m.start) + " " + m.matched)
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
 }
